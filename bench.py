@@ -269,6 +269,9 @@ def _cold_build_costs(spark, sf_dir: str) -> dict[str, float]:
     shutil.rmtree(tok_path, ignore_errors=True)
     if os.path.exists(tok_path):
         raise RuntimeError(f"cold-build wipe failed to remove {tok_path}")
+    # one untimed job first: a session's first job pays executor and
+    # codegen start-up, which belongs to no layout's build
+    spark.range(1).write.format("noop").mode("overwrite").save()
     t0 = time.time()
     tokcache._ensure_doc_tf(spark, sf_dir)
     out["toktf_build"] = round(time.time() - t0, 3)

@@ -400,7 +400,7 @@ def ensure_fixtures(sf_dir: str) -> None:
     # file must invalidate per-sf stamps written before it existed
     # (the file-exists check alone passes once any sf dir built it,
     # leaving other sf dirs' corpus_key partitions missing)
-    dig = _digest(src) + ":fxv10"
+    dig = _digest(src) + ":fxv11"
     stamps = {}
     if os.path.exists(STAMP_FILE):
         try:
@@ -408,34 +408,25 @@ def ensure_fixtures(sf_dir: str) -> None:
                 stamps = json.load(f)
         except (OSError, ValueError):
             stamps = {}
-    if (
-        stamps.get(stamp_key) == dig
-        and os.path.exists(DECODE_FIXTURE)
-        and os.path.exists(PHASH_FIXTURE)
-        and os.path.exists(WAV_FIXTURE)
-        and os.path.exists(PNG_FIXTURE)
-        and os.path.exists(GIF_FIXTURE)
-        and os.path.exists(VIDEO_FIXTURE)
-        and os.path.exists(AHASH_FIXTURE)
-        and os.path.exists(RESIZE_FIXTURE)
-        and os.path.exists(JPEG_FIXTURE)
-        and os.path.exists(FLAC_FIXTURE)
-        and os.path.exists(MIXED_FIXTURE)
-    ):
+    expected = (
+        (DECODE_FIXTURE, _expected_decode_features),
+        (PHASH_FIXTURE, _expected_phash_groups),
+        (WAV_FIXTURE, _expected_wav_frames),
+        (PNG_FIXTURE, _expected_png_features),
+        (GIF_FIXTURE, _expected_gif_features),
+        (VIDEO_FIXTURE, _expected_video_frames),
+        (AHASH_FIXTURE, _expected_ahash_values),
+        (RESIZE_FIXTURE, _expected_resize_audit),
+        (JPEG_FIXTURE, _expected_jpeg_features),
+        (FLAC_FIXTURE, _expected_flac_features),
+        (MIXED_FIXTURE, _expected_mixed_features),
+    )
+    if stamps.get(stamp_key) == dig and all(os.path.exists(p) for p, _ in expected):
         return
     docs = _load_docs(sf_dir)
     key = corpus_key(docs)
-    _merge_partition(DECODE_FIXTURE, key, _expected_decode_features(docs))
-    _merge_partition(PHASH_FIXTURE, key, _expected_phash_groups(docs))
-    _merge_partition(WAV_FIXTURE, key, _expected_wav_frames(docs))
-    _merge_partition(PNG_FIXTURE, key, _expected_png_features(docs))
-    _merge_partition(GIF_FIXTURE, key, _expected_gif_features(docs))
-    _merge_partition(VIDEO_FIXTURE, key, _expected_video_frames(docs))
-    _merge_partition(AHASH_FIXTURE, key, _expected_ahash_values(docs))
-    _merge_partition(RESIZE_FIXTURE, key, _expected_resize_audit(docs))
-    _merge_partition(JPEG_FIXTURE, key, _expected_jpeg_features(docs))
-    _merge_partition(FLAC_FIXTURE, key, _expected_flac_features(docs))
-    _merge_partition(MIXED_FIXTURE, key, _expected_mixed_features(docs))
+    for path, derive in expected:
+        _merge_partition(path, key, derive(docs))
     stamps[stamp_key] = dig
     with open(STAMP_FILE, "w") as f:
         json.dump(stamps, f, indent=1)

@@ -26,6 +26,7 @@ decode so one task doesn't get all the 4K videos.
 from __future__ import annotations
 
 import io
+import math
 import struct
 import wave
 from collections.abc import Iterator
@@ -1029,16 +1030,31 @@ _JPEG_ZIGZAG = np.array(
     ]
 )
 
-_JPEG_C = np.array(
+# The 8x8 DCT-II basis in fixed point, round(C * _JPEG_S). Both transforms
+# are int64 matmuls, which numpy never hands to BLAS, so the bytes do not
+# depend on the CPU kernel OpenBLAS picks (a float `@` rounds .5 ties
+# either way). |C| <= 1/2 keeps intermediates below 2^43 forward and 2^55
+# inverse (|coefficient * quant| < 2^19).
+_JPEG_S = 1 << 16
+_JPEG_CI = np.array(
     [
         [
-            (np.sqrt(1 / 8) if u == 0 else np.sqrt(2 / 8))
-            * np.cos((2 * x + 1) * u * np.pi / 16)
+            round(
+                math.sqrt((1 if u == 0 else 2) / 8)
+                * math.cos((2 * x + 1) * u * math.pi / 16)
+                * _JPEG_S
+            )
             for x in range(8)
         ]
         for u in range(8)
-    ]
+    ],
+    dtype=np.int64,
 )
+
+
+def _round_div(a: np.ndarray, d) -> np.ndarray:
+    """round(a / d), halves up, for int64 ``a`` and positive int ``d``."""
+    return (2 * a + d) // (2 * d)
 
 
 def _jpeg_build_codes(bits, vals):
@@ -1084,8 +1100,9 @@ class _JpegBitWriter:
 def encode_jpeg_gray(pixels: np.ndarray) -> bytes:
     """Encode an 8-bit grayscale (h, w) array — h, w multiples of 8 —
     as a BASELINE JPEG (SOI/DQT/SOF0/DHT/SOS/EOI, Annex K tables):
-    level shift, float64 DCT-II, quantize, zigzag, DC-differential +
-    run-length Huffman entropy coding with byte stuffing."""
+    level shift, fixed-point integer DCT-II, quantize, zigzag,
+    DC-differential + run-length Huffman entropy coding with byte
+    stuffing."""
     h, w = pixels.shape
     if h % 8 or w % 8:
         raise ValueError("encode_jpeg_gray needs multiple-of-8 dims")
@@ -1095,8 +1112,10 @@ def encode_jpeg_gray(pixels: np.ndarray) -> bytes:
     prev_dc = 0
     for by in range(0, h, 8):
         for bx in range(0, w, 8):
-            b = pixels[by : by + 8, bx : bx + 8].astype(np.float64) - 128.0
-            q = np.round(_JPEG_C @ b @ _JPEG_C.T / _JPEG_QTAB).astype(np.int32)
+            b = pixels[by : by + 8, bx : bx + 8].astype(np.int64) - 128
+            q = _round_div(
+                _JPEG_CI @ b @ _JPEG_CI.T, _JPEG_QTAB.astype(np.int64) * _JPEG_S**2
+            ).astype(np.int32)
             zz = q.flatten()[_JPEG_ZIGZAG]
             diff = int(zz[0]) - prev_dc
             prev_dc = int(zz[0])
@@ -1258,13 +1277,13 @@ def decode_jpeg_gray(payload: bytes) -> np.ndarray:
                         k += 1
                     q = np.zeros(64, dtype=np.int32)
                     q[_JPEG_ZIGZAG] = zz
-                    p = (
-                        _JPEG_C.T @ (q.reshape(8, 8).astype(np.float64) * qtab)
-                        @ _JPEG_C
-                        + 128.0
+                    p = _round_div(
+                        _JPEG_CI.T @ (q.reshape(8, 8).astype(np.int64) * qtab)
+                        @ _JPEG_CI,
+                        _JPEG_S**2,
                     )
                     out[by : by + 8, bx : bx + 8] = np.clip(
-                        np.round(p), 0, 255
+                        p + 128, 0, 255
                     ).astype(np.uint8)
             return out
         i += 2 + ln

@@ -1198,7 +1198,9 @@ def knn_join_within_cells(
     Python boundary (the per-cell kernel) and no centroid collect at
     plan build — the serving posture every IVF deployment uses (the
     index is built once per corpus version at ingest). Default None
-    keeps the self-contained two-pass shape."""
+    keeps the self-contained two-pass shape. When ``assigned`` is
+    given, ``n_cells`` is unused: the cells are whatever the caller
+    assigned, and nothing checks that their count equals ``n_cells``."""
     import numpy as np
     import pandas as pd
 

@@ -21,21 +21,14 @@ layout to DuckDB's COPY). Spark then proves the join/window
 distribution requirement from the table's bucket spec and plans NO
 Exchange — pinned by tests/test_plans_round7.py.
 
-Layout build caching follows the IVF-index pattern
-(queries/similarity.py:_ensure_ivf_index): content-stamped scratch
-directory per (absolute sf_dir, spec), rebuilt only when the source
-parquet's bytes change; the catalog entry is re-registered per session
-(external table over the stamped location).
+Layout location, staleness and publishing: `layouts.py`.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 from pyspark.sql import functions as F
 
+from .. import layouts
 from . import QuerySpec
 from .common import dsum_fp, load
 from .relational import Q3_SQL, Q5_SQL, Q10_SQL
@@ -60,109 +53,29 @@ _SPECS = {
 }
 
 
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _ddl(schema) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-
-
 def cache_location(sf_dir: str, table: str) -> tuple[str, str]:
     """(table_name, data_dir) for a corpus dir + bucketed table — the
     single source of truth for the bucketed-layout scratch scheme
     (bench.py's cold-build wipe uses this instead of hardcoding the
     path, so a layout change breaks loudly there; ADVICE r12)."""
-    label = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return f"bkt_{table}_{label}", os.path.join(
-        _repo_root(), ".scratch", "bucketed", label, table
+    return f"bkt_{table}_{layouts.label(sf_dir)}", layouts.location(
+        f"bucketed/{{label}}/{table}", sf_dir
     )
 
 
 def _ensure_bucketed(spark, sf_dir: str, table: str) -> str:
     """Write (once per corpus version) the bucketed layout for
     ``table`` and register it in this session's catalog; returns the
-    catalog table name. Staleness is keyed on the source parquet's
-    CONTENT (size + sha256) — same contract as the IVF/band-index
-    caches."""
+    catalog table name."""
     key, sort_cols = _SPECS[table]
-    tname, path = cache_location(sf_dir, table)
-    src = os.path.join(sf_dir, f"{table}.parquet")
-
-    # Fast-path staleness on (size, mtime) like a lake manifest; the
-    # content hash is computed ONLY when those moved (e.g. the file was
-    # re-written with identical bytes) — hashing multi-GB lineitem on
-    # every plan build was a real per-query driver cost at sf10
-    # (ADVICE r7). Contract unchanged: layout rebuilt iff bytes change.
-    st = os.stat(src)
-    spec = {"n_buckets": _N_BUCKETS, "key": key, "sort": sort_cols}
-    marker = os.path.join(path, "_SRC.json")
-    old = None
-    try:
-        with open(marker) as fh:
-            old = json.load(fh)
-    except (OSError, ValueError):
-        pass
-
-    def _content_hash() -> str:
-        h = hashlib.sha256()
-        with open(src, "rb") as fh:
-            for chunk in iter(lambda: fh.read(1 << 20), b""):
-                h.update(chunk)
-        return h.hexdigest()
-
-    fresh = False
-    digest = None
-    if old is not None and {k: old.get(k) for k in spec} == spec:
-        if old.get("size") == st.st_size and old.get("mtime_ns") == st.st_mtime_ns:
-            fresh = True
-        elif old.get("size") == st.st_size:
-            digest = _content_hash()
-            if old.get("sha256") == digest:
-                fresh = True  # same bytes, touched file: refresh marker
-                with open(marker, "w") as fh:
-                    json.dump({**old, "mtime_ns": st.st_mtime_ns}, fh)
-    if digest is None and not fresh:
-        digest = _content_hash()
-    stamp = {
-        "size": st.st_size,
-        "mtime_ns": st.st_mtime_ns,
-        "sha256": digest,
-        **spec,
-    }
-
-    if not fresh:
-        df = load(spark, sf_dir, table)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        # repartition by the bucket key into n_buckets tasks: Spark's
-        # repartition hash IS the bucket-id hash (Murmur3 pmod n), so
-        # each task writes exactly its one bucket file — one file per
-        # bucket, the layout a window can consume with a near-no-op
-        # per-partition sort
-        (
-            df.repartition(_N_BUCKETS, F.col(key))
-            .write.bucketBy(_N_BUCKETS, key)
-            .sortBy(*sort_cols)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tname)
-        )
-        with open(marker, "w") as fh:
-            json.dump(stamp, fh)
-        return tname
-
-    if not spark.catalog.tableExists(tname):
-        # new session over an existing layout: re-register the external
-        # bucketed table (schema from the files; bucket spec from the
-        # stamp we wrote them with)
-        schema = spark.read.parquet(path).schema
-        sort_ddl = ", ".join(sort_cols)
-        spark.sql(
-            f"CREATE TABLE {tname} ({_ddl(schema)}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({sort_ddl}) "
-            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return tname
+    # one file per bucket (repartition hash == bucket-id hash): the
+    # layout a window consumes with a near-no-op per-partition sort
+    return layouts.ensure_bucketed(
+        spark, cache_location(sf_dir, table)[0], f"bucketed/{{label}}/{table}",
+        sf_dir, [table], {},
+        lambda: load(spark, sf_dir, table).repartition(_N_BUCKETS, F.col(key)),
+        _N_BUCKETS, key, sort_cols,
+    )
 
 
 def _bucketed_table(spark, sf_dir: str, table: str):
@@ -335,74 +248,17 @@ def _ensure_scd2_dim(spark, sf_dir: str) -> str:
     """Materialize (once per corpus version) the SCD2 user-attribute
     DIMENSION as a bucketed(user_id) table — the deployment shape for
     scd2_asof_enrich: the dimension is built when the event log lands,
-    not rebuilt inside every consumer query. Staleness stamps
-    events.parquet with the same (size, mtime) -> sha256 contract as
-    the source-table layouts."""
+    not rebuilt inside every consumer query."""
     from .timeseries import scd2_user_attributes
 
-    absd = os.path.abspath(sf_dir)
-    label = hashlib.sha256(absd.encode()).hexdigest()[:12]
-    tname = f"bkt_scd2dim_{label}"
-    path = os.path.join(_repo_root(), ".scratch", "bucketed", label, "scd2dim")
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    spec = {"n_buckets": _N_BUCKETS, "key": "user_id", "dim": "scd2"}
-    marker = os.path.join(path, "_SRC.json")
-    old = None
-    try:
-        with open(marker) as fh:
-            old = json.load(fh)
-    except (OSError, ValueError):
-        pass
-
-    def _content_hash() -> str:
-        h = hashlib.sha256()
-        with open(src, "rb") as fh:
-            for chunk in iter(lambda: fh.read(1 << 20), b""):
-                h.update(chunk)
-        return h.hexdigest()
-
-    fresh = False
-    digest = None
-    if old is not None and {k: old.get(k) for k in spec} == spec:
-        if old.get("size") == st.st_size and old.get("mtime_ns") == st.st_mtime_ns:
-            fresh = True
-        elif old.get("size") == st.st_size:
-            digest = _content_hash()
-            if old.get("sha256") == digest:
-                fresh = True
-                with open(marker, "w") as fh:
-                    json.dump({**old, "mtime_ns": st.st_mtime_ns}, fh)
-    if digest is None and not fresh:
-        digest = _content_hash()
-
-    if not fresh:
-        dim = scd2_user_attributes(spark, sf_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        (
-            dim.repartition(_N_BUCKETS, F.col("user_id"))
-            .write.bucketBy(_N_BUCKETS, "user_id")
-            .sortBy("user_id", "valid_from")
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tname)
-        )
-        with open(marker, "w") as fh:
-            json.dump(
-                {"size": st.st_size, "mtime_ns": st.st_mtime_ns,
-                 "sha256": digest, **spec},
-                fh,
-            )
-        return tname
-
-    if not spark.catalog.tableExists(tname):
-        schema = spark.read.parquet(path).schema
-        spark.sql(
-            f"CREATE TABLE {tname} ({_ddl(schema)}) USING PARQUET "
-            f"CLUSTERED BY (user_id) SORTED BY (user_id, valid_from) "
-            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return tname
+    return layouts.ensure_bucketed(
+        spark, f"bkt_scd2dim_{layouts.label(sf_dir)}", "bucketed/{label}/scd2dim",
+        sf_dir, ["events"], {"dim": "scd2"},
+        lambda: scd2_user_attributes(spark, sf_dir).repartition(
+            _N_BUCKETS, F.col("user_id")
+        ),
+        _N_BUCKETS, "user_id", ["user_id", "valid_from"],
+    )
 
 
 def scd2_asof_enrich_indexed(spark, sf_dir):

@@ -405,7 +405,7 @@ def maybe_persist(df: DataFrame, level=None, floor_bytes: int | None = None) -> 
                     "SPARK_GRAFT_PERSIST_FLOOR_BYTES", str(128 * 1024 * 1024)
                 )
             )
-        except (TypeError, ValueError):
+        except ValueError:
             floor_bytes = 128 * 1024 * 1024
     total = input_bytes(df)
     if total is not None and total < floor_bytes:
@@ -462,10 +462,9 @@ def invalidate_source(spark: SparkSession, sf_dir: str, name: str) -> None:
     (its analyzed plan pins the OLD file listing and schema), refresh
     Spark's file-status/FileIndex cache for the path, and clear
     CacheManager entries (persisted plans match by logical plan — same
-    path — and would silently serve the old content; ADVICE r10). The
-    `_ensure_*` builders call this on a stamp miss so a corpus-version
-    change rebuilds from what is actually on disk. Across sessions none
-    of these caches survive and this is a no-op."""
+    path — and would silently serve the old content; ADVICE r10).
+    `layouts.ensure` calls this before every layout build. Across
+    sessions none of these caches survive and this is a no-op."""
     cache = getattr(spark, "_dps_load_cache", None)
     if cache is not None:
         cache.pop((sf_dir, name), None)

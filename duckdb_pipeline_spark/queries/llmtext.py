@@ -1059,10 +1059,10 @@ def vocab_top_tokens_unicode(spark, sf_dir):
     full tier: build, stamp, bucketed serve, and cross-engine regex
     parity (the oracle re-derives the tokens from raw text with RE2
     regexp_extract_all)."""
-    import hashlib
     import os
 
-    from .tokcache import _repo_root, doc_tf
+    from .. import layouts
+    from .tokcache import doc_tf
 
     docs = load(spark, sf_dir, "documents")
     ush = twin_shift(spark, sf_dir, floor=_U_SHIFT)
@@ -1077,8 +1077,7 @@ def vocab_top_tokens_unicode(spark, sf_dir):
         F.replace(F.col("text"), F.lit(" "), F.lit("—")).alias("text"),
         "source",
     )
-    label = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    qdir = os.path.join(_repo_root(), ".scratch", "vocab_u_q", label)
+    qdir = layouts.location("vocab_u_q", sf_dir)
     (
         base.unionByName(punct_twin)
         .unionByName(dash_twin)

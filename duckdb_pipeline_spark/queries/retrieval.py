@@ -181,11 +181,11 @@ def search_docs_bm25_unicode(spark, sf_dir):
     Stats differ from the plain query because the corpus does (1.2x
     docs, twins shift df/avgdl) — the oracle replays the identical
     corpus + regexp tokenization."""
-    import hashlib
     import os
 
+    from .. import layouts
     from .common import twin_shift
-    from .tokcache import _repo_root, doc_tf
+    from .tokcache import doc_tf
 
     docs = load(spark, sf_dir, "documents")
     ush = twin_shift(spark, sf_dir, floor=_U_BM25_SHIFT)
@@ -195,8 +195,7 @@ def search_docs_bm25_unicode(spark, sf_dir):
         "source",
     )
     corpus = docs.select("doc_id", "text", "source").unionByName(twins)
-    label = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    qdir = os.path.join(_repo_root(), ".scratch", "bm25_u_q", label)
+    qdir = layouts.location("bm25_u_q", sf_dir)
     corpus.write.mode("overwrite").parquet(os.path.join(qdir, "documents.parquet"))
     toktf = doc_tf(spark, qdir, tokenizer="unicode")
     return (

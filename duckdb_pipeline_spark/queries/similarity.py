@@ -19,6 +19,7 @@ from ..operators.similarity import (
     lsh_hyperplanes,
     lsh_topk_vectorized,
 )
+from .. import layouts
 from . import QuerySpec
 from .common import load
 
@@ -152,46 +153,14 @@ LSH_TOPK_SQL = _lsh_sql(n_bits=4)
 
 
 def _ensure_ivf_index(spark, sf_dir: str, n_cells: int) -> str:
-    """Build (once) the cell-partitioned IVF index for this corpus
-    version. The cache directory includes a hash of the ABSOLUTE
-    sf_dir — basename alone would let two scale dirs with the same
-    basename under different roots share a path and thrash rebuilds
-    (round-5 ADVICE). Staleness is keyed on the source parquet's
-    CONTENT (size + sha256), not mtime: the round driver regenerates
-    testdata between rounds, and a regeneration that preserves size and
-    mtime must still invalidate. The build is the index-construction
-    pass every IVF deployment runs at ingest; the ANN query itself then
-    partition-prunes."""
-    import hashlib
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
+    """Build (once per corpus version) the cell-partitioned IVF index;
+    location and staleness: `layouts.py`. The build is the
+    index-construction pass every IVF deployment runs at ingest; the
+    ANN query itself then partition-prunes."""
+    return layouts.ensure(
+        spark, "ivf", sf_dir, ["embeddings"], {"n_cells": n_cells},
+        lambda out: ivf_write_index(load(spark, sf_dir, "embeddings"), out, n_cells=n_cells),
     )
-    path = os.path.join(repo, ".scratch", "ivf", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {
-        "size": os.path.getsize(src),
-        "sha256": h.hexdigest(),
-        "n_cells": n_cells,
-    }
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    ivf_write_index(load(spark, sf_dir, "embeddings"), path, n_cells=n_cells)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
-    return path
 
 
 def similarity_topk_ivf(spark, sf_dir):
@@ -1408,43 +1377,23 @@ FROM m
 
 def _ensure_probe_index(spark, sf_dir: str, n_cells: int = 8) -> str:
     """Persisted IVF index over the 'already-ingested' corpus slice
-    (vec_id % 20 != 0) for the incremental probe — the band-index
-    ensure pattern: (size, mtime) stamp + scheme version; absolute-dir
-    hash in the label."""
-    import hashlib
-    import json
+    (vec_id % 20 != 0) for the incremental probe."""
 
-    from ..operators.similarity import ivf_write_index
+    def build(out: str) -> None:
+        import numpy as np
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
+        emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 != 0)
+        # subset ids are not dense from 0: centroids = the slice's own
+        # lowest-id vectors (bounded n_cells-row collect; knn_probe_index
+        # re-reads the same rows from the index at probe time)
+        crows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
+        C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
+        ivf_write_index(emb, out, n_cells=n_cells, centroids=C)
+
+    return layouts.ensure(
+        spark, "ivfprobe", sf_dir, ["embeddings"],
+        {"scheme": "ivf-fp-v1", "n_cells": n_cells}, build,
     )
-    path = os.path.join(repo, ".scratch", "ivfprobe", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    stamp = {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "scheme": "ivf-fp-v1"}
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp:
-                return path
-    except (OSError, ValueError):
-        pass
-    emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 != 0)
-    # subset ids are not dense from 0: centroids = the slice's own
-    # lowest-id vectors (bounded n_cells-row collect; knn_probe_index
-    # re-reads the same rows from the index at probe time)
-    import numpy as np
-
-    crows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
-    ivf_write_index(emb, path, n_cells=n_cells, centroids=C)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
-    return path
 
 
 def knn_incremental_probe(spark, sf_dir):
@@ -2321,61 +2270,35 @@ def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
     assignment and M uint8 codes (16x compression: 4 codes vs 64
     floats), partitioned by cell. Codebooks land beside the data as
     JSON so serving never retrains or touches the raw vectors.
-    Same content-hash staleness stamp as `_ensure_ivf_index`."""
-    import hashlib
-
+    Location and staleness: `layouts.py`. An index that has absorbed
+    appended batches no longer equals the pure-corpus encode this
+    query's shared oracle computes, so the applied batch ids are part
+    of the spec: any append makes the next call rebuild."""
     import numpy as np
 
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import (
-        _ivf_centroids_and_query,
-        pq_train_partials,
-    )
+    from ..operators.similarity import _ivf_centroids_and_query, pq_train_partials
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    absd = os.path.abspath(sf_dir)
-    label = (
-        f"{os.path.basename(os.path.normpath(absd)) or 'sf'}-"
-        f"{hashlib.sha256(absd.encode()).hexdigest()[:12]}"
-    )
-    path = os.path.join(repo, ".scratch", "ivfpq", label)
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    h = hashlib.sha256()
-    with open(src, "rb") as fh:
-        for chunk in iter(lambda: fh.read(1 << 20), b""):
-            h.update(chunk)
-    stamp = {"size": os.path.getsize(src), "sha256": h.hexdigest(), "v": 2}
-    marker = os.path.join(path, "_SRC.json")
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == stamp and not _ivfpq_applied_batches(path):
-                # an index that has absorbed appended batches no longer
-                # equals the pure-corpus encode this query's shared
-                # oracle computes — rebuild rather than serve it stale
-                return path
-    except (OSError, ValueError):
-        pass
+    def build(out: str) -> None:
+        emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        CB = _pq_seed_codebooks(emb)
+        rows = (
+            pq_train_partials(emb, CB)
+            .groupBy("m", "code", "i")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .collect()
+        )
+        CB1 = _pq_apply_update(CB, rows)
+        C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+        _ivfpq_encode(emb, CB1, C).write.mode("overwrite").partitionBy("cell").parquet(out)
+        with open(os.path.join(out, "_CODEBOOKS.json"), "w") as fh:
+            json.dump(CB1.tolist(), fh)
+        with open(os.path.join(out, "_CENTROIDS.json"), "w") as fh:
+            json.dump(np.asarray(C, dtype="float64").tolist(), fh)
 
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    CB = _pq_seed_codebooks(emb)
-    rows = (
-        pq_train_partials(emb, CB)
-        .groupBy("m", "code", "i")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
+    applied = _ivfpq_applied_batches(layouts.location("ivfpq", sf_dir))
+    return layouts.ensure(
+        spark, "ivfpq", sf_dir, ["embeddings"], {"v": 2, "appended": applied}, build
     )
-    CB1 = _pq_apply_update(CB, rows)
-    C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
-
-    coded = _ivfpq_encode(emb, CB1, C)
-    coded.write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(os.path.join(path, "_CODEBOOKS.json"), "w") as fh:
-        json.dump(CB1.tolist(), fh)
-    with open(os.path.join(path, "_CENTROIDS.json"), "w") as fh:
-        json.dump(np.asarray(C, dtype="float64").tolist(), fh)
-    with open(marker, "w") as fh:
-        json.dump(stamp, fh)
-    return path
 
 
 def _ivfpq_encode(emb, CB1, C):
@@ -2463,8 +2386,8 @@ def ivfpq_append_batch(spark, emb_batch, idx_path: str, batch_id: str) -> int:
     the entry flips to "applied". A crash at any point is recovered by
     replaying the same batch_id: pre-pending debris is overwritten,
     a pending batch resumes its move (already-moved files are gone
-    from staging, so the move is idempotent). Appends also invalidate
-    the pure-corpus `_SRC.json` stamp via `_ivfpq_applied_batches`, so
+    from staging, so the move is idempotent). Appended batch ids are
+    part of `_ensure_ivfpq_index`'s layout spec, so
     `similarity_ivf_pq_topk_indexed` never serves an appended index
     against its full-corpus oracle."""
     import shutil

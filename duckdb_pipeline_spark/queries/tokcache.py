@@ -22,24 +22,21 @@ adds a second tier, `tokenizer="unicode"` (casefold + maximal
 [\\p{L}\\p{N}]+ runs), materialized as its OWN bucketed table — see
 the tokenizer registry below.
 
-Staleness follows the band-index/bucketed-layout contract: (size,
-mtime) fast path, sha256 slow path, absolute-dir-hashed cache location;
-a stamp miss clears session caches before rebuilding (same-session
-source rewrites must not reuse CacheManager-matched plans — ADVICE
-r10). Reference parity note: the reference has no materialized token
-store; this is an at-rest layout choice on the Spark side, and every
-consumer's DuckDB oracle still derives tf inline from raw text, so the
-correctness gate covers the full derivation.
+Layout location, staleness and publishing: `layouts.py`. Reference
+parity note: the reference has no materialized token store; this is an
+at-rest layout choice on the Spark side, and every consumer's DuckDB
+oracle still derives tf inline from raw text, so the correctness gate
+covers the full derivation.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
 from pyspark.sql import functions as F
 
+from .. import layouts
 from .common import load
 
 _N_BUCKETS = 32  # parallelism ceiling of the bucketed scan; see
@@ -76,10 +73,6 @@ def _tokens_expr(tokenizer: str):
     raise ValueError(f"unknown tokenizer {tokenizer!r} (use 'space' or 'unicode')")
 
 
-def _repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
 def cache_location(sf_dir: str, tokenizer: str = "space") -> tuple[str, str, str]:
     """(table_name, data_dir, marker_path) for a corpus dir + tier —
     the single source of truth for the projection's scratch layout
@@ -87,108 +80,34 @@ def cache_location(sf_dir: str, tokenizer: str = "space") -> tuple[str, str, str
     scheme, so a layout change breaks loudly there; ADVICE r12)."""
     if tokenizer not in _SCHEMES:
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    label = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    # the space tier keeps its historical layout (existing caches stay
-    # valid); other tiers suffix both the label dir and the table name
-    # with the FULL tier name (a one-letter suffix would collide for
-    # future tiers sharing an initial)
-    if tokenizer != "space":
-        label = f"{label}_{tokenizer}"
-    path = os.path.join(_repo_root(), ".scratch", "toktf", label)
-    return f"toktf_{label}", path, os.path.join(path, "_SRC.json")
+    path = layouts.location(_kind(tokenizer), sf_dir)
+    return f"toktf_{os.path.basename(path)}", path, os.path.join(path, layouts.MARKER)
 
 
-def _ddl(schema) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+def _kind(tokenizer: str) -> str:
+    # the space tier keeps its historical path; other tiers suffix both
+    # the label dir and the table name with the FULL tier name (a
+    # one-letter suffix would collide for future tiers sharing an initial)
+    return "toktf" if tokenizer == "space" else f"toktf/{{label}}_{tokenizer}"
 
 
 def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
     """Materialize (once per corpus version and tokenizer tier) the
     (doc_id, token, tf) projection of `documents` as a bucketed(doc_id)
     catalog table; returns the table name."""
-    tname, path, marker = cache_location(sf_dir, tokenizer)
-    src = os.path.join(sf_dir, "documents.parquet")
 
-    # `documents.parquet` is a single file in the driver's testdata but
-    # a parquet DIRECTORY when written by Spark (tests, downstream
-    # lakes) — stamp over the sorted data-file list either way
-    def _parts(p: str) -> list[str]:
-        if os.path.isdir(p):
-            return sorted(
-                os.path.join(r, f)
-                for r, _, fs in os.walk(p)
-                for f in fs
-                if not f.startswith(("_", "."))
-            )
-        return [p]
-
-    parts = _parts(src)
-    sizes = [os.stat(f) for f in parts]
-    size = sum(s.st_size for s in sizes)
-    mtime_ns = max((s.st_mtime_ns for s in sizes), default=0)
-    spec = {"n_buckets": _N_BUCKETS, "key": "doc_id", "scheme": _SCHEMES[tokenizer]}
-    old = None
-    try:
-        with open(marker) as fh:
-            old = json.load(fh)
-    except (OSError, ValueError):
-        pass
-
-    def _content_hash() -> str:
-        h = hashlib.sha256()
-        for f in parts:
-            h.update(os.path.basename(f).encode())
-            with open(f, "rb") as fh:
-                for chunk in iter(lambda: fh.read(1 << 20), b""):
-                    h.update(chunk)
-        return h.hexdigest()
-
-    fresh = False
-    digest = None
-    if old is not None and {k: old.get(k) for k in spec} == spec:
-        if old.get("size") == size and old.get("mtime_ns") == mtime_ns:
-            fresh = True
-        elif old.get("size") == size:
-            digest = _content_hash()
-            if old.get("sha256") == digest:
-                fresh = True  # same bytes, touched file: refresh marker
-                with open(marker, "w") as fh:
-                    json.dump({**old, "mtime_ns": mtime_ns}, fh)
-    if digest is None and not fresh:
-        digest = _content_hash()
-
-    if not fresh:
-        # stamp miss: the source changed (or first build) — invalidate
-        # every session cache derived from the path (memoized load,
-        # FileIndex listing, CacheManager plans) so the rebuild reads
-        # what is on disk (ADVICE r10)
-        from .common import invalidate_source
-
-        invalidate_source(spark, sf_dir, "documents")
-        # ONE shuffle, of the RAW docs (optimization r14, guide §2.3/2.4):
-        # repartition by doc_id BEFORE the explode. HashPartitioning
-        # (doc_id, N) satisfies the groupBy(doc_id, source, token)
-        # clustering (subset rule) AND is exactly the bucket-id hash
-        # (Murmur3 pmod N), so the aggregation runs Exchange-free and
-        # each task writes its one bucket file with no second shuffle.
-        # The previous shape shuffled token-scale data twice (partial-
-        # aggregated tf rows into the groupBy, then the FULL tf table
-        # into the bucket repartition); raw (doc_id, source, text) rows
-        # are the smaller payload at every scale — the tf projection on
-        # disk is ~3x the corpus text (measured at sf0.1) because each
-        # token row re-carries doc_id/source. Same rows, same layout
-        # (32 one-per-bucket files), content-hash-identical (A/B'd).
-        # TRADEOFF (ADVICE r14): the pre-explode repartition caps the
-        # tokenize/explode/fold stage at _N_BUCKETS tasks; the two-
-        # shuffle shape runs that stage at scan/shuffle parallelism.
-        # Re-measured r15 (same-session alternated A/B, full bucketed
-        # write, scripts/ab_toktf_r15.py): one-shuffle wins 0.41 vs
-        # 0.58 s at sf0.1 and 2.19 vs 8.25 s at sf10 on 32 cores — the
-        # token-scale double shuffle costs far more than the capped
-        # parallelism saves. On clusters with cores >> _N_BUCKETS,
-        # raise _N_BUCKETS (a corpus-version layout choice) rather
-        # than reverting to the two-shuffle shape.
-        tf = (
+    # ONE shuffle, of the RAW docs: repartition by doc_id BEFORE the
+    # explode. HashPartitioning(doc_id, N) satisfies the groupBy's
+    # clustering AND is exactly the bucket-id hash (Murmur3 pmod N), so
+    # the aggregation runs Exchange-free and each task writes its one
+    # bucket file. Shuffling the tf rows instead moves ~3x the bytes
+    # (each token row re-carries doc_id/source). The cost is a fold
+    # stage capped at _N_BUCKETS tasks; a same-session A/B
+    # (scripts/ab_toktf_r15.py) still measured 0.41 vs 0.58 s at sf0.1
+    # and 2.19 vs 8.25 s at sf10 on 32 cores for this shape. With cores
+    # >> _N_BUCKETS, raise _N_BUCKETS rather than shuffling twice.
+    def tf():
+        return (
             load(spark, sf_dir, "documents")
             .select("doc_id", "source", "text")
             .repartition(_N_BUCKETS, F.col("doc_id"))
@@ -204,30 +123,12 @@ def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
             .select("doc_id", "token", "tf", "source")
         )
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        (
-            tf.write.bucketBy(_N_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tname)
-        )
-        with open(marker, "w") as fh:
-            json.dump(
-                {"size": size, "mtime_ns": mtime_ns,
-                 "sha256": digest, **spec},
-                fh,
-            )
-        return tname
 
-    if not spark.catalog.tableExists(tname):
-        schema = spark.read.parquet(path).schema
-        spark.sql(
-            f"CREATE TABLE {tname} ({_ddl(schema)}) USING PARQUET "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
-        )
-    return tname
+    return layouts.ensure_bucketed(
+        spark, cache_location(sf_dir, tokenizer)[0], _kind(tokenizer), sf_dir,
+        ["documents"], {"scheme": _SCHEMES[tokenizer]}, tf,
+        _N_BUCKETS, "doc_id", ["doc_id"],
+    )
 
 
 def doc_tf(spark, sf_dir: str, tokenizer: str = "space"):
@@ -266,19 +167,13 @@ def append_doc_tf(
     already gated upstream (`stream_neardup_gate` is that front door)
     pass ``check_duplicates=False`` to skip the probe.
 
-    Stamp lifecycle (round 12 — r11 removed the stamp outright, which
-    made CONSECUTIVE appends lossy: append #2's ensure() saw no marker,
-    rebuilt from source, and silently discarded append #1's docs): the
-    marker keeps the SOURCE signature and counts the appends, so the
-    hourly cadence composes — between corpus versions every consumer
-    (`doc_tf`) serves the bucket-aligned union Exchange-free, and each
-    later append sees the prior ones (which is also what makes the
-    duplicate guard meaningful). Any ACTUAL source change still
-    stamp-misses and rebuilds from the new corpus version ALONE —
-    appends never survive a version bump; they are a between-versions
-    optimization, never a substitute for the staleness contract.
-    Append==rebuild equality, append composition, and source-governed
-    supersession are pytest-pinned."""
+    Stamp lifecycle: an append leaves the layout's marker, which
+    records the SOURCE, in place and counts the append in it. While the
+    source is unchanged every consumer (`doc_tf`) serves the union and
+    later appends compose on top; a real source change rebuilds from
+    the new corpus version ALONE, so appends never survive a version
+    bump. Append==rebuild equality, append composition, and
+    source-governed supersession are pytest-pinned."""
     tname = _ensure_doc_tf(spark, sf_dir, tokenizer)
     # probe #0 — NULL doc_ids are rejected UNCONDITIONALLY (ADVICE
     # r13: this is an integrity invariant of the projection, not a
@@ -342,11 +237,7 @@ def append_doc_tf(
         .select("doc_id", "token", "tf", "source")
     )
     batch_tf.write.mode("append").insertInto(tname)
-    # re-stamp: the table now equals derivation(source) ∪ appended
-    # batches. The source signature stays (unchanged source keeps
-    # serving the union; consecutive appends compose); the counter
-    # records that the table leads the source. A real source change
-    # still mismatches and rebuilds from the new version alone.
+    # count the append in the marker: the table now leads its source
     marker = cache_location(sf_dir, tokenizer)[2]
     try:
         with open(marker) as fh:
@@ -355,13 +246,9 @@ def append_doc_tf(
         with open(marker, "w") as fh:
             json.dump(st, fh)
     except (OSError, ValueError) as exc:
-        # LOUD by design (VERDICT r12 wrong #1): the append itself
-        # succeeded, but the marker _ensure_doc_tf just wrote cannot be
-        # read back / re-stamped. A missing or corrupt marker makes the
-        # NEXT _ensure_doc_tf rebuild from source — silently discarding
-        # every appended batch. That is data loss in the hourly cadence
-        # this function exists for, so surface it immediately; the
-        # operator can re-stamp by hand or rebuild + re-append.
+        # LOUD by design (VERDICT r12 wrong #1): the append landed, but
+        # a missing or corrupt marker makes the NEXT _ensure_doc_tf
+        # rebuild from source and silently discard every appended batch
         raise RuntimeError(
             f"append_doc_tf: appended batch to {tname} but failed to "
             f"re-stamp {marker} ({exc!r}) — without the stamp the next "
@@ -398,20 +285,14 @@ def toktf_append_equals_rebuild(spark, sf_dir: str):
     import shutil
 
     docs = load(spark, sf_dir, "documents")
-    absd = os.path.abspath(sf_dir)
-    label = hashlib.sha256(absd.encode()).hexdigest()[:12]
-    base_dir = os.path.join(_repo_root(), ".scratch", "toktf_append_q", label)
+    base_dir = layouts.location("toktf_append_q", sf_dir)
     os.makedirs(base_dir, exist_ok=True)
     # fresh epoch per run: wipe the base corpus' projection cache so
     # the query always exercises a full build + append cycle (without
     # this, a re-run whose re-landed base is byte-identical would be
     # stamped fresh — including run 1's append — and the duplicate
     # guard would correctly refuse the re-append)
-    base_label = hashlib.sha256(os.path.abspath(base_dir).encode()).hexdigest()[:12]
-    shutil.rmtree(
-        os.path.join(_repo_root(), ".scratch", "toktf", base_label),
-        ignore_errors=True,
-    )
+    shutil.rmtree(cache_location(base_dir)[1], ignore_errors=True)
     # land the base corpus version (full documents schema, its own dir:
     # the append must not touch the shared sf_dir projection that the
     # serving consumers read)

@@ -102,6 +102,22 @@ def _swap_dir(staging: str, dest: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _publish(dest: str, write, prefix: str) -> None:
+    """Replace directory ``dest`` with what ``write(staging)`` writes
+    into a fresh staging dir beside it, swapped in by `_swap_dir`. If
+    ``write`` raises, the staging dir is removed and ``dest`` is left
+    as it was."""
+    parent = os.path.dirname(dest.rstrip("/")) or "."
+    os.makedirs(parent, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    try:
+        write(staging)
+        _swap_dir(staging, dest)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+
+
 def compact_small_files(
     spark, path: str, target_files: int = 1, partition_glob: str | None = None
 ) -> int:
@@ -112,21 +128,15 @@ def compact_small_files(
     per-file open cost and lose row-group-sized reads. Periodic
     compaction is the standard fix. Returns the number of files after
     compaction. The rewrite is atomic-by-rename at the directory level."""
-    import tempfile as _tf
-
     src = os.path.join(path, partition_glob) if partition_glob else path
     _recover_dir(src)
     df = spark.read.parquet(src)
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    staging = _tf.mkdtemp(prefix="_compact_", dir=parent)
-    try:
-        df.repartition(target_files).write.mode("overwrite").parquet(staging)
-        dest = src if partition_glob else path
-        _swap_dir(staging, dest)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return len(_glob.glob(os.path.join(dest, "part-*.parquet")))
+    _publish(
+        src,
+        lambda out: df.repartition(target_files).write.mode("overwrite").parquet(out),
+        "_compact_",
+    )
+    return len(_glob.glob(os.path.join(src, "part-*.parquet")))
 
 
 def compact_partitioned(
@@ -145,23 +155,16 @@ def compact_partitioned(
     is the standard nightly maintenance job shape — the rewrite cost is
     one shuffle of the index (skinny rows), amortized over every probe
     that follows. Returns the number of data files after compaction."""
-    import tempfile as _tf
-
     _recover_dir(path)
     df = spark.read.parquet(path)
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    staging = _tf.mkdtemp(prefix="_compactp_", dir=parent)
-    try:
-        (
-            df.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(staging)
-        )
-        _swap_dir(staging, path)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    _publish(
+        path,
+        lambda out: df.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .partitionBy(*partition_cols)
+        .parquet(out),
+        "_compactp_",
+    )
     return len(
         _glob.glob(
             os.path.join(path, *["*"] * len(partition_cols), "part-*.parquet")
@@ -197,8 +200,6 @@ def compact_bucketed(spark, table_name: str) -> int:
     so a crash between drop and rewrite leaves the staging dir as the
     recovery copy (path returned in the raised error). Run it as the
     nightly maintenance job it is, not on a live serving path."""
-    import tempfile as _tf
-
     rows = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
     info = {r.col_name.strip(): (r.data_type or "").strip() for r in rows}
 
@@ -213,8 +214,8 @@ def compact_bucketed(spark, table_name: str) -> int:
     path = loc[len("file:"):] if loc.startswith("file:") else loc
 
     parent = os.path.dirname(path.rstrip("/")) or "."
-    staging = _tf.mkdtemp(prefix="_compactb_", dir=parent)
-    sidecar_dir = _tf.mkdtemp(prefix="_compactb_side_", dir=parent)
+    staging = tempfile.mkdtemp(prefix="_compactb_", dir=parent)
+    sidecar_dir = tempfile.mkdtemp(prefix="_compactb_side_", dir=parent)
     try:
         spark.table(table_name).write.mode("overwrite").parquet(staging)
         for entry in os.listdir(path):
@@ -266,8 +267,6 @@ def upsert_parquet(spark, updates: DataFrame, path: str, keys: list[str]) -> int
     staged files' parquet FOOTER metadata — no second data scan
     (VERDICT r8: the previous staged re-read ``count()`` added a full
     scan per MERGE call)."""
-    import tempfile as _tf
-
     import pyarrow.parquet as _pq
 
     _recover_dir(path)
@@ -277,20 +276,17 @@ def upsert_parquet(spark, updates: DataFrame, path: str, keys: list[str]) -> int
         merged = kept.unionByName(updates)
     else:
         merged = updates
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    os.makedirs(parent, exist_ok=True)
-    staging = _tf.mkdtemp(prefix="_upsert_", dir=parent)
-    try:
-        merged.write.mode("overwrite").parquet(staging)
-        n = sum(
+    rows = []
+
+    def write(out: str) -> None:
+        merged.write.mode("overwrite").parquet(out)
+        rows.extend(
             _pq.ParquetFile(p).metadata.num_rows
-            for p in _glob.glob(os.path.join(staging, "part-*.parquet"))
+            for p in _glob.glob(os.path.join(out, "part-*.parquet"))
         )
-        _swap_dir(staging, path)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return n
+
+    _publish(path, write, "_upsert_")
+    return sum(rows)
 
 
 def upsert_partitioned(

@@ -30,6 +30,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from duckdb_pipeline_spark import layouts
     from duckdb_pipeline_spark.queries import tokcache
     from duckdb_pipeline_spark.queries.common import load
 
@@ -61,7 +62,7 @@ def main() -> None:
             .repartition(N, F.col("doc_id"))
         )
 
-    scratch = os.path.join(tokcache._repo_root(), ".scratch", "toktf_ab_r15")
+    scratch = layouts.location("toktf_ab_r15", sf_dir)
 
     def run(tag: str, df) -> float:
         path = os.path.join(scratch, tag)

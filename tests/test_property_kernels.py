@@ -8,6 +8,7 @@ kernels themselves face randomized adversarial inputs.
 import hashlib
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -313,6 +314,48 @@ def test_jpeg_constant_block_exact_and_hand_reference():
     scan = payload[payload.index(b"\xff\xda") + 10 : -2]
     assert scan[0] == 0b01111101, f"entropy byte {scan[0]:08b}"
     assert (decode_jpeg_gray(payload) == 134).all()
+
+
+_JPEG_HASH_SCRIPT = """
+import hashlib
+from duckdb_pipeline_spark.operators.multimodal import decode_jpeg_gray, synth_jpeg_payload
+h = hashlib.sha256()
+for did in range(350):
+    payload = synth_jpeg_payload(did, 37 * did % 400)[1]
+    h.update(payload)
+    h.update(decode_jpeg_gray(payload).tobytes())
+print(h.hexdigest())
+"""
+
+
+def _blas_name() -> str:
+    try:
+        return np.__config__.CONFIG["Build Dependencies"]["blas"]["name"]
+    except (AttributeError, KeyError, TypeError):
+        return ""
+
+
+@pytest.mark.skipif("openblas" not in _blas_name(), reason="numpy is not backed by OpenBLAS")
+def test_jpeg_payloads_do_not_depend_on_the_blas_kernel():
+    """The JPEG transforms are exact integer arithmetic: encoding and
+    decoding give the same bytes whichever CPU kernel OpenBLAS picks
+    (a float matmul rounded values on a .5 boundary either way)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "OPENBLAS_CORETYPE"}
+    env["PYTHONPATH"] = root
+
+    def digest(extra: dict) -> str:
+        return subprocess.run(
+            [sys.executable, "-c", _JPEG_HASH_SCRIPT], cwd=root, env={**env, **extra},
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    default = digest({})
+    assert default and default == digest({"OPENBLAS_CORETYPE": "Haswell"})
 
 
 @given(

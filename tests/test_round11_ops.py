@@ -85,9 +85,7 @@ def test_doc_tf_stamp_rebuilds_on_source_change_only(spark, tmp_path):
 
     # byte-identical touch: marker refresh, no rebuild (parquet files
     # in the cache dir keep their mtimes)
-    cache_dir = os.path.join(
-        tokcache._repo_root(), ".scratch", "toktf"
-    )
+    cache_dir = os.path.dirname(tokcache.cache_location(d)[1])
     label_dirs = [
         os.path.join(cache_dir, x)
         for x in os.listdir(cache_dir)

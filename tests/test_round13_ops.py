@@ -59,12 +59,7 @@ def test_append_doc_tf_restamp_failure_is_loud(spark, tmp_path, monkeypatch):
     # simulate the marker corrupting between ensure() and the re-stamp:
     # pin ensure to the already-built table, then break the marker
     monkeypatch.setattr(tokcache, "_ensure_doc_tf", lambda s, sd, tok="space": tname)
-    import hashlib
-
-    label = hashlib.sha256(os.path.abspath(d).encode()).hexdigest()[:12]
-    marker = os.path.join(
-        tokcache._repo_root(), ".scratch", "toktf", label, "_SRC.json"
-    )
+    marker = tokcache.cache_location(d)[2]
     with open(marker, "w") as fh:
         fh.write("{not json")
     batch = spark.createDataFrame(
@@ -80,8 +75,6 @@ def test_append_doc_tf_restamp_failure_is_loud(spark, tmp_path, monkeypatch):
 def test_append_doc_tf_restamp_success_counts(spark, tmp_path):
     """Happy path: consecutive appends increment the marker's append
     counter and the source signature survives (compose semantics)."""
-    import hashlib
-
     from duckdb_pipeline_spark.queries import tokcache
 
     d = str(tmp_path / "sfrc")
@@ -92,10 +85,7 @@ def test_append_doc_tf_restamp_success_counts(spark, tmp_path):
             [(did, "z", "s9")], "doc_id long, text string, source string"
         )
         tokcache.append_doc_tf(spark, d, batch)
-        label = hashlib.sha256(os.path.abspath(d).encode()).hexdigest()[:12]
-        marker = os.path.join(
-            tokcache._repo_root(), ".scratch", "toktf", label, "_SRC.json"
-        )
+        marker = tokcache.cache_location(d)[2]
         with open(marker) as fh:
             assert json.load(fh)["appends"] == i
 
