@@ -42,8 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # driver's bounded lookup tables
 _BOUNDED_SCANS = ("region", "nation", "supplier")
 
-# same exclusions as sweep_sf10_spark.py, for the same reason — these
-# queries EXECUTE (quadratic kernels, iterative trainer collects,
+# these queries EXECUTE (quadratic kernels, iterative trainer collects,
 # greedy selection rounds, cold persisted-state builds) during
 # DataFrame CONSTRUCTION, so "plan-only" doesn't hold for them;
 # their broadcasts are centroids/codebooks/blocks, reviewed by hand
