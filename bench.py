@@ -119,14 +119,10 @@ HEADLINE = [
     "window_moving_7d",
     "stream_interval_join",
     "sample_stratified",
-    # round-6 additions; round 7 promotes the numpy ADC kernel to THE
-    # headline ADC entry (VERDICT r6): the in-plan exact twin's
-    # higher-order fold is interpreted per element (2.34x DuckDB at
-    # sf10, 0.21x for the bitwise-identical numpy kernel), and with the
-    # DuckDB twin's per-dim stats table now amortized symmetrically
-    # (ADC_BENCH_SETUP_SQL, mirroring the np twin's plan-build stats
-    # fetch — the IVF precedent) the comparison is apples-to-apples.
-    # similarity_adc_topk stays declared + driver-checked.
+    # round-6 additions; the ADC entry is the numpy kernel (round 7),
+    # with the DuckDB twin's per-dim stats table amortized the same way
+    # as its plan-build stats fetch (ADC_BENCH_SETUP_SQL — the IVF
+    # precedent), so the comparison is apples-to-apples.
     "dedup_bloom_probe",
     "dedup_span_exact",
     "similarity_adc_topk_np",
@@ -162,22 +158,22 @@ V2_ADDITIONS = [
 HEADLINE = HEADLINE + V2_ADDITIONS
 
 # ROUND-11 SERVING SWAP (documented per VERDICT r10 #3): q3_top_orders
-# now serves from the writer-owned orderkey-bucketed silver (it
-# delegates to q3_top_orders_bucketed), so the q3_top_orders and
-# q3_top_orders_bucketed rows time the SAME plan by design and any
-# r10->r11 improvement in the q3_top_orders row is the LAYOUT, not a
-# plan win. ROUND 12 restores attribution (VERDICT r11 #4): the
-# artifact's `extras` carries q3_top_orders_plain (best plain-layout
-# plan, outside the official basis) plus the COLD build cost of the tf
+# serves from the writer-owned orderkey-bucketed silver, and
+# q3_top_orders_bucketed is a second name for the SAME function, so
+# the two rows time the same plan by design and any r10->r11
+# improvement in the q3_top_orders row is the LAYOUT, not a plan win.
+# ROUND 12 restores attribution (VERDICT r11 #4): the artifact's
+# `extras` carries q3_top_orders_plain (best plain-layout plan,
+# outside the official basis) plus the COLD build cost of the tf
 # projection and the orderkey-bucketed silver (`_cold_build_costs`),
 # so both the layout delta and the amortized write are visible in the
-# artifact itself. q5_regional_revenue stays inline — its bucketed twin
-# measured worse at sf10 (BASELINE round 11). The BM25/MRR rows and
-# the token-shuffle family serve from the materialized tf
-# projection (queries/tokcache.py), built untimed at plan construction
-# — the same at-rest accounting as the bucketed twins and the IVF
-# index, with the build cost recorded in BASELINE (17.5 s at sf10,
-# amortized across seven queries and every session).
+# artifact itself. q5_regional_revenue stays inline — a plan over the
+# bucketed silver measured worse at sf10 (BASELINE round 11). The
+# BM25/MRR rows and the token-shuffle family serve from the
+# materialized tf projection (queries/tokcache.py), built untimed at
+# plan construction — the same at-rest accounting as the bucketed
+# silver and the IVF index, with the build cost recorded in BASELINE
+# (17.5 s at sf10, amortized across seven queries and every session).
 #
 # The headline GROWS as operators land, which moves the total-ratio
 # basis between rounds (every added query pays Spark's ~0.15-0.4 s
@@ -189,12 +185,11 @@ HEADLINE = HEADLINE + V2_ADDITIONS
 R6_ADDITIONS = {
     "dedup_bloom_probe",
     "dedup_span_exact",
-    "similarity_adc_topk",
     "similarity_adc_topk_np",
     "stream_dedup_events",
     "corpus_overlap_matrix",
     # round-7 addition, same exclusion from the r5-comparable basis:
-    # the bucketed q3 twin (its DuckDB twin reads the plain layout —
+    # the bucketed q3 row (its DuckDB twin reads the plain layout —
     # the layout win is Spark-side by design, a declared at-rest
     # deployment choice like the IVF index)
     "q3_top_orders_bucketed",
@@ -416,12 +411,12 @@ def _duck_runs(sf_dir: str, cpus: int, names: list[str]) -> dict:
     con.execute(f"SET threads={cpus}")
     # Amortized-index parity (ADVICE r5): Spark's similarity_topk_ivf
     # times a probe of a prebuilt index, so the twin materializes its
-    # cell table once (untimed) and times only the probe. The ADC np
-    # twin likewise fetches its per-dim stats row at plan build
-    # (round 7), so DuckDB's stats table is materialized once. Guard:
-    # the probe must return exactly what the full-recompute oracle
-    # returns, or the substitution is rejected and the original SQL
-    # stays.
+    # cell table once (untimed) and times only the probe.
+    # similarity_adc_topk_np likewise fetches its per-dim stats row at
+    # plan build (round 7), so DuckDB's stats table is materialized
+    # once. Guard: the probe must return exactly what the
+    # full-recompute oracle returns, or the substitution is rejected
+    # and the original SQL stays.
     for name, setup, probe in (
         ("similarity_topk_ivf", IVF_BENCH_SETUP_SQL, IVF_BENCH_PROBE_SQL),
         ("similarity_adc_topk_np", ADC_BENCH_SETUP_SQL, ADC_BENCH_PROBE_SQL),

@@ -31,17 +31,16 @@ class QuerySpec:
 # relational family; queries rotated out (driver-green in BOTH rounds
 # 1 and 2, unchanged since) follow in module order.
 PRIORITY: tuple[str, ...] = (
-    # ---- round 15 window (VERDICT r14 #2): every plan the r14/r15
-    # OPTIMIZATION rounds changed leads the window — the r14 window was
-    # pinned before the r14 optimizer commits landed, so those plans
-    # have no driver oracle row yet (the verdict's top gap) — followed
-    # by the three r14-build newcomers (never driver-checked), then the
-    # r10-stale cohort (the oldest remaining, 45 rows minus
-    # knn_join_topk_ivf which is in the changed set; alphabetical). The
-    # driver caps at 50 rows, so the cohort's alphabetical tail
-    # (timeseries_cusum_drift, topk_orders_global, window_lag_delta,
-    # window_moving_avg + whatever the cap cuts) leads the r16
-    # rotation.
+    # ---- round 16 window: every plan the r14/r15 OPTIMIZATION rounds
+    # changed leads the window, followed by the three r14-build
+    # newcomers, then the r10-stale cohort (alphabetical). All 50
+    # rows of the r15 window were hash-green (CORRECTNESS_r15.json);
+    # r16 rotates in the cohort's six-name tail that the r15 cap cut
+    # and rotates out six cohort names from its alphabetical head
+    # (agg_listagg_sorted, agg_salted_hot_keys, corpus_shard_shuffle,
+    # dedup_components_incremental, graph_link_prediction,
+    # join_null_safe — embedding_sim_calibration and
+    # events_markov_transitions stay, as their modules changed).
     #
     # (a) plans changed by optimization r14/r15 (9):
     "pipeline_corpus_prep",          # r14: min_by tier-1 fold
@@ -58,14 +57,8 @@ PRIORITY: tuple[str, ...] = (
     "dedup_exact_unicode",
     "search_docs_bm25_unicode",
     # (c) the r10-stale cohort (alphabetical):
-    "agg_listagg_sorted",
-    "agg_salted_hot_keys",
-    "corpus_shard_shuffle",
-    "dedup_components_incremental",
     "embedding_sim_calibration",
     "events_markov_transitions",
-    "graph_link_prediction",
-    "join_null_safe",
     "kmeans_seed_farthest",
     "knn_graph_components",
     "knn_incremental_probe",
@@ -96,12 +89,15 @@ PRIORITY: tuple[str, ...] = (
     "similarity_pq_recall_audit",
     "split_leakage_audit",
     "stats_chi2_independence",
-    # ---- r16 window candidates (the cohort's alphabetical tail past
-    # the 50-cap, left out this round): stats_regression_by_group,
-    # stats_welch_ttest, timeseries_cusum_drift, topk_orders_global,
-    # window_lag_delta, window_moving_avg.
-    # Rotated out round 15 (driver-green r14, unchanged): the full r14
-    # window; earlier rotation history is in git.
+    "stats_regression_by_group",
+    "stats_welch_ttest",
+    "timeseries_cusum_drift",
+    "topk_orders_global",
+    "window_lag_delta",
+    "window_moving_avg",
+    # Rotated out round 16 (driver-green r15, unchanged): the six
+    # cohort-head names listed in the header comment; earlier rotation
+    # history is in git.
 )
 
 

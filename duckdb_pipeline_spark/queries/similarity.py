@@ -324,60 +324,6 @@ LIMIT 10
 _ADC_K = 10
 
 
-def similarity_adc_topk(spark, sf_dir):
-    """Top-10 nearest neighbors of vector 0 by asymmetric-distance
-    computation over per-dimension 8-bit codes.
-
-    Plan shape: ONE partial-aggregated reduce produces a single row
-    carrying per-dim mins, per-dim maxs AND the query vector (first of
-    the vec_id=0 rows — unique, so deterministic); that row broadcasts
-    into a map-only scan that codes each vector and the query inline
-    and folds the integer distance; TakeOrdered finishes — no wide
-    shuffle anywhere, two jobs total. Code grid: c = clamp(floor((x -
-    mn_d) * 255 / (mx_d - mn_d)), 0, 255), degenerate dims (mx = mn)
-    code to 0."""
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # dim peek at plan build (one-row driver action, like the IVF
-    # centroid bootstrap): per-dim min/max then runs as ONE reduce over
-    # 2*dim scalar aggregates — no posexplode blowup, no groupBy(i)
-    dim = emb.select(F.size("embedding").alias("d")).first()["d"]
-    stats = emb.agg(
-        F.array(
-            *[F.min(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mns"),
-        F.array(
-            *[F.max(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mxs"),
-        F.first(
-            F.when(F.col("vec_id") == 0, F.col("embedding")), ignorenulls=True
-        ).alias("qe"),
-    )
-
-    def code(arr: str) -> str:
-        return (
-            f"transform({arr}, (x, i) -> CASE WHEN mxs[i] = mns[i] THEN 0 "
-            "ELSE CAST(least(greatest(floor((CAST(x AS DOUBLE) - mns[i]) * 255.0 "
-            "/ (mxs[i] - mns[i])), 0.0D), 255.0D) AS INT) END)"
-        )
-
-    dist = F.expr(
-        f"aggregate(zip_with({code('embedding')}, {code('qe')},"
-        " (a, b) -> CAST((a - b) * (a - b) AS BIGINT)),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    return (
-        emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(stats))
-        .select("vec_id", dist.alias("adc_dist"))
-        # a corpus without the query vector yields NULL distances
-        # (zip_with against a NULL qe); the oracle's join produces the
-        # EMPTY set there — match it
-        .where(F.col("adc_dist").isNotNull())
-        .orderBy("adc_dist", "vec_id")
-        .limit(_ADC_K)
-    )
-
-
 def similarity_ivf_adc_topk(spark, sf_dir):
     """The COMPOSED production ANN path: IVF cell pruning feeding ADC
     compressed-domain ranking — what a real vector index runs at
@@ -386,7 +332,7 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     partitions of the cell-partitioned at-rest index
     (`_ensure_ivf_index`, the similarity_topk_ivf layout), then ranks
     candidates by the integer sum of squared 8-bit code differences
-    (the similarity_adc_topk codebook, trained corpus-wide — stats
+    (the similarity_adc_topk_np codebook, trained corpus-wide — stats
     fetched once at plan build, the IVF-centroid precedent) — so the
     scan is partition-pruned AND runs on 4x-compressed arithmetic,
     with both halves' determinism guarantees intact (exact integer
@@ -518,15 +464,19 @@ ORDER BY adc_dist, d.vec_id LIMIT {_ADC_K}
 
 
 def similarity_adc_topk_np(spark, sf_dir):
-    """Numpy-kernel twin of ``similarity_adc_topk`` (same oracle,
-    bitwise-identical output): the per-row higher-order fold evaluates
-    interpreted per element in Spark (measured 2.3x DuckDB at sf10);
-    here each Arrow batch codes and scores as three C matrix ops — the
-    ``cosine_topk_vectorized`` precedent. The stats row (per-dim
-    min/max + query vector) is fetched once at plan build (one bounded
-    1-row job, closure-captured) — which is why the exact in-plan twin
-    stays the BENCH headline entry: its stats reduce runs inside the
-    timed region, keeping the DuckDB comparison symmetric."""
+    """Top-10 nearest neighbors of vector 0 by asymmetric-distance
+    computation over per-dimension 8-bit codes. Code grid: c =
+    clamp(floor((x - mn_d) * 255 / (mx_d - mn_d)), 0, 255); degenerate
+    dims (mx = mn) code to 0; distance is the integer sum of squared
+    code differences.
+
+    Each Arrow batch codes and scores as three C matrix ops — the
+    ``cosine_topk_vectorized`` precedent: an in-plan per-row
+    higher-order fold gives bitwise-identical rows but evaluates
+    interpreted per element (2.34x DuckDB at sf10 vs 0.21x here). The
+    stats row (per-dim min/max + query vector) is fetched once at plan
+    build (one bounded 1-row job, closure-captured); the bench's
+    DuckDB twin amortizes the same stats (ADC_BENCH_SETUP_SQL)."""
     import numpy as np
     import pandas as pd
 
@@ -588,17 +538,18 @@ def similarity_adc_topk_np(spark, sf_dir):
     )
 
 
-# Bench-twin amortized ADC (round 7, VERDICT r6): the np twin's per-dim
-# min/max + query-vector stats row is fetched ONCE at plan build (a
-# bounded 1-row job, closure-captured) — outside the timed region. The
-# correctness oracle must recompute everything from base tables, but
-# using it unchanged as the bench twin made DuckDB rebuild the per-dim
-# stats inside every timed pass while Spark amortized them — an
-# asymmetry. These statements give the twin the SAME amortization
-# (the IVF_BENCH_SETUP_SQL precedent): the stats table materializes
-# once untimed, and the timed probe codes + scores the corpus against
-# it — exactly what the np twin's timed region does. bench.py guards
-# the substitution on probe==full-oracle result equality.
+# Bench-twin amortized ADC (round 7, VERDICT r6): the per-dim min/max
+# + query-vector stats row of `similarity_adc_topk_np` is fetched ONCE
+# at plan build (a bounded 1-row job, closure-captured) — outside the
+# timed region. The correctness oracle must recompute everything from
+# base tables, but using it unchanged as the bench twin made DuckDB
+# rebuild the per-dim stats inside every timed pass while Spark
+# amortized them — an asymmetry. These statements give the twin the
+# SAME amortization (the IVF_BENCH_SETUP_SQL precedent): the stats
+# table materializes once untimed, and the timed probe codes + scores
+# the corpus against it — exactly what that query's timed region
+# does. bench.py guards the substitution on probe==full-oracle result
+# equality.
 ADC_BENCH_SETUP_SQL = [
     "DROP TABLE IF EXISTS adc_bench_st",
     """CREATE TABLE adc_bench_st AS
@@ -1601,15 +1552,10 @@ QUERIES = {
         IVF_ADC_TOPK_SQL,
         "composed IVF-pruned + ADC compressed-domain top-k (the production ANN stack)",
     ),
-    "similarity_adc_topk": QuerySpec(
-        similarity_adc_topk,
-        ADC_TOPK_SQL,
-        "compressed-domain ADC top-k over per-dim 8-bit codes",
-    ),
     "similarity_adc_topk_np": QuerySpec(
         similarity_adc_topk_np,
         ADC_TOPK_SQL,
-        "numpy-kernel ADC twin (same oracle, Arrow-batched coding)",
+        "compressed-domain ADC top-k over per-dim 8-bit codes (Arrow-batched numpy coding)",
     ),
     "similarity_neardup_blocked": QuerySpec(
         similarity_neardup_blocked, NEARDUP_SQL, "blocked cosine near-dup pairs"

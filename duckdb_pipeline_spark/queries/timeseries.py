@@ -331,9 +331,15 @@ def funnel_top_paths(spark, sf_dir):
     100 TB the window partitions by user (bounded per-user history);
     path cardinality is |event_types|^3 — tiny — so the count shuffle
     is map-side-compressed to almost nothing."""
+    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    return top_paths_from(ev)
+
+
+def top_paths_from(ev):
+    """Trigram tail shared by `funnel_top_paths` and its bucketed twin
+    (ev: user_id, ts, event_id, event_type)."""
     from pyspark.sql import Window
 
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     # both lags must evaluate over the SAME unfiltered window — filter
     # first and the lags re-run over the filtered rows, shifting every
@@ -386,9 +392,15 @@ def user_sessions_gap30(spark, sf_dir):
     partial aggregations on the already-shuffled partitioning.
     Complements stream_session_30m (engine session_window) with the
     relational formulation every warehouse runs."""
+    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    return sessions_from(ev)
+
+
+def sessions_from(ev):
+    """Sessionization tail shared by `user_sessions_gap30` and its
+    bucketed twin (ev: user_id, ts, event_id)."""
     from pyspark.sql import Window
 
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts", 1).over(w))
     new_sess = F.when(
@@ -599,9 +611,10 @@ def scd2_asof_enrich(spark, sf_dir):
     disappears: one Exchange end-to-end instead of dimension windows +
     an equi-join. Bitwise-identical to the join formulation (A/B'd
     row-for-row at sf0.1); measured sf10 2.51 -> 1.42 s (~1.5x the
-    DuckDB twin — off the weak register). When the dimension IS
-    materialized (the operational case), `scd2_asof_enrich_indexed`
-    consumes the bucketed table Exchange-free."""
+    DuckDB twin — off the weak register). A join against a
+    materialized bucketed dimension measured no faster (1.36 s vs
+    1.37-1.42 s at sf10, BASELINE.md round-8 and round-9 addenda) and
+    needs an at-rest layout, so this plan is the only one."""
     from pyspark.sql import Window
 
     ev = load(spark, sf_dir, "events").select(

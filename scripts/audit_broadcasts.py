@@ -50,7 +50,7 @@ SKIP_PREFIXES = (
     "knn_",
     "similarity_neardup_blocked",
     "dedup_embedding_cosine",
-    "similarity_adc_topk",
+    "similarity_adc_topk_np",
     "embedding_gram",
     "embedding_sim_calibration",
     "multimodal_",

@@ -36,7 +36,6 @@ KINDS = {
         lambda s, d: bucketed._ensure_bucketed(s, d, "events"),
         lambda d: bucketed.cache_location(d, "events")[0],
     ),
-    "scd2dim": (bucketed._ensure_scd2_dim, lambda d: f"bkt_scd2dim_{layouts.label(d)}"),
     "toktf": (tokcache._ensure_doc_tf, lambda d: tokcache.cache_location(d)[0]),
     "toktf_unicode": (
         lambda s, d: tokcache._ensure_doc_tf(s, d, "unicode"),

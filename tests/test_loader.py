@@ -121,3 +121,34 @@ def test_declared_inventory_counts_match_docs():
         f"{n_decl}/{n_oracle} — update SURVEY.md"
     )
     assert len(PRIORITY) == 50  # the driver's observed window cap
+
+
+def test_bench_names_declared_and_twin_groups_pinned():
+    """Every bench row names a declared query (a deleted headline name
+    would otherwise show up only as a missing bench row), and the
+    declared names that share one oracle SQL — second plans of one
+    semantic query — are exactly the kept groups, so a new twin has to
+    be added here on purpose."""
+    from collections import defaultdict
+
+    import bench
+    from duckdb_pipeline_spark.queries import collect_all
+
+    qs = collect_all()
+    missing = [n for n in bench.HEADLINE + bench.EXTRA_QUERIES if n not in qs]
+    assert not missing, f"bench rows name undeclared queries: {missing}"
+
+    by_oracle = defaultdict(set)
+    for name, spec in qs.items():
+        if spec.oracle is not None:
+            by_oracle[spec.oracle].add(name)
+    groups = {frozenset(g) for g in by_oracle.values() if len(g) > 1}
+    assert groups == {
+        frozenset({"q3_top_orders", "q3_top_orders_bucketed", "q3_top_orders_plain"}),
+        frozenset({"user_sessions_gap30", "user_sessions_gap30_bucketed"}),
+        frozenset({"retention_cohorts", "retention_cohorts_bucketed"}),
+        frozenset({"funnel_top_paths", "funnel_top_paths_bucketed"}),
+        frozenset({"events_markov_transitions", "events_markov_transitions_bucketed"}),
+        frozenset({"similarity_ivf_pq_topk", "similarity_ivf_pq_topk_indexed"}),
+        frozenset({"dedup_components", "dedup_components_incremental", "dedup_components_star"}),
+    }

@@ -22,6 +22,30 @@ def plan_text(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
+def _shuffle_exchanges(plan: str) -> int:
+    """Count shuffle Exchanges only (broadcast exchanges are the cheap
+    dim-side sends the bucketed design keeps).
+
+    Substring match, NOT line-prefix: in simple-mode explain the left
+    subtree of a join prefixes lines with ':' (e.g.
+    ':  +- Exchange hashpartitioning(...)'), so prefix matching
+    undercounts two-sided shuffles (ADVICE r7).  ReusedExchange nodes
+    reference an already-counted shuffle and are excluded.
+    """
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "Exchange" in line
+        and "BroadcastExchange" not in line
+        and "ReusedExchange" not in line
+        and "SinglePartition" not in line
+    )
+
+
+def _simple_plan(spark, sf_dir, name):
+    return plan_text(collect_all()[name].fn(spark, sf_dir), "simple")
+
+
 def test_q6_filters_push_into_parquet_scan(spark, sf_dir):
     df = collect_all()["q6_forecast_revenue"].fn(spark, sf_dir)
     plan = plan_text(df)
@@ -334,3 +358,70 @@ def test_ivf_adc_composed_prunes_partitions_and_avoids_shuffle(spark, sf_dir):
     # total order: (adc_dist, vec_id) strictly nondecreasing
     keys = [(r.adc_dist, r.vec_id) for r in rows]
     assert keys == sorted(keys)
+
+
+# Bucketed-at-rest layouts: the fact-side work must run with ZERO
+# shuffle Exchanges — the point of the layout is that the one big
+# Exchange moved to ingest time.
+
+
+def test_q3_bucketed_join_and_agg_have_no_fact_exchange(spark, sf_dir):
+    # at test scale the fact tables fit under the auto-broadcast
+    # threshold and Spark (correctly) broadcasts li⋈orders; disable it
+    # here to see the plan the layout exists for — the 100 TB shape
+    # where neither fact side can broadcast
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _simple_plan(spark, sf_dir, "q3_top_orders_bucketed")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in plan  # li ⋈ orders co-located on buckets
+    assert "BroadcastHashJoin" in plan  # customer is the broadcast dim
+    # the only allowed Exchange is the TakeOrdered single-partition
+    # gather; join sides and the orderkey-grouped agg reuse the bucket
+    # distribution
+    assert _shuffle_exchanges(plan) == 0, plan
+
+
+def test_sessions_bucketed_window_has_no_exchange(spark, sf_dir):
+    plan = _simple_plan(spark, sf_dir, "user_sessions_gap30_bucketed")
+    assert "Window" in plan
+    assert _shuffle_exchanges(plan) == 0, plan
+
+
+def test_retention_bucketed_user_rollup_reuses_buckets(spark, sf_dir):
+    plan = _simple_plan(spark, sf_dir, "retention_cohorts_bucketed")
+    # exactly ONE shuffle: the tiny (cohort_day, day_offset) reduce;
+    # the user-keyed day-mask rollup (the 10M-row shuffle in the plain
+    # plan) must consume the bucket distribution. (The 64-row offset
+    # table's BroadcastExchange is not a shuffle.)
+    assert _shuffle_exchanges(plan) == 1, plan
+    # the round-8 mask shape: bit_or rollup directly on the bucketed
+    # scan, bits unpacked by a broadcast nested-loop join
+    assert "bit_or" in plan and "BroadcastNestedLoopJoin" in plan
+    scan_side = plan.split("HashAggregate")[-1]
+    # scan-side agg shuffle-free (the offsets BroadcastExchange prints
+    # inside this segment in tree order; only shuffles are forbidden)
+    assert _shuffle_exchanges(scan_side) == 0, plan
+
+
+def test_funnel_bucketed_window_has_single_tiny_exchange(spark, sf_dir):
+    plan = _simple_plan(spark, sf_dir, "funnel_top_paths_bucketed")
+    assert "Window" in plan
+    # one shuffle only: the |event_types|^3-cardinality path count;
+    # the user window itself is Exchange-free
+    assert _shuffle_exchanges(plan) <= 1, plan
+    # and no Exchange may appear below the Window operator
+    below_window = plan.split("Window")[-1]
+    assert "Exchange" not in below_window, plan
+
+
+def test_range_join_is_single_shuffle_window(spark, sf_dir):
+    """Round-7 rewrite: the 10-minute range 'join' must plan as ONE
+    user-keyed Exchange feeding a Window — no Join operator at all
+    (the old formulation shuffled both sides of an equi+range join)."""
+    plan = _simple_plan(spark, sf_dir, "range_join_next_10m")
+    assert "Window" in plan
+    assert "Join" not in plan
+    assert _shuffle_exchanges(plan) == 1, plan

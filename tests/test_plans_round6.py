@@ -78,7 +78,7 @@ def test_bloom_probe_no_false_negatives_and_broadcast(spark, sf_dir):
     assert all(r.bloom_maybe == 1 for r in rows if r.is_member == 1)
     plan = plan_text(spec.fn(spark, sf_dir), "simple")
     assert "CartesianProduct" not in plan
-    from tests.test_plans_round7 import _shuffle_exchanges
+    from tests.test_plans import _shuffle_exchanges
 
     assert _shuffle_exchanges(plan) <= 4, plan
 
@@ -115,9 +115,9 @@ def test_span_exact_counts_on_planted_corpus(spark):
 def test_adc_codes_bounded_and_self_distance_zero(spark, sf_dir):
     """ADC sanity: integer distances are non-negative and bounded by
     dims * 255^2; the scan excludes the query itself; plan: coding is
-    broadcast-only (stats row + query row), top-k is TakeOrdered — no
-    SortMergeJoin, no cartesian beyond the two broadcast-scalar joins."""
-    spec = collect_all()["similarity_adc_topk"]
+    a map over the scan (stats row fetched at plan build), top-k is
+    TakeOrdered — no SortMergeJoin."""
+    spec = collect_all()["similarity_adc_topk_np"]
     df = spec.fn(spark, sf_dir)
     rows = df.collect()
     assert len(rows) == 10
@@ -242,14 +242,11 @@ def test_span_stats_and_scrub_match_python_reference(spark):
 
 
 def test_adc_absent_query_vector_yields_empty(spark):
-    """A corpus without vec_id 0 must return the EMPTY set from both
-    ADC twins (the oracle's join against the missing query row is
+    """A corpus without vec_id 0 must return the EMPTY set from the
+    ADC query (the oracle's join against the missing query row is
     empty) — not k rows of NULL distance."""
     from duckdb_pipeline_spark.queries import similarity as sim_queries
-    from duckdb_pipeline_spark.queries.similarity import (
-        similarity_adc_topk,
-        similarity_adc_topk_np,
-    )
+    from duckdb_pipeline_spark.queries.similarity import similarity_adc_topk_np
 
     emb = spark.createDataFrame(
         [(i, [float(i), float(i % 3)]) for i in range(1, 30)],
@@ -258,20 +255,9 @@ def test_adc_absent_query_vector_yields_empty(spark):
     orig = sim_queries.load
     sim_queries.load = lambda spark, sf_dir, name: emb
     try:
-        assert similarity_adc_topk(spark, "unused").count() == 0
         assert similarity_adc_topk_np(spark, "unused").count() == 0
     finally:
         sim_queries.load = orig
-
-
-def test_adc_twins_agree_bitwise(spark, sf_dir):
-    """The in-plan exact ADC and the numpy-kernel twin must return the
-    identical top-k (same codes, same integer distances) — the numpy
-    rewrite is only admissible because it is bitwise-equal."""
-    qs = collect_all()
-    a = [(r.vec_id, r.adc_dist) for r in qs["similarity_adc_topk"].fn(spark, sf_dir).collect()]
-    b = [(r.vec_id, r.adc_dist) for r in qs["similarity_adc_topk_np"].fn(spark, sf_dir).collect()]
-    assert a == b and len(a) == 10
 
 
 def test_cms_sketch_is_bounded_and_broadcast(spark, sf_dir):

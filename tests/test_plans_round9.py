@@ -5,8 +5,7 @@ block-nested-loop replaces the join); the IVF variant adds only the
 one cell-group Exchange."""
 
 from duckdb_pipeline_spark.queries import collect_all
-from tests.test_plans import plan_text
-from tests.test_plans_round7 import _shuffle_exchanges
+from tests.test_plans import _shuffle_exchanges, plan_text
 
 
 def _plan(spark, sf_dir, name):

@@ -3,8 +3,7 @@ PQ family's map-only serving discipline and the analytics batch's
 shuffle/broadcast shapes."""
 
 from duckdb_pipeline_spark.queries import collect_all
-from tests.test_plans import plan_text
-from tests.test_plans_round7 import _shuffle_exchanges
+from tests.test_plans import _shuffle_exchanges, plan_text
 
 _JOIN_OPS = (
     "SortMergeJoin",

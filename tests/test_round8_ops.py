@@ -152,22 +152,3 @@ def test_pca_audit_all_bounds_true(spark):
     assert row["eig_sum_matches_trace"] is True
     assert row["eigs_nonneg"] is True
     assert row["pc1_frac_in_range"] is True
-
-
-def test_scd2_indexed_enrich_bucketed_join_no_fact_exchange(spark):
-    """With broadcast disabled, the purchases x dimension join must
-    plan as a sort-merge join whose BOTH sides satisfy the user_id
-    distribution from their bucket specs — the only hashpartitioning
-    Exchange left is the final (attr, day) aggregation."""
-    from duckdb_pipeline_spark.queries.bucketed import scd2_asof_enrich_indexed
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = scd2_asof_enrich_indexed(spark, SF_SMOKE)
-        df.write.mode("overwrite").format("noop").save()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert plan.count("SortMergeJoin") == 1
-    assert plan.count("Exchange hashpartitioning") == 1  # final agg only

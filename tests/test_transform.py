@@ -170,8 +170,7 @@ def test_end_to_end_bucketed_silver_gold_exchange_free(spark, tmp_path):
             ("IssuesEvent", 202, date(2023, 1, 2)): 1,
         }
 
-        from tests.test_plans import plan_text
-        from tests.test_plans_round7 import _shuffle_exchanges
+        from tests.test_plans import _shuffle_exchanges, plan_text
 
         plan = plan_text(gold, "simple")
         assert _shuffle_exchanges(plan) == 0, plan
