@@ -12,15 +12,24 @@ the build container; local-filesystem landing needs neither.
 
 from __future__ import annotations
 
+import contextlib
 import io
 import logging
 import os
+import time
 from datetime import datetime, timedelta
 
 from . import paths
 from .config import EngineConfig
 
 logger = logging.getLogger(__name__)
+
+# HTTP fetch bounds: seconds per connect/read, attempts in all, and the
+# first backoff (doubled per retry). Only connection errors, timeouts
+# and 5xx are retried; any other non-200 raises at once.
+FETCH_TIMEOUT_S = 60
+FETCH_ATTEMPTS = 3
+FETCH_BACKOFF_S = 1.0
 
 try:  # pragma: no cover - availability depends on environment
     import requests  # type: ignore
@@ -53,17 +62,31 @@ class DataLakeIngester:
         return self.upload(data, self.config.bronze_bucket, key)
 
     def collect_data(self, data_url: str) -> io.BytesIO:
-        """HTTP GET into memory; raises on non-200 (ref :36-47)."""
+        """HTTP GET into memory; raises on non-200 (ref :36-47).
+
+        Each attempt is bounded by ``FETCH_TIMEOUT_S``; connection
+        errors, timeouts and 5xx are retried up to ``FETCH_ATTEMPTS``
+        attempts in all, with exponential backoff."""
         if requests is None:
             raise RuntimeError("requests not available in this environment")
         logger.info("The URL to download is: %s", data_url)
-        response = requests.get(data_url)
-        if response.status_code != 200:
-            logger.error(
-                "Failed to download %s. Status: %s", data_url, response.status_code
-            )
-            response.raise_for_status()
-        return io.BytesIO(response.content)
+        for attempt in range(FETCH_ATTEMPTS):
+            last = attempt == FETCH_ATTEMPTS - 1
+            try:
+                response = requests.get(data_url, timeout=FETCH_TIMEOUT_S)
+            except (requests.ConnectionError, requests.Timeout) as exc:
+                if last:
+                    raise
+                logger.warning("Fetch of %s failed (%s); retrying", data_url, exc)
+            else:
+                if response.status_code == 200:
+                    return io.BytesIO(response.content)
+                logger.error(
+                    "Failed to download %s. Status: %s", data_url, response.status_code
+                )
+                if response.status_code < 500 or last:
+                    response.raise_for_status()
+            time.sleep(FETCH_BACKOFF_S * 2**attempt)
 
     def _progress_callback(self, bytes_transferred: int) -> None:
         """Upload-progress hook (ref _s3_progress_callback :116-120):
@@ -75,15 +98,29 @@ class DataLakeIngester:
     def upload(self, data: io.BytesIO, bucket: str, key: str) -> str:
         """Byte-copy into the bronze zone (ref upload_to_s3 :49-62).
 
-        Local-dir buckets (tests) write straight to the filesystem; real
-        buckets go through boto3.
+        Local-dir buckets (tests) land atomically: the bytes go to a
+        hidden temp file in the target's directory (a leading ``.``, so
+        the hour's bronze glob and Spark's file index skip it), which is
+        then renamed onto the target, so a crash never leaves a torn
+        ``.json.gz`` for ``serialise_raw_data`` to parse. Real buckets go
+        through boto3.
         """
         if bucket.startswith("/") or self.config.scheme in ("", "file://"):
             target = os.path.join(bucket, key)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
+            parent = os.path.dirname(target)
+            os.makedirs(parent, exist_ok=True)
             payload = data.getvalue()
-            with open(target, "wb") as f:
-                f.write(payload)
+            tmp = os.path.join(parent, f".{os.path.basename(target)}.{os.getpid()}.tmp")
+            try:
+                with open(tmp, "wb") as f:
+                    f.write(payload)
+                    f.flush()
+                    os.fsync(f.fileno())
+                os.replace(tmp, target)
+            except BaseException:
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(tmp)
+                raise
             self._progress_callback(len(payload))
             logger.info("Landed %s", target)
             return target

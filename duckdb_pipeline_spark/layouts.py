@@ -29,8 +29,8 @@ No userland rewrite can restore ``ctime``, so a same-size rewrite whose
 mtime was put back still reaches the hash.
 
 Publish: ``build`` writes into a ``mkdtemp`` staging directory beside
-the target, the marker is written into it, and ``sinks._publish``
-swaps it in. A build that raises (or a process that dies) mid-build
+the target (``stage-<name>-*``, a name Spark reads), the marker is
+written into it, and ``sinks._publish`` swaps it in. A build that raises (or a process that dies) mid-build
 leaves the previous layout and its marker serving.
 """
 
@@ -127,7 +127,9 @@ def ensure(spark, kind: str, sf_dir: str, sources, spec: dict, build) -> str:
         build(staging)
         _write_marker(staging, {"spec": spec, "files": sig, "sha256": digest})
 
-    _publish(path, publish, f"_stage_{os.path.basename(path)}_")
+    # no leading "_" or ".": bucketed builds point a catalog table at the
+    # staging dir, and Spark's file index ignores such names as hidden
+    _publish(path, publish, f"stage-{os.path.basename(path)}-")
     return path
 
 
@@ -142,10 +144,11 @@ def ensure_bucketed(
     """:func:`ensure` for ``make_df()`` written ``bucketBy(n_buckets,
     key).sortBy(*sort_cols)`` (through a throwaway external table at the
     staging directory) and served as catalog table ``tname``, which is
-    returned. ``make_df`` must already be hash-partitioned on ``key``
-    into ``n_buckets``, so each task writes its one bucket file. After a
-    build, or in a session that has not seen it, ``tname`` is registered
-    at the published path by ``CREATE TABLE ... CLUSTERED BY ... LOCATION``."""
+    returned. ``make_df`` must already be hash-partitioned on ``key`` by
+    ``sinks.bucket_aligned``, so each bucket is written by one task, as
+    one file. After a build, or in a session that has not seen it,
+    ``tname`` is registered at the published path by ``CREATE TABLE ...
+    CLUSTERED BY ... LOCATION``."""
     spec = {**spec, "n_buckets": n_buckets, "key": key, "sort": list(sort_cols)}
     built = []
 

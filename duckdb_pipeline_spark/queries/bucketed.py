@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import layouts
+from ..sinks import bucket_aligned
 from . import QuerySpec
 from .common import load
 from .relational import Q3_SQL, q3_top_orders
@@ -47,13 +48,15 @@ from .timeseries import (
     top_paths_from,
 )
 
-_N_BUCKETS = 32  # = the local core count. A bucketed scan runs ONE
-# task per bucket, so n_buckets is the parallelism ceiling for every
-# downstream stage that reuses the distribution: the first cut used 8
-# and at sf10 the saved Exchange was exactly cancelled by 8-way sorts
-# on 32 cores (sessions twin measured 1.41 s == plain). Production
-# picks ~(table bytes / target partition bytes), core-count aligned;
-# the plan shape (zero fact-side Exchange) is bucket-count-independent,
+_N_BUCKETS = 32  # = the core count of the sf10 bench host. A bucketed scan
+# runs ONE task per bucket, so n_buckets is the parallelism ceiling for
+# every downstream stage that reuses the distribution: the first cut
+# used 8 and at sf10 the saved Exchange was exactly cancelled by 8-way
+# sorts on 32 cores (sessions twin measured 1.41 s == plain). The build
+# itself runs one task per slot, rounded down to a divisor of n_buckets
+# (`sinks.bucket_aligned`), so fewer cores do not pay for 32 write
+# tasks. Production picks ~(table bytes / target partition bytes),
+# core-count aligned; the plan shape (zero fact-side Exchange) is bucket-count-independent,
 # which is what the plan tests pin.
 
 # (table, bucket key, sort cols) — sort cols make the window's
@@ -81,12 +84,12 @@ def _ensure_bucketed(spark, sf_dir: str, table: str) -> str:
     ``table`` and register it in this session's catalog; returns the
     catalog table name."""
     key, sort_cols = _SPECS[table]
-    # one file per bucket (repartition hash == bucket-id hash): the
+    # one file per bucket (each bucket is written by one task): the
     # layout a window consumes with a near-no-op per-partition sort
     return layouts.ensure_bucketed(
         spark, cache_location(sf_dir, table)[0], f"bucketed/{{label}}/{table}",
         sf_dir, [table], {},
-        lambda: load(spark, sf_dir, table).repartition(_N_BUCKETS, F.col(key)),
+        lambda: bucket_aligned(load(spark, sf_dir, table), _N_BUCKETS, key),
         _N_BUCKETS, key, sort_cols,
     )
 

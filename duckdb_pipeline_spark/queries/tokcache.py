@@ -37,6 +37,7 @@ import os
 from pyspark.sql import functions as F
 
 from .. import layouts
+from ..sinks import bucket_aligned
 from .common import load
 
 _N_BUCKETS = 32  # parallelism ceiling of the bucketed scan; see
@@ -96,21 +97,24 @@ def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
     (doc_id, token, tf) projection of `documents` as a bucketed(doc_id)
     catalog table; returns the table name."""
 
-    # ONE shuffle, of the RAW docs: repartition by doc_id BEFORE the
-    # explode. HashPartitioning(doc_id, N) satisfies the groupBy's
-    # clustering AND is exactly the bucket-id hash (Murmur3 pmod N), so
-    # the aggregation runs Exchange-free and each task writes its one
-    # bucket file. Shuffling the tf rows instead moves ~3x the bytes
-    # (each token row re-carries doc_id/source). The cost is a fold
-    # stage capped at _N_BUCKETS tasks; a same-session A/B
-    # (scripts/ab_toktf_r15.py) still measured 0.41 vs 0.58 s at sf0.1
-    # and 2.19 vs 8.25 s at sf10 on 32 cores for this shape. With cores
-    # >> _N_BUCKETS, raise _N_BUCKETS rather than shuffling twice.
+    # ONE shuffle, of the RAW docs: partition by doc_id BEFORE the
+    # explode. `bucket_aligned`'s HashPartitioning(doc_id, k) satisfies
+    # the groupBy's clustering AND sends each bucket (Murmur3 pmod
+    # _N_BUCKETS) to exactly one of its k tasks, so the aggregation runs
+    # Exchange-free and each bucket is written as one file. Shuffling the
+    # tf rows instead moves ~3x the bytes (each token row re-carries
+    # doc_id/source). The cost is a fold stage capped at k <= _N_BUCKETS
+    # tasks (k = the session's slots rounded down to a divisor of
+    # _N_BUCKETS); a same-session A/B (scripts/ab_toktf_r15.py, since
+    # deleted) still measured 0.41 vs 0.58 s at sf0.1 and 2.19 vs 8.25 s
+    # at sf10 on 32 cores for this shape. With cores >> _N_BUCKETS,
+    # raise _N_BUCKETS rather than shuffling twice.
     def tf():
         return (
-            load(spark, sf_dir, "documents")
-            .select("doc_id", "source", "text")
-            .repartition(_N_BUCKETS, F.col("doc_id"))
+            bucket_aligned(
+                load(spark, sf_dir, "documents").select("doc_id", "source", "text"),
+                _N_BUCKETS, "doc_id",
+            )
             .select(
                 "doc_id",
                 "source",
@@ -225,8 +229,7 @@ def append_doc_tf(
     # same one-shuffle shape as the full build: partition the raw batch
     # by doc_id first, explode + fold Exchange-free, write bucket-aligned
     batch_tf = (
-        new_docs.select("doc_id", "source", "text")
-        .repartition(_N_BUCKETS, F.col("doc_id"))
+        bucket_aligned(new_docs.select("doc_id", "source", "text"), _N_BUCKETS, "doc_id")
         .select(
             "doc_id",
             "source",

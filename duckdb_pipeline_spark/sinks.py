@@ -229,8 +229,7 @@ def compact_bucketed(spark, table_name: str) -> int:
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
         shutil.rmtree(path, ignore_errors=True)
         writer = (
-            spark.read.parquet(staging)
-            .repartition(n_buckets, *[F.col(c) for c in bucket_cols])
+            bucket_aligned(spark.read.parquet(staging), n_buckets, *bucket_cols)
             .write.bucketBy(n_buckets, *bucket_cols)
         )
         if sort_cols:
@@ -348,6 +347,28 @@ def write_sorted_parquet(
     writer.parquet(path)
 
 
+def bucket_tasks(n_buckets: int, slots: int) -> int:
+    """The task count of a bucketed write: the largest divisor of
+    ``n_buckets`` that is not above ``slots`` (at least 1)."""
+    return max(d for d in range(1, min(n_buckets, slots) + 1) if n_buckets % d == 0)
+
+
+def bucket_aligned(df: DataFrame, n_buckets: int, *keys: str) -> DataFrame:
+    """``df`` hash-partitioned on ``keys`` into k =
+    ``bucket_tasks(n_buckets, defaultParallelism)`` tasks, the input
+    shape of a ``bucketBy(n_buckets, *keys)`` write.
+
+    Spark's repartition hash IS the bucket-id hash (``pmod(murmur3(key),
+    n)``), and since k divides n, ``pmod(h, n) mod k == pmod(h, k)``: task
+    t receives exactly the buckets b with ``b mod k == t``. Each bucket
+    is thus written by one task, as one file per (partition, batch), the
+    same files a repartition into n tasks writes, but with k task
+    commits and shuffle reads instead of n. With at least n slots, k = n.
+    """
+    k = bucket_tasks(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(k, *[F.col(c) for c in keys])
+
+
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,
@@ -369,12 +390,12 @@ def write_bucketed_table(
 
     ``partition_cols`` compose with bucketing (the production lake
     layout: partition by day for pruning, bucket by the join/agg key
-    for Exchange-free consumption). The input is pre-repartitioned by
-    the bucket key into n_buckets tasks — Spark's repartition hash IS
-    the bucket-id hash (Murmur3 pmod n), so each task writes exactly
-    its one bucket file per partition instead of n_tasks x n_buckets
-    fragments. Appends add one file per (partition, bucket) per batch;
-    `compact_small_files` is the maintenance pass.
+    for Exchange-free consumption). The input is hash-partitioned on
+    the bucket key by `bucket_aligned`, into as many tasks as the
+    session has slots (a divisor of n_buckets), so each bucket is
+    written by one task: one file per (partition, bucket) per batch
+    instead of n_tasks x n_buckets fragments. `compact_small_files` is
+    the maintenance pass.
 
     IDEMPOTENCE (ADVICE r8): append mode assumes each source batch is
     ingested EXACTLY ONCE — re-running the same hour would silently
@@ -395,30 +416,17 @@ def write_bucketed_table(
         marker = os.path.join(manifest, batch_id)
         if os.path.exists(marker):
             return table_name
+    writer = bucket_aligned(df, n_buckets, bucket_key).write.bucketBy(n_buckets, bucket_key)
+    if sort_cols:
+        writer = writer.sortBy(*sort_cols)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
     if mode == "overwrite" or not spark.catalog.tableExists(table_name):
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        writer = (
-            df.repartition(n_buckets, F.col(bucket_key))
-            .write.bucketBy(n_buckets, bucket_key)
-            .option("path", path)
-            .mode("overwrite")
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.saveAsTable(table_name)
+        writer = writer.option("path", path).mode("overwrite")
     else:
-        writer = (
-            df.repartition(n_buckets, F.col(bucket_key))
-            .write.bucketBy(n_buckets, bucket_key)
-            .mode("append")
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.saveAsTable(table_name)
+        writer = writer.mode("append")
+    writer.saveAsTable(table_name)
     if marker is not None:
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         with open(marker, "w") as fh:

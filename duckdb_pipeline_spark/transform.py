@@ -17,10 +17,12 @@ Key semantic shims vs DuckDB (SURVEY.md §4):
   fuses scan+project+write into one stage (no materialization cost).
 
 Scale notes: each hourly/daily batch is embarrassingly partition-
-parallel (one task per input file); the only shuffle in the whole
-pipeline is the gold aggregation's partial→final hash aggregate, keyed
-on (event_type, repo_id, repo_name, repo_url, day) — high-cardinality
-enough not to skew.
+parallel (one task per input file). The reference-parity path has one
+shuffle, the gold aggregation's partial→final hash aggregate, keyed on
+(event_type, repo_id, repo_name, repo_url, day) — high-cardinality
+enough not to skew. The bucketed path moves its one shuffle to the
+hourly silver append (hash of repo_id into one task per slot,
+``sinks.bucket_aligned``), so its gold aggregate runs with none.
 """
 
 from __future__ import annotations

@@ -87,7 +87,7 @@ class Layout:
 
     def assert_no_debris(self) -> None:
         parent, name = os.path.split(self.call["path"])
-        assert not glob.glob(os.path.join(parent, f"_stage_{name}_*"))
+        assert not glob.glob(os.path.join(parent, f"stage-{name}-*"))
         assert not os.path.exists(os.path.join(parent, f"_old_{name}"))
 
 

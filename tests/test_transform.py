@@ -179,6 +179,100 @@ def test_end_to_end_bucketed_silver_gold_exchange_free(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
 
+def _land_hours(lake, hours) -> EngineConfig:
+    """Bronze ``{hour: rows}`` as one .json.gz per hour of 2023-01-01
+    under ``lake``; returns the local-dir lake config."""
+    for hour, rows in hours.items():
+        bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / str(hour)
+        os.makedirs(bronze_dir)
+        payload = b"\n".join(json.dumps(r).encode() for r in rows)
+        with gzip.open(bronze_dir / f"2023-1-1-{hour}.json.gz", "wb") as f:
+            f.write(payload)
+    return EngineConfig(
+        bronze_bucket=str(lake / "bronze"),
+        silver_bucket=str(lake / "silver"),
+        gold_bucket=str(lake / "gold"),
+        scheme="",
+    )
+
+
+def _many_repos(first_id: int, n: int) -> list[dict]:
+    """``n`` events shaped like RAW_ROWS, one distinct repo_id each."""
+    base = RAW_ROWS[0]
+    return [
+        {**base, "id": first_id + i, "repo": {**base["repo"], "id": first_id + i}}
+        for i in range(n)
+    ]
+
+
+def test_bucket_tasks_is_largest_divisor_within_slots():
+    from duckdb_pipeline_spark.sinks import bucket_tasks
+
+    assert [bucket_tasks(32, s) for s in (1, 2, 4, 6, 32, 64)] == [1, 2, 4, 4, 32, 32]
+
+
+def test_bucketed_silver_one_file_per_bucket_per_batch(spark, tmp_path):
+    """Two hourly appends through a k-task write (k = 4 slots < 32
+    buckets) still leave at most one file per (day, bucket, batch), and
+    every file holds only rows of the bucket its name carries."""
+    import re
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    cfg = _land_hours(tmp_path / "lake", {12: _many_repos(0, 300), 13: _many_repos(1000, 300)})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    try:
+        for hour in (12, 13):
+            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+        day = tmp_path / "lake" / "silver" / "gharchive/events" / "clean_bucketed" / "process_day=2023-01-01"
+        files = sorted(f for f in os.listdir(day) if f.startswith("part-"))
+        # part-<task>-<write job uuid>_<bucket id>.c<n>...
+        keys = [re.match(r"part-\d{5}-(.+)_(\d{5})\.c\d{3}", f).groups() for f in files]
+        assert len({batch for batch, _ in keys}) == 2
+        assert max(Counter(keys).values()) == 1
+        assert len({b for _, b in keys}) > 16  # the rows fill most buckets
+        for f, (_, bucket) in zip(files, keys):
+            got = spark.read.parquet(str(day / f)).select(
+                F.pmod(F.hash("repo_id"), F.lit(32)).alias("b")
+            ).distinct().collect()
+            assert [r.b for r in got] == [int(bucket)], f
+        assert spark.table(t._bucketed_silver_table()).count() == 600
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
+def test_bucketed_silver_append_runs_one_task_per_slot(spark, tmp_path):
+    """The hourly append shuffles into defaultParallelism (4) tasks,
+    not into the table's 32 buckets."""
+    import re
+
+    cfg = _land_hours(tmp_path / "lake", {12: RAW_ROWS, 13: _many_repos(1000, 50)})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    sc = spark.sparkContext
+    assert sc.defaultParallelism == 4
+    try:
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        sc.setJobDescription("bucketed_append_plan")
+        try:
+            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 13))
+        finally:
+            sc.setJobDescription(None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = spark._jsparkSession.sharedState().statusStore()
+        execs = store.executionsList()
+        plans = [
+            execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+            if execs.apply(i).description() == "bucketed_append_plan"
+        ]
+        assert plans
+        assert any(re.search(r"hashpartitioning\(repo_id#\d+L?, 4\)", p) for p in plans), plans
+        assert not any(re.search(r"hashpartitioning\(repo_id#\d+L?, 32\)", p) for p in plans)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
 def test_ingester_local_landing(tmp_path):
     """Bronze byte-copy landing to a local-dir bucket (no network)."""
     import io
@@ -214,3 +308,87 @@ def test_read_parquet_glob_merge_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "v", "score"}
     rows = {r.id: r for r in merged.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
+
+
+def test_ingester_landing_is_atomic(tmp_path):
+    """A landing whose write raises leaves neither the target nor a temp
+    file (nor touches a previous landing), and a replayed upload
+    overwrites the target byte for byte."""
+    import io
+
+    from duckdb_pipeline_spark.ingest import DataLakeIngester
+
+    class Torn(io.BytesIO):
+        def getvalue(self):
+            return "not bytes"  # the binary write raises after open
+
+    cfg = EngineConfig(bronze_bucket=str(tmp_path / "bronze"), scheme="")
+    ing = DataLakeIngester("gharchive/events", cfg)
+    key = "gharchive/events/2024-10-01/07/2024-10-1-7.json.gz"
+    hour_dir = tmp_path / "bronze" / "gharchive/events/2024-10-01/07"
+    with pytest.raises(TypeError):
+        ing.upload(Torn(), cfg.bronze_bucket, key)
+    assert os.listdir(hour_dir) == []
+
+    out = ing.upload(io.BytesIO(b"first"), cfg.bronze_bucket, key)
+    with pytest.raises(TypeError):
+        ing.upload(Torn(), cfg.bronze_bucket, key)
+    assert os.listdir(hour_dir) == [os.path.basename(out)]
+    with open(out, "rb") as f:
+        assert f.read() == b"first"
+
+    payload = bytes(range(256)) * 3
+    assert ing.upload(io.BytesIO(payload), cfg.bronze_bucket, key) == out
+    assert os.listdir(hour_dir) == [os.path.basename(out)]
+    with open(out, "rb") as f:
+        assert f.read() == payload
+
+
+def test_collect_data_retries_bounded(monkeypatch):
+    """Connection errors and 5xx are retried with backoff, a 404 raises
+    at once, and every call carries the fixed timeout (offline: the
+    HTTP client is replaced)."""
+    import requests
+
+    from duckdb_pipeline_spark import ingest
+
+    class Resp:
+        def __init__(self, status, content=b""):
+            self.status_code, self.content = status, content
+
+        def raise_for_status(self):
+            raise requests.HTTPError(f"status {self.status_code}")
+
+    def fake(outcomes):
+        calls = []
+
+        def get(url, **kw):
+            calls.append(kw)
+            out = outcomes[len(calls) - 1]
+            if isinstance(out, Exception):
+                raise out
+            return out
+
+        return get, calls
+
+    sleeps = []
+    monkeypatch.setattr(ingest.time, "sleep", sleeps.append)
+    ing = ingest.DataLakeIngester("gharchive/events", EngineConfig(scheme=""))
+
+    get, calls = fake([requests.ConnectionError("reset"), Resp(503), Resp(200, b"body")])
+    monkeypatch.setattr(ingest.requests, "get", get)
+    assert ing.collect_data("http://example.invalid/x.json.gz").getvalue() == b"body"
+    assert calls == [{"timeout": ingest.FETCH_TIMEOUT_S}] * 3
+    assert sleeps == [ingest.FETCH_BACKOFF_S, 2 * ingest.FETCH_BACKOFF_S]
+
+    get, calls = fake([Resp(404)])
+    monkeypatch.setattr(ingest.requests, "get", get)
+    with pytest.raises(requests.HTTPError):
+        ing.collect_data("http://example.invalid/x.json.gz")
+    assert calls == [{"timeout": ingest.FETCH_TIMEOUT_S}]
+
+    get, calls = fake([requests.Timeout("slow")] * ingest.FETCH_ATTEMPTS)
+    monkeypatch.setattr(ingest.requests, "get", get)
+    with pytest.raises(requests.Timeout):
+        ing.collect_data("http://example.invalid/x.json.gz")
+    assert len(calls) == ingest.FETCH_ATTEMPTS
