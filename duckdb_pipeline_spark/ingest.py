@@ -12,7 +12,6 @@ the build container; local-filesystem landing needs neither.
 
 from __future__ import annotations
 
-import contextlib
 import io
 import logging
 import os
@@ -21,6 +20,7 @@ from datetime import datetime, timedelta
 
 from . import paths
 from .config import EngineConfig
+from .sinks import replace_file
 
 logger = logging.getLogger(__name__)
 
@@ -98,29 +98,17 @@ class DataLakeIngester:
     def upload(self, data: io.BytesIO, bucket: str, key: str) -> str:
         """Byte-copy into the bronze zone (ref upload_to_s3 :49-62).
 
-        Local-dir buckets (tests) land atomically: the bytes go to a
-        hidden temp file in the target's directory (a leading ``.``, so
-        the hour's bronze glob and Spark's file index skip it), which is
-        then renamed onto the target, so a crash never leaves a torn
-        ``.json.gz`` for ``serialise_raw_data`` to parse. Real buckets go
-        through boto3.
+        Local-dir buckets (tests) land atomically through
+        `sinks.replace_file` (a hidden temp file, which the hour's bronze
+        glob and Spark's file index skip, renamed onto the target), so a
+        crash never leaves a torn ``.json.gz`` for ``serialise_raw_data``
+        to parse. Real buckets go through boto3.
         """
         if bucket.startswith("/") or self.config.scheme in ("", "file://"):
             target = os.path.join(bucket, key)
-            parent = os.path.dirname(target)
-            os.makedirs(parent, exist_ok=True)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
             payload = data.getvalue()
-            tmp = os.path.join(parent, f".{os.path.basename(target)}.{os.getpid()}.tmp")
-            try:
-                with open(tmp, "wb") as f:
-                    f.write(payload)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, target)
-            except BaseException:
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(tmp)
-                raise
+            replace_file(target, payload)
             self._progress_callback(len(payload))
             logger.info("Landed %s", target)
             return target

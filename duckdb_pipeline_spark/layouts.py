@@ -30,8 +30,9 @@ mtime was put back still reaches the hash.
 
 Publish: ``build`` writes into a ``mkdtemp`` staging directory beside
 the target (``stage-<name>-*``, a name Spark reads), the marker is
-written into it, and ``sinks._publish`` swaps it in. A build that raises (or a process that dies) mid-build
-leaves the previous layout and its marker serving.
+written into it, and ``sinks._publish`` swaps it in. A build that
+raises (or a process that dies) mid-build leaves the previous layout
+and its marker serving.
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ import hashlib
 import json
 import os
 
-from .sinks import _publish
+from . import sinks
 
 MARKER = "_SRC.json"
 
@@ -88,10 +89,7 @@ def _content_hash(sf_dir: str, files: list[str]) -> str:
 
 
 def _write_marker(path: str, stamp: dict) -> None:
-    tmp = os.path.join(path, MARKER + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(stamp, fh)
-    os.replace(tmp, os.path.join(path, MARKER))
+    sinks.replace_file(os.path.join(path, MARKER), json.dumps(stamp).encode())
 
 
 def ensure(spark, kind: str, sf_dir: str, sources, spec: dict, build) -> str:
@@ -129,52 +127,30 @@ def ensure(spark, kind: str, sf_dir: str, sources, spec: dict, build) -> str:
 
     # no leading "_" or ".": bucketed builds point a catalog table at the
     # staging dir, and Spark's file index ignores such names as hidden
-    _publish(path, publish, f"stage-{os.path.basename(path)}-")
+    sinks._publish(path, publish, f"stage-{os.path.basename(path)}-")
     return path
-
-
-def _ddl(schema) -> str:
-    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
 
 
 def ensure_bucketed(
     spark, tname: str, kind: str, sf_dir: str, sources, spec: dict, make_df,
     n_buckets: int, key: str, sort_cols: list[str],
 ) -> str:
-    """:func:`ensure` for ``make_df()`` written ``bucketBy(n_buckets,
-    key).sortBy(*sort_cols)`` (through a throwaway external table at the
-    staging directory) and served as catalog table ``tname``, which is
-    returned. ``make_df`` must already be hash-partitioned on ``key`` by
-    ``sinks.bucket_aligned``, so each bucket is written by one task, as
-    one file. After a build, or in a session that has not seen it,
-    ``tname`` is registered at the published path by ``CREATE TABLE ...
-    CLUSTERED BY ... LOCATION``."""
+    """:func:`ensure` for ``make_df()`` written into ``n_buckets``
+    buckets on ``key``, sorted by ``sort_cols``, by
+    ``sinks.write_bucketed_dir`` and served as catalog table ``tname``,
+    which is returned. After a build, or in a session that has not
+    seen it, ``tname`` is registered at the published path by
+    ``sinks.register_bucketed_table``."""
     spec = {**spec, "n_buckets": n_buckets, "key": key, "sort": list(sort_cols)}
     built = []
 
     def build(staging: str) -> None:
         df = make_df()
-        tmp = f"{tname}__staging"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        try:
-            (
-                df.write.bucketBy(n_buckets, key)
-                .sortBy(*sort_cols)
-                .option("path", staging)
-                .mode("overwrite")
-                .saveAsTable(tmp)
-            )
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+        sinks.write_bucketed_dir(df, staging, n_buckets, [key], sort_cols)
         built.append(df.schema)
 
     path = ensure(spark, kind, sf_dir, sources, spec, build)
     if built or not spark.catalog.tableExists(tname):
         schema = built[0] if built else spark.read.parquet(path).schema
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        spark.sql(
-            f"CREATE TABLE {tname} ({_ddl(schema)}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({', '.join(sort_cols)}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-        )
+        sinks.register_bucketed_table(spark, tname, path, schema, n_buckets, [key], sort_cols)
     return tname

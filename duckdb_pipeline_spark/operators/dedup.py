@@ -602,12 +602,6 @@ def simhash_fingerprints_mapped(
                 )
                 counts.append(len(sh))
             if not ids:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series([], dtype="int64"),
-                        "simhash": pd.Series([], dtype="int64"),
-                    }
-                )
                 continue
             # one numpy pass over the whole Arrow batch: per-doc ±1 bit
             # sums via reduceat at the doc boundaries

@@ -169,13 +169,7 @@ def cosine_pairs_blocked_vectorized(
         ids = pdf[id_col].to_numpy()
         n = len(ids)
         if n < 2:
-            return pd.DataFrame(
-                {
-                    "vec_a": pd.Series([], dtype="int64"),
-                    "vec_b": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
+            return pd.DataFrame()
         V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
         # float64 sums of floor() terms are EXACTLY the integer sums as
         # long as every partial stays below 2^53: each |term| <
@@ -249,12 +243,6 @@ def cosine_topk_vectorized(
         for pdf in batches:
             pdf = pdf.dropna(subset=[vec_col])
             if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series([], dtype="int64"),
-                        "cosine": pd.Series([], dtype="float64"),
-                    }
-                )
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
@@ -409,16 +397,9 @@ def lsh_topk_vectorized(
     nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
 
     def score(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf.dropna(subset=[vec_col])
             if not len(pdf):
-                yield empty
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             Vi = np.floor(V * SCALE).astype("int64")
@@ -431,7 +412,6 @@ def lsh_topk_vectorized(
                 ok = codes == qb
             ok &= pdf[id_col].to_numpy() != query_id
             if not ok.any():
-                yield empty
                 continue
             Vs = V[ok]
             dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
@@ -531,23 +511,14 @@ def ivf_topk_vectorized(
     probe = set(np.lexsort((np.arange(len(qs)), -qs))[:n_probe].tolist())
 
     def score(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf.dropna(subset=[vec_col])
             if not len(pdf):
-                yield empty
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             cells = cell_scores(V).argmax(axis=1)  # first max == smallest id
             ok = np.isin(cells, list(probe)) & (pdf[id_col].to_numpy() != query_id)
             if not ok.any():
-                yield empty
                 continue
             Vs = V[ok]
             dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
@@ -692,17 +663,9 @@ def ivf_topk_pruned(
     idx = spark.read.parquet(index_path)
 
     def rerank(batches):
-        empty = pd.DataFrame(
-            {
-                id_col: pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf[pdf[id_col] != query_id].dropna(subset=[vec_col])
             if not len(pdf):
-                yield empty
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
@@ -799,18 +762,9 @@ def ann_recall_audit(
     qids = np.asarray(live_q, dtype="int64")
 
     def partials(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                id_col: pd.Series([], dtype="int64"),
-                "side": pd.Series([], dtype="object"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf.dropna(subset=[vec_col])
             if not len(pdf):
-                yield empty
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
             ids = pdf[id_col].to_numpy().astype("int64")
@@ -929,14 +883,6 @@ def gram_matrix_partials(
                     .sum(axis=0)
                 )
         if acc is None:
-            yield pd.DataFrame(
-                {
-                    "i": pd.Series([], dtype="int32"),
-                    "j": pd.Series([], dtype="int32"),
-                    "s": pd.Series([], dtype="int64"),
-                    "n": pd.Series([], dtype="int64"),
-                }
-            )
             return
         d = acc.shape[0]
         iu, ju = np.triu_indices(d)
@@ -1114,17 +1060,10 @@ def knn_join_partials(
     )
 
     def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         A = pdf[pdf["side"] == 0]
         Bp = pdf[pdf["side"] == 1].sort_values("id")
         if A.empty or Bp.empty:
-            return empty
+            return pd.DataFrame()
         ids_a = A["id"].to_numpy()
         ids_b = Bp["id"].to_numpy()
         Va = np.stack(A["vec"].to_numpy()).astype("float64")
@@ -1157,7 +1096,7 @@ def knn_join_partials(
                     }
                 )
             )
-        return pd.concat(out, ignore_index=True) if out else empty
+        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
     return both.groupBy("ablk", "bblk").applyInPandas(
         block_topk, "vec_id long, nbr_id long, cosine double"
@@ -1236,19 +1175,10 @@ def knn_join_within_cells(
         ).where(F.col(vec_col).isNotNull())
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "rk": pd.Series([], dtype="int32"),
-                "cosine": pd.Series([], dtype="float64"),
-                "cell": pd.Series([], dtype="int32"),
-            }
-        )
         pdf = pdf.sort_values(id_col)
         n = len(pdf)
         if n < 2:
-            return empty
+            return pd.DataFrame()
         cell = int(pdf["cell"].iloc[0])
         ids = pdf[id_col].to_numpy()
         V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
@@ -1272,7 +1202,9 @@ def knn_join_within_cells(
             # survivors and keep the first k
             f["rk"] = f.groupby("vec_id").cumcount().astype("int32") + 1
             frames.append(f[f["rk"] <= k])
-        out = pd.concat(frames, ignore_index=True) if frames else empty
+        if not frames:
+            return pd.DataFrame()
+        out = pd.concat(frames, ignore_index=True)
         out["cell"] = np.int32(cell)
         return out[["vec_id", "nbr_id", "rk", "cosine", "cell"]]
 
@@ -1355,17 +1287,10 @@ def knn_probe_index(
     both = a.unionByName(b)
 
     def cell_probe(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         A = pdf[pdf["side"] == 0]
         Bp = pdf[pdf["side"] == 1].sort_values("id")
         if A.empty or Bp.empty:
-            return empty
+            return pd.DataFrame()
         ids_a = A["id"].to_numpy()
         ids_b = Bp["id"].to_numpy()
         Va = np.stack(A["vec"].to_numpy()).astype("float64")
@@ -1400,7 +1325,7 @@ def knn_probe_index(
                     }
                 )
             )
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
 
     from pyspark.sql import Window
 
@@ -1506,19 +1431,8 @@ def pq_train_partials(
                         }
                     )
                 )
-        yield (
-            pd.concat(frames, ignore_index=True)
-            if frames
-            else pd.DataFrame(
-                {
-                    "m": pd.Series([], dtype="int32"),
-                    "code": pd.Series([], dtype="int64"),
-                    "i": pd.Series([], dtype="int32"),
-                    "s": pd.Series([], dtype="int64"),
-                    "n": pd.Series([], dtype="int64"),
-                }
-            )
-        )
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
 
     return embeddings.select(vec_col).mapInPandas(
         fold, "m int, code long, i int, s long, n long"
@@ -1639,13 +1553,6 @@ def farthest_point_partials(
                     "vid": pd.Series([best_id], dtype="int64"),
                 }
             )
-        else:
-            yield pd.DataFrame(
-                {
-                    "md": pd.Series([], dtype="int64"),
-                    "vid": pd.Series([], dtype="int64"),
-                }
-            )
 
     return embeddings.select(id_col, vec_col).mapInPandas(fold, "md long, vid long")
 
@@ -1712,20 +1619,12 @@ def knn_join_multiprobe(
     )
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "nbr_id": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-                "cell": pd.Series([], dtype="int32"),
-            }
-        )
         pdf = pdf.sort_values(id_col)
         cell = int(pdf["cell"].iloc[0])
         build = pdf[pdf["is_build"]]
         nb = len(build)
         if nb == 0 or len(pdf) < 2:
-            return empty
+            return pd.DataFrame()
         bids = build[id_col].to_numpy()
         BV = np.stack(build[vec_col].to_numpy()).astype("float64")
         rb = np.sqrt(
@@ -1760,7 +1659,9 @@ def knn_join_multiprobe(
             f = f[f["vec_id"] != f["nbr_id"]]
             f["rk_local"] = f.groupby("vec_id").cumcount() + 1
             frames.append(f[f["rk_local"] <= k].drop(columns=["rk_local"]))
-        out = pd.concat(frames, ignore_index=True) if frames else empty
+        if not frames:
+            return pd.DataFrame()
+        out = pd.concat(frames, ignore_index=True)
         out["cell"] = np.int32(cell)
         return out[["vec_id", "nbr_id", "cosine", "cell"]]
 

@@ -3,7 +3,7 @@ queries that read them.
 
 The round-6 scale evidence (BASELINE.md round-6 addendum) measured the
 payoff of a bucketed at-rest layout at sf10: lineitem+orders written
-``bucketBy(orderkey) sortBy(orderkey)`` runs the join+agg with ONE
+bucketed and sorted by orderkey runs the join+agg with ONE
 Exchange in 1.93 s vs 3.06 s plain (-37%). The layouts here make that
 a STANDING, oracle-checked, plan-pinned artifact: `q3_top_orders`
 serves from the orderkey-bucketed facts (declared again below as
@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import layouts
-from ..sinks import bucket_aligned
 from . import QuerySpec
 from .common import load
 from .relational import Q3_SQL, q3_top_orders
@@ -84,12 +83,11 @@ def _ensure_bucketed(spark, sf_dir: str, table: str) -> str:
     ``table`` and register it in this session's catalog; returns the
     catalog table name."""
     key, sort_cols = _SPECS[table]
-    # one file per bucket (each bucket is written by one task): the
-    # layout a window consumes with a near-no-op per-partition sort
+    # one file per bucket (the writer sends each bucket to one task):
+    # the layout a window consumes with a near-no-op per-partition sort
     return layouts.ensure_bucketed(
         spark, cache_location(sf_dir, table)[0], f"bucketed/{{label}}/{table}",
-        sf_dir, [table], {},
-        lambda: bucket_aligned(load(spark, sf_dir, table), _N_BUCKETS, key),
+        sf_dir, [table], {}, lambda: load(spark, sf_dir, table),
         _N_BUCKETS, key, sort_cols,
     )
 

@@ -47,11 +47,6 @@ def dsum(col: str | Column, prec: str = DEC) -> Column:
     return dec2double(F.sum(_c(col).cast(prec)))
 
 
-def davg(col: str | Column, prec: str = DEC) -> Column:
-    """Exact-sum average: exact decimal sum / count, one IEEE divide."""
-    return dsum(col, prec) / F.count(F.lit(1))
-
-
 _B = 10**9
 _M20 = (1 << 20) - 1
 
@@ -365,7 +360,10 @@ def input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def maybe_persist(df: DataFrame, level=None, floor_bytes: int | None = None) -> DataFrame:
+PERSIST_FLOOR_BYTES = 128 * 1024 * 1024  # see maybe_persist
+
+
+def maybe_persist(df: DataFrame) -> DataFrame:
     """Scale-adaptive persist for DETERMINISTIC multi-consumer
     intermediates (optimization r14, guide §5: caching is only worth it
     when recomputing costs more than the pressure it creates).
@@ -376,12 +374,12 @@ def maybe_persist(df: DataFrame, level=None, floor_bytes: int | None = None) -> 
     DAG at a materialization barrier (+0.1-0.3 s per site measured at
     sf0.1; the r14 bgc experiment measured +0.9 s for one persist).
     Once the input is large enough that the avoided re-derivation is a
-    real pass over a big table, the persist wins.
+    real pass over a big table, the persist (DISK_ONLY) wins.
 
-    The floor is the input size where one avoided re-scan roughly pays
-    the barrier (~128 MiB at local disk throughput); override with
-    $SPARK_GRAFT_PERSIST_FLOOR_BYTES. Unknown input size (non-local FS)
-    = real scale = persist — same conservative contract as
+    The floor, ``PERSIST_FLOOR_BYTES``, is the input size where one
+    avoided re-scan roughly pays the barrier (~128 MiB at local disk
+    throughput). Unknown input size (non-local FS) = real scale =
+    persist — same conservative contract as
     :func:`spread`/:func:`input_bytes`. Note the local sf replicas'
     parquet compresses text ~2.6:1, so even the sf10 sweep inputs stay
     below the floor: local runs at every shipped scale take the
@@ -393,24 +391,10 @@ def maybe_persist(df: DataFrame, level=None, floor_bytes: int | None = None) -> 
     diverge."""
     from pyspark import StorageLevel
 
-    if level is None:
-        level = StorageLevel.DISK_ONLY
-    if floor_bytes is None:
-        # malformed env values fall back to the default instead of
-        # raising from deep inside query construction (ADVICE r14 —
-        # the spread()/maxPartitionBytes pattern)
-        try:
-            floor_bytes = int(
-                os.environ.get(
-                    "SPARK_GRAFT_PERSIST_FLOOR_BYTES", str(128 * 1024 * 1024)
-                )
-            )
-        except ValueError:
-            floor_bytes = 128 * 1024 * 1024
     total = input_bytes(df)
-    if total is not None and total < floor_bytes:
+    if total is not None and total < PERSIST_FLOOR_BYTES:
         return df
-    return df.persist(level)
+    return df.persist(StorageLevel.DISK_ONLY)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

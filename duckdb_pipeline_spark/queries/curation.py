@@ -224,19 +224,6 @@ SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, round(s, 6) AS log_import
 _BPE_ROUNDS = 3
 
 
-def _adjacent_pairs(scol):
-    """array<struct<lhs,rhs>> of adjacent DISTINCT symbol pairs, built
-    map-side (zip against the 1-shifted slice; zip_with null-pads the
-    shorter side, which marks — and filters — the final position)."""
-    shifted = F.slice(scol, 2, F.greatest(F.size(scol) - 1, F.lit(1)))
-    z = F.zip_with(
-        scol, shifted, lambda a, b: F.struct(a.alias("lhs"), b.alias("rhs"))
-    )
-    return F.filter(
-        z, lambda s: s["rhs"].isNotNull() & (s["lhs"] != s["rhs"])
-    )
-
-
 def _apply_merge(df, x: str, y: str):
     """Rewrite the symbol array replacing every adjacent (x, y) with
     the merged symbol 'x y' — map-only (no shuffle at any scale).

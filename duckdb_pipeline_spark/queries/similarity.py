@@ -20,6 +20,7 @@ from ..operators.similarity import (
     lsh_topk_vectorized,
 )
 from .. import layouts
+from ..sinks import replace_file
 from . import QuerySpec
 from .common import load
 
@@ -385,17 +386,9 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     qcode = code(qv[None, :])[0]
 
     def score(batches):
-        empty_pdf = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "adc_dist": pd.Series([], dtype="int64"),
-            }
-        )
         for pdf in batches:
             pdf = pdf[pdf["vec_id"] != 0].dropna(subset=["embedding"])
             if not len(pdf):
-                yield empty_pdf
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             d = code(V) - qcode[None, :]
@@ -517,12 +510,6 @@ def similarity_adc_topk_np(spark, sf_dir):
         for pdf in batches:
             pdf = pdf.dropna(subset=["embedding"])
             if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "adc_dist": pd.Series([], dtype="int64"),
-                    }
-                )
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
             d = code(V) - qcode[None, :]
@@ -2354,10 +2341,7 @@ def ivfpq_append_batch(spark, emb_batch, idx_path: str, batch_id: str) -> int:
         return 0
 
     def _commit_manifest():
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entries, fh)
-        os.replace(tmp, manifest)
+        replace_file(manifest, json.dumps(entries).encode())
 
     staging = os.path.join(idx_path, f"_staging_batch_{batch_id}")
     if mine is None:

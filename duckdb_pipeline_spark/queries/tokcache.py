@@ -37,7 +37,7 @@ import os
 from pyspark.sql import functions as F
 
 from .. import layouts
-from ..sinks import bucket_aligned
+from ..sinks import bucket_aligned, replace_file, write_bucketed_table
 from .common import load
 
 _N_BUCKETS = 32  # parallelism ceiling of the bucketed scan; see
@@ -92,45 +92,42 @@ def _kind(tokenizer: str) -> str:
     return "toktf" if tokenizer == "space" else f"toktf/{{label}}_{tokenizer}"
 
 
+def _tf(docs, tokenizer: str):
+    """The (doc_id, token, tf, source) rows of ``docs`` (doc_id, source,
+    text): the one tf pipeline of the full build and the append.
+
+    ONE shuffle, of the RAW docs: partition by doc_id BEFORE the
+    explode. `bucket_aligned`'s HashPartitioning(doc_id, k) satisfies
+    the groupBy's clustering AND is the partitioning the bucketed
+    writer asks for, so the aggregation and the write run Exchange-free
+    and each bucket is written as one file. Shuffling the tf rows
+    instead moves ~3x the bytes (each token row re-carries
+    doc_id/source). The cost is a fold stage capped at k <= _N_BUCKETS
+    tasks (k = the session's slots rounded down to a divisor of
+    _N_BUCKETS); a same-session A/B (scripts/ab_toktf_r15.py, since
+    deleted) still measured 0.41 vs 0.58 s at sf0.1 and 2.19 vs 8.25 s
+    at sf10 on 32 cores for this shape. With cores >> _N_BUCKETS, raise
+    _N_BUCKETS rather than shuffling twice."""
+    return (
+        bucket_aligned(docs.select("doc_id", "source", "text"), _N_BUCKETS, "doc_id")
+        .select("doc_id", "source", F.explode(_tokens_expr(tokenizer)).alias("token"))
+        # source is functionally dependent on doc_id, so carrying it
+        # through the groupBy adds no groups — it rides along (scheme
+        # v2) for the per-source consumers (corpus_source_kl)
+        .groupBy("doc_id", "source", "token")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+        .select("doc_id", "token", "tf", "source")
+    )
+
+
 def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
     """Materialize (once per corpus version and tokenizer tier) the
     (doc_id, token, tf) projection of `documents` as a bucketed(doc_id)
     catalog table; returns the table name."""
-
-    # ONE shuffle, of the RAW docs: partition by doc_id BEFORE the
-    # explode. `bucket_aligned`'s HashPartitioning(doc_id, k) satisfies
-    # the groupBy's clustering AND sends each bucket (Murmur3 pmod
-    # _N_BUCKETS) to exactly one of its k tasks, so the aggregation runs
-    # Exchange-free and each bucket is written as one file. Shuffling the
-    # tf rows instead moves ~3x the bytes (each token row re-carries
-    # doc_id/source). The cost is a fold stage capped at k <= _N_BUCKETS
-    # tasks (k = the session's slots rounded down to a divisor of
-    # _N_BUCKETS); a same-session A/B (scripts/ab_toktf_r15.py, since
-    # deleted) still measured 0.41 vs 0.58 s at sf0.1 and 2.19 vs 8.25 s
-    # at sf10 on 32 cores for this shape. With cores >> _N_BUCKETS,
-    # raise _N_BUCKETS rather than shuffling twice.
-    def tf():
-        return (
-            bucket_aligned(
-                load(spark, sf_dir, "documents").select("doc_id", "source", "text"),
-                _N_BUCKETS, "doc_id",
-            )
-            .select(
-                "doc_id",
-                "source",
-                F.explode(_tokens_expr(tokenizer)).alias("token"),
-            )
-            # source is functionally dependent on doc_id, so carrying
-            # it through the groupBy adds no groups — it rides along
-            # (scheme v2) for the per-source consumers (corpus_source_kl)
-            .groupBy("doc_id", "source", "token")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .select("doc_id", "token", "tf", "source")
-        )
-
     return layouts.ensure_bucketed(
         spark, cache_location(sf_dir, tokenizer)[0], _kind(tokenizer), sf_dir,
-        ["documents"], {"scheme": _SCHEMES[tokenizer]}, tf,
+        ["documents"], {"scheme": _SCHEMES[tokenizer]},
+        lambda: _tf(load(spark, sf_dir, "documents"), tokenizer),
         _N_BUCKETS, "doc_id", ["doc_id"],
     )
 
@@ -151,9 +148,9 @@ def append_doc_tf(
     batch — the hourly-cron shape (the reference's cadence,
     run_serialise_raw_data.py): tokenize ONLY the arriving docs and
     append their (doc_id, token, tf, source) rows to the bucketed
-    table; the corpus is never re-tokenized. Spark appends bucketed
-    data bucket-aligned (same spec), so the Exchange-free per-doc
-    folds keep working over the union. Each append adds one file per
+    table; the corpus is never re-tokenized. The rows go through
+    `sinks.write_bucketed_table` with the table's own spec, so the
+    Exchange-free per-doc folds keep working over the union. Each append adds one file per
     touched bucket (and only one-file-per-bucket tables get Spark's
     SORTED BY trust) — run `sinks.compact_bucketed(spark, tname)`
     periodically to fold the batches back to one sorted file per
@@ -198,7 +195,7 @@ def append_doc_tf(
     if check_duplicates:
         # probe #1 — INTRA-batch duplicates (ADVICE r12): the
         # table-overlap probe below distincts the batch side, and
-        # batch_tf's groupBy would merge a repeated doc_id's rows into
+        # `_tf`'s groupBy would merge a repeated doc_id's rows into
         # one double-counted tf — the exact silent failure this guard
         # exists to prevent, arriving inside a single batch instead of
         # across appends.
@@ -226,28 +223,14 @@ def append_doc_tf(
                 "admission (stream_neardup_gate) and pass "
                 "check_duplicates=False"
             )
-    # same one-shuffle shape as the full build: partition the raw batch
-    # by doc_id first, explode + fold Exchange-free, write bucket-aligned
-    batch_tf = (
-        bucket_aligned(new_docs.select("doc_id", "source", "text"), _N_BUCKETS, "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            F.explode(_tokens_expr(tokenizer)).alias("token"),
-        )
-        .groupBy("doc_id", "source", "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .select("doc_id", "token", "tf", "source")
-    )
-    batch_tf.write.mode("append").insertInto(tname)
+    _, path, marker = cache_location(sf_dir, tokenizer)
+    write_bucketed_table(_tf(new_docs, tokenizer), tname, path, "doc_id", _N_BUCKETS, ["doc_id"])
     # count the append in the marker: the table now leads its source
-    marker = cache_location(sf_dir, tokenizer)[2]
     try:
         with open(marker) as fh:
             st = json.load(fh)
         st["appends"] = int(st.get("appends", 0)) + 1
-        with open(marker, "w") as fh:
-            json.dump(st, fh)
+        replace_file(marker, json.dumps(st).encode())
     except (OSError, ValueError) as exc:
         # LOUD by design (VERDICT r12 wrong #1): the append landed, but
         # a missing or corrupt marker makes the NEXT _ensure_doc_tf

@@ -7,33 +7,58 @@ protocol writes a directory of part files; for filename parity we write
 to a staging dir, then move the single part file to the target name.
 
 ``coalesce(1)`` is correct for batch-sized exports (one hour / one day
-of one dataset). For genuinely large outputs use ``write_parquet``
-without coalesce — partitioned layout is the scalable path; the
-single-file mode exists for reference parity.
+of one dataset). For genuinely large outputs the partitioned and
+bucketed layouts below are the scalable path; the single-file mode
+exists for reference parity.
+
+Bucketed layouts have one writer, ``_bucketed_writer``: the silver
+append (`write_bucketed_table`), the at-rest layout builds
+(`write_bucketed_dir`, registered by `register_bucketed_table`) and
+their compaction (`compact_bucketed`) all write through it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob as _glob
+import json
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Standard partitioned parquet write (directory of part files)."""
-    df.write.mode(mode).parquet(path)
+def replace_file(target: str, data: bytes) -> None:
+    """Write ``data`` to ``target`` so that a reader sees the old file or
+    the new one, never a torn one: the bytes go to a hidden temp file
+    beside ``target`` (a leading ``.``, which globs and Spark's file
+    index skip), fsynced, then ``os.replace``d onto it. If anything
+    raises, the temp file is removed and ``target`` is left as it was."""
+    parent = os.path.dirname(target) or "."
+    tmp = os.path.join(parent, f".{os.path.basename(target)}.{os.getpid()}.tmp")
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, target)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
 
 
 def write_single_parquet(df: DataFrame, target_file: str) -> str:
     """Write ``df`` as ONE parquet file at exactly ``target_file``.
 
-    Local-FS implementation (staging dir + rename). On object stores the
-    same pattern runs via the Hadoop FileSystem API; the rename is a
-    copy on S3 — acceptable for batch-sized exports.
+    Local-FS implementation: a staging dir beside the target, then one
+    ``os.replace`` of the part file onto it (same filesystem), so the
+    previous file serves until the new one is in place. On object
+    stores the same pattern runs via the Hadoop FileSystem API; the
+    rename is a copy on S3 — acceptable for batch-sized exports.
     """
     parent = os.path.dirname(target_file) or "."
     os.makedirs(parent, exist_ok=True)
@@ -43,9 +68,7 @@ def write_single_parquet(df: DataFrame, target_file: str) -> str:
         parts = _glob.glob(os.path.join(staging, "part-*.parquet"))
         if len(parts) != 1:
             raise RuntimeError(f"expected 1 part file, found {parts}")
-        if os.path.exists(target_file):
-            os.remove(target_file)
-        shutil.move(parts[0], target_file)
+        os.replace(parts[0], target_file)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return target_file
@@ -174,82 +197,53 @@ def compact_partitioned(
 
 def compact_bucketed(spark, table_name: str) -> int:
     """Small-file compaction for a BUCKETED catalog table, preserving
-    the bucket (and sort) spec (round 14, VERDICT r13 #6: hourly
-    `insertInto` appends — the tf projection's cadence — add one file
-    per bucket per batch; `compact_partitioned` preserves hive dirs
-    but knows nothing of bucket specs, and a plain rewrite would drop
-    the CLUSTERED BY metadata every Exchange-free consumer relies on).
+    its bucket, sort and partition spec (round 14, VERDICT r13 #6:
+    hourly appends — the tf projection's and the bucketed silver's
+    cadence — add one file per bucket per batch; `compact_partitioned`
+    preserves hive dirs but knows nothing of bucket specs, and a plain
+    rewrite would drop the CLUSTERED BY metadata every Exchange-free
+    consumer relies on).
 
     Why it matters beyond file count: Spark trusts a bucketed table's
     SORTED BY spec only when each bucket holds exactly ONE file —
     append batches break that invariant, so sort-merge consumers
     re-sort until compaction restores one-sorted-file-per-bucket.
 
-    Mechanics: introspect the spec (DESCRIBE FORMATTED), materialize
-    the current rows to a staging dir (one scan), then re-create the
-    table at the same location from staging with the identical
-    bucketBy/sortBy — one shuffle on the bucket key, exactly the cost
-    the original build paid, amortized over every Exchange-free read
-    that follows. Sidecar state in the table dir (the `_SRC.json`
-    projection stamp, `_batch_manifest/` idempotence markers) is
-    carried across the rewrite, so stamp-governed serving and replay
-    protection survive compaction (pytest-pinned).
-
-    NOT crash-atomic (unlike `compact_partitioned`'s directory swap):
-    a catalog table cannot be swapped under its name without a drop,
-    so a crash between drop and rewrite leaves the staging dir as the
-    recovery copy (path returned in the raised error). Run it as the
-    nightly maintenance job it is, not on a live serving path."""
-    rows = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    info = {r.col_name.strip(): (r.data_type or "").strip() for r in rows}
+    Mechanics: the spec is read from the catalog, the current rows are
+    rewritten by `write_bucketed_dir` (one shuffle on the bucket key,
+    the cost the original build paid) into a staging dir beside the
+    table, the ``_``-prefixed sidecars (the `_SRC.json` projection
+    stamp, `_batch_manifest/` idempotence markers) are copied in, and
+    `_publish` swaps the staging dir in; the table keeps its name and
+    location and is refreshed. A rewrite that raises, or a process that
+    dies, leaves the table serving its previous files. Returns the
+    number of data files after compaction."""
+    info = {
+        r.col_name.strip(): (r.data_type or "").strip()
+        for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+    }
 
     def _cols(v: str) -> list[str]:
-        v = (v or "").strip().strip("[]")
-        return [c.strip(" `") for c in v.split(",") if c.strip(" `")]
+        return [c.strip(" `") for c in v.strip("[]").split(",") if c.strip(" `")]
 
-    n_buckets = int(info["Num Buckets"])
-    bucket_cols = _cols(info.get("Bucket Columns", ""))
-    sort_cols = _cols(info.get("Sort Columns", ""))
-    loc = info["Location"]
-    path = loc[len("file:"):] if loc.startswith("file:") else loc
+    parts = [c.name for c in spark.catalog.listColumns(table_name) if c.isPartition]
+    path = info["Location"].removeprefix("file:")
+    _recover_dir(path)
+    rows = spark.table(table_name)
 
-    parent = os.path.dirname(path.rstrip("/")) or "."
-    staging = tempfile.mkdtemp(prefix="_compactb_", dir=parent)
-    sidecar_dir = tempfile.mkdtemp(prefix="_compactb_side_", dir=parent)
-    try:
-        spark.table(table_name).write.mode("overwrite").parquet(staging)
-        for entry in os.listdir(path):
-            if entry.startswith("_") and not entry.startswith("_compactb"):
-                src_p = os.path.join(path, entry)
-                dst_p = os.path.join(sidecar_dir, entry)
-                if os.path.isdir(src_p):
-                    shutil.copytree(src_p, dst_p)
-                else:
-                    shutil.copy2(src_p, dst_p)
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        shutil.rmtree(path, ignore_errors=True)
-        writer = (
-            bucket_aligned(spark.read.parquet(staging), n_buckets, *bucket_cols)
-            .write.bucketBy(n_buckets, *bucket_cols)
+    def write(staging: str) -> None:
+        write_bucketed_dir(
+            rows, staging, int(info["Num Buckets"]), _cols(info["Bucket Columns"]),
+            _cols(info.get("Sort Columns", "")), parts,
         )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.option("path", path).mode("overwrite").saveAsTable(table_name)
-        for entry in os.listdir(sidecar_dir):
-            src_p = os.path.join(sidecar_dir, entry)
-            dst_p = os.path.join(path, entry)
-            if os.path.isdir(src_p):
-                shutil.copytree(src_p, dst_p, dirs_exist_ok=True)
-            else:
-                shutil.copy2(src_p, dst_p)
-    except BaseException as exc:
-        raise RuntimeError(
-            f"compact_bucketed({table_name}) failed mid-rewrite; "
-            f"recovery copy of the pre-compaction rows: {staging}"
-        ) from exc
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(sidecar_dir, ignore_errors=True)
-    return len(_glob.glob(os.path.join(path, "part-*.parquet")))
+        for entry in (e for e in os.listdir(path) if e.startswith("_")):
+            src, dst = os.path.join(path, entry), os.path.join(staging, entry)
+            (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
+
+    # no leading "_": the staging dir is a table location while it is written
+    _publish(path, write, f"stage-{os.path.basename(path.rstrip('/'))}-")
+    spark.catalog.refreshTable(table_name)
+    return len(_glob.glob(os.path.join(path, *["*"] * len(parts), "part-*.parquet")))
 
 
 def upsert_parquet(spark, updates: DataFrame, path: str, keys: list[str]) -> int:
@@ -356,7 +350,7 @@ def bucket_tasks(n_buckets: int, slots: int) -> int:
 def bucket_aligned(df: DataFrame, n_buckets: int, *keys: str) -> DataFrame:
     """``df`` hash-partitioned on ``keys`` into k =
     ``bucket_tasks(n_buckets, defaultParallelism)`` tasks, the input
-    shape of a ``bucketBy(n_buckets, *keys)`` write.
+    shape of a write bucketed into ``n_buckets`` on ``keys``.
 
     Spark's repartition hash IS the bucket-id hash (``pmod(murmur3(key),
     n)``), and since k divides n, ``pmod(h, n) mod k == pmod(h, k)``: task
@@ -369,6 +363,63 @@ def bucket_aligned(df: DataFrame, n_buckets: int, *keys: str) -> DataFrame:
     return df.repartition(k, *[F.col(c) for c in keys])
 
 
+def _bucketed_writer(
+    df: DataFrame, n_buckets: int, keys: list[str], sort_cols=None, partition_cols=None
+):
+    """The one bucketed writer: ``df`` made `bucket_aligned`, then
+    ``bucketBy``/``sortBy``/``partitionBy``. Each bucket is thus written
+    by one task, as one file per (partition, batch). A ``df`` already
+    hash-partitioned that way (the toktf build shuffles its raw
+    documents) adds no Exchange: Spark drops a repartition whose child
+    already has its partitioning."""
+    writer = bucket_aligned(df, n_buckets, *keys).write.bucketBy(n_buckets, *keys)
+    if sort_cols:
+        writer = writer.sortBy(*sort_cols)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    return writer
+
+
+STAGED_TABLE_PREFIX = "bucketed_stage_"
+
+
+def write_bucketed_dir(
+    df: DataFrame, path: str, n_buckets: int, keys: list[str],
+    sort_cols=None, partition_cols=None,
+) -> None:
+    """Write ``df`` bucketed into directory ``path``, replacing what it
+    holds, with no catalog table left behind. Spark writes a bucket
+    spec only through ``saveAsTable``, so this goes through a throwaway
+    external table (``STAGED_TABLE_PREFIX`` + a random suffix) at
+    ``path``, dropped again; its files stay. ``path``'s name should not
+    start with ``_`` or ``.``, which Spark's file index treats as
+    hidden."""
+    tmp = STAGED_TABLE_PREFIX + uuid.uuid4().hex[:12]
+    try:
+        (
+            _bucketed_writer(df, n_buckets, keys, sort_cols, partition_cols)
+            .option("path", path)
+            .mode("overwrite")
+            .saveAsTable(tmp)
+        )
+    finally:
+        df.sparkSession.sql(f"DROP TABLE IF EXISTS {tmp}")
+
+
+def register_bucketed_table(
+    spark, table_name: str, path: str, schema, n_buckets: int, keys: list[str], sort_cols: list[str]
+) -> None:
+    """(Re)register catalog table ``table_name`` over the unpartitioned
+    bucketed files of ``schema`` at ``path`` (as `write_bucketed_dir`
+    writes them): ``CREATE TABLE ... CLUSTERED BY ... LOCATION``."""
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+    spark.sql(
+        f"CREATE TABLE {table_name} ({cols}) USING PARQUET CLUSTERED BY ({', '.join(keys)}) "
+        f"SORTED BY ({', '.join(sort_cols)}) INTO {n_buckets} BUCKETS LOCATION '{path}'"
+    )
+
+
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,
@@ -377,7 +428,6 @@ def write_bucketed_table(
     n_buckets: int,
     sort_cols: list[str] | None = None,
     partition_cols: list[str] | None = None,
-    mode: str = "append",
     batch_id: str | None = None,
 ) -> str:
     """Bucketed-at-rest layout as a WRITER-owned catalog table (K1
@@ -386,7 +436,8 @@ def write_bucketed_table(
     Exchanges — the one big shuffle is paid here, once, at ingest
     time, instead of per query (cf. the reference's silver layer
     owning its layout, /root/reference/data_lake_transformer.py:35-52,
-    where COPY decides the at-rest form).
+    where COPY decides the at-rest form). The first write creates the
+    table at ``path``; later writes append to it.
 
     ``partition_cols`` compose with bucketing (the production lake
     layout: partition by day for pruning, bucket by the join/agg key
@@ -394,10 +445,11 @@ def write_bucketed_table(
     the bucket key by `bucket_aligned`, into as many tasks as the
     session has slots (a divisor of n_buckets), so each bucket is
     written by one task: one file per (partition, bucket) per batch
-    instead of n_tasks x n_buckets fragments. `compact_small_files` is
-    the maintenance pass.
+    instead of n_tasks x n_buckets fragments. `compact_bucketed` is
+    the maintenance pass that folds the batches back to one file per
+    (partition, bucket).
 
-    IDEMPOTENCE (ADVICE r8): append mode assumes each source batch is
+    IDEMPOTENCE (ADVICE r8): an append assumes each source batch is
     ingested EXACTLY ONCE — re-running the same hour would silently
     duplicate rows in silver and double-count in the bucketed gold
     aggregate (unlike the reference-parity single-file path, which is
@@ -409,25 +461,15 @@ def write_bucketed_table(
     needing exactly-once under mid-write crashes should stage and
     replace the affected partition slice instead.
     """
-    spark = df.sparkSession
-    marker = None
-    if batch_id is not None and mode != "overwrite":
-        manifest = os.path.join(path, "_batch_manifest")
-        marker = os.path.join(manifest, batch_id)
-        if os.path.exists(marker):
-            return table_name
-    writer = bucket_aligned(df, n_buckets, bucket_key).write.bucketBy(n_buckets, bucket_key)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if mode == "overwrite" or not spark.catalog.tableExists(table_name):
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        writer = writer.option("path", path).mode("overwrite")
+    marker = os.path.join(path, "_batch_manifest", batch_id) if batch_id else None
+    if marker and os.path.exists(marker):
+        return table_name
+    writer = _bucketed_writer(df, n_buckets, [bucket_key], sort_cols, partition_cols)
+    if df.sparkSession.catalog.tableExists(table_name):
+        writer.mode("append").saveAsTable(table_name)
     else:
-        writer = writer.mode("append")
-    writer.saveAsTable(table_name)
-    if marker is not None:
+        writer.option("path", path).mode("overwrite").saveAsTable(table_name)
+    if marker:
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         with open(marker, "w") as fh:
             fh.write("done\n")
@@ -520,34 +562,27 @@ def write_version(df: DataFrame, root: str) -> int:
     crashed attempt is removed first — an aborted write can never
     wedge the table (readers never saw the orphan: resolution goes
     through the manifest, not a directory listing)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    _os.makedirs(root, exist_ok=True)
-    manifest = _os.path.join(root, "_versions.json")
+    os.makedirs(root, exist_ok=True)
+    manifest = os.path.join(root, "_versions.json")
     versions = []
-    if _os.path.exists(manifest):
+    if os.path.exists(manifest):
         with open(manifest) as f:
-            versions = _json.load(f)
+            versions = json.load(f)
     v = (versions[-1]["version"] + 1) if versions else 1
-    vdir = _os.path.join(root, f"v={v}")
-    staging = _os.path.join(root, f"_staging_v={v}")
+    vdir = os.path.join(root, f"v={v}")
+    staging = os.path.join(root, f"_staging_v={v}")
     for orphan in (staging, vdir):
         # v is strictly greater than every manifested version, so any
         # existing dir at either path is debris from a crashed attempt
-        if _os.path.exists(orphan):
-            _shutil.rmtree(orphan)
+        if os.path.exists(orphan):
+            shutil.rmtree(orphan)
     df.write.mode("errorifexists").parquet(staging)
-    _os.rename(staging, vdir)
+    os.rename(staging, vdir)
     files = sorted(
-        fn for fn in _os.listdir(vdir) if fn.endswith(".parquet")
+        fn for fn in os.listdir(vdir) if fn.endswith(".parquet")
     )
     versions.append({"version": v, "dir": f"v={v}", "files": files})
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(versions, f, indent=1)
-    _os.replace(tmp, manifest)  # atomic commit
+    replace_file(manifest, json.dumps(versions, indent=1).encode())  # atomic commit
     return v
 
 
@@ -556,12 +591,9 @@ def read_version(spark, root: str, version: int | None = None) -> DataFrame:
     snapshot. Uncommitted/partially-written version dirs are invisible
     because resolution goes through the manifest, never a directory
     listing."""
-    import json as _json
-    import os as _os
-
-    manifest = _os.path.join(root, "_versions.json")
+    manifest = os.path.join(root, "_versions.json")
     with open(manifest) as f:
-        versions = _json.load(f)
+        versions = json.load(f)
     if not versions:
         raise ValueError(f"no committed versions under {root}")
     if version is None:
@@ -571,27 +603,20 @@ def read_version(spark, root: str, version: int | None = None) -> DataFrame:
         if not matches:
             raise ValueError(f"version {version} not committed under {root}")
         entry = matches[0]
-    return spark.read.parquet(_os.path.join(root, entry["dir"]))
+    return spark.read.parquet(os.path.join(root, entry["dir"]))
 
 
 def vacuum_versions(root: str, keep: int = 2) -> list[int]:
     """Drop all but the newest ``keep`` snapshots: manifest commits
     first (readers stop resolving the pruned versions), then the data
     dirs are removed. Returns the pruned version numbers."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    manifest = _os.path.join(root, "_versions.json")
+    manifest = os.path.join(root, "_versions.json")
     with open(manifest) as f:
-        versions = _json.load(f)
+        versions = json.load(f)
     pruned, kept = versions[:-keep] if keep else versions, versions[-keep:] if keep else []
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(kept, f, indent=1)
-    _os.replace(tmp, manifest)
+    replace_file(manifest, json.dumps(kept, indent=1).encode())
     for e in pruned:
-        _shutil.rmtree(_os.path.join(root, e["dir"]), ignore_errors=True)
+        shutil.rmtree(os.path.join(root, e["dir"]), ignore_errors=True)
     return [e["version"] for e in pruned]
 
 

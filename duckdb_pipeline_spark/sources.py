@@ -95,11 +95,6 @@ def read_parquet_glob(
     return reader.parquet(path)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one of the driver's synthetic tables (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

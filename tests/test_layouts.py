@@ -17,7 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from duckdb_pipeline_spark import layouts
+from duckdb_pipeline_spark import layouts, sinks
 from duckdb_pipeline_spark.queries import bucketed, dedup, pipeline, similarity, tokcache
 
 TABLES = ("customer", "documents", "embeddings", "events", "lineitem", "orders")
@@ -193,7 +193,8 @@ def test_failed_build_leaves_previous_layout_serving(layout):
     layout.assert_no_debris()
     if layout.tname:
         assert layout.spark.table(layout.tname).count() == rows
-        assert not layout.spark.catalog.tableExists(f"{layout.tname}__staging")
+        assert not [t for t in layout.spark.catalog.listTables()
+                    if t.name.startswith(sinks.STAGED_TABLE_PREFIX)]
     # and it still serves warm
     layout.ensure()
     assert layout.data_files() == before

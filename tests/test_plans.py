@@ -425,3 +425,43 @@ def test_range_join_is_single_shuffle_window(spark, sf_dir):
     assert "Window" in plan
     assert "Join" not in plan
     assert _shuffle_exchanges(plan) == 1, plan
+
+
+def test_toktf_build_plans_one_exchange_on_raw_documents(spark, sf_dir, tmp_path):
+    """The toktf build shuffles once, the raw documents by doc_id: the
+    bucketed writer's repartition on doc_id is the one `_tf` already
+    made, so Spark drops it, and the tf fold and the bucketed write run
+    on the documents' shuffle."""
+    import re
+
+    from duckdb_pipeline_spark.queries import tokcache
+
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), corpus)
+    sc = spark.sparkContext
+    sc.setJobDescription("toktf_build_plan")
+    try:
+        tname = tokcache._ensure_doc_tf(spark, corpus)
+    finally:
+        sc.setJobDescription(None)
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        writes = [
+            execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+            if execs.apply(i).description() == "toktf_build_plan"
+            and "InsertIntoHadoopFsRelationCommand" in execs.apply(i).physicalPlanDescription()
+        ]
+        assert len(writes) == 1, writes
+        plan = writes[0]
+        tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
+        ids = re.findall(r"\bExchange \((\d+)\)", tree)
+        assert len(ids) == 1, plan
+        node = plan.split(f"({ids[0]}) Exchange\n")[1].split("\n\n")[0]
+        assert re.search(r"Input \[3\]: \[doc_id#\d+L, source#\d+, text#\d+\]", node), node
+        assert "hashpartitioning(doc_id#" in node, node
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        shutil.rmtree(tokcache.cache_location(corpus)[1], ignore_errors=True)

@@ -335,9 +335,9 @@ def test_mrr_audit_branches_cached(spark, sf_dir, monkeypatch):
     floor — pair's cache must be present either way, and tf's cache
     must ADD InMemoryTableScans only below the floor — and that both
     plans still yield rows (the oracle suite covers values)."""
-    from duckdb_pipeline_spark.queries import collect_all
+    from duckdb_pipeline_spark.queries import collect_all, common
 
-    monkeypatch.setenv("SPARK_GRAFT_PERSIST_FLOOR_BYTES", str(1 << 60))
+    monkeypatch.setattr(common, "PERSIST_FLOOR_BYTES", 1 << 60)
     df = collect_all()["search_mrr_audit"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_gated_off = plan.count("InMemoryTableScan")
@@ -345,7 +345,7 @@ def test_mrr_audit_branches_cached(spark, sf_dir, monkeypatch):
     assert df.count() > 0
     spark.catalog.clearCache()
 
-    monkeypatch.setenv("SPARK_GRAFT_PERSIST_FLOOR_BYTES", "0")
+    monkeypatch.setattr(common, "PERSIST_FLOOR_BYTES", 0)
     df = collect_all()["search_mrr_audit"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") > n_gated_off, plan

@@ -6,6 +6,7 @@ import glob
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_pipeline_spark.queries.common import load
@@ -281,3 +282,43 @@ def test_read_version_diff_cdc(spark, tmp_path):
         for r in read_version_diff(spark, root, 1, 2, ["k"]).collect()
     }
     assert rows[(3, "update")] == "c2" and rows[(1, "delete")] == "a"
+
+
+def test_replace_file_that_raises_keeps_previous_marker(tmp_path, monkeypatch):
+    """A marker write that raises mid-way leaves the previous marker
+    parseable and no temp file beside it."""
+    import json
+
+    from duckdb_pipeline_spark.sinks import replace_file
+
+    marker = tmp_path / "_SRC.json"
+    replace_file(str(marker), json.dumps({"appends": 1}).encode())
+
+    def dies(fd):
+        raise OSError("disk died")
+
+    monkeypatch.setattr(os, "fsync", dies)
+    with pytest.raises(OSError, match="disk died"):
+        replace_file(str(marker), json.dumps({"appends": 2}).encode())
+    assert json.loads(marker.read_text()) == {"appends": 1}
+    assert os.listdir(tmp_path) == ["_SRC.json"]
+
+
+def test_write_single_parquet_failed_rename_keeps_previous_file(spark, tmp_path, monkeypatch):
+    """If the final rename fails, the previous file stays in place and
+    the staging dir is removed."""
+    from duckdb_pipeline_spark.sinks import write_single_parquet
+
+    target = str(tmp_path / "2023-01-01" / "agg_20230101.parquet")
+    write_single_parquet(spark.range(3), target)
+
+    def dies(*a, **k):
+        raise RuntimeError("rename died")
+
+    monkeypatch.setattr(os, "replace", dies)
+    monkeypatch.setattr(os, "rename", dies)
+    with pytest.raises(RuntimeError, match="rename died"):
+        write_single_parquet(spark.range(5), target)
+    monkeypatch.undo()
+    assert spark.read.parquet(target).count() == 3
+    assert os.listdir(os.path.dirname(target)) == ["agg_20230101.parquet"]

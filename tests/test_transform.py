@@ -273,6 +273,100 @@ def test_bucketed_silver_append_runs_one_task_per_slot(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
 
+def _bucket_files(part_dir) -> list[str]:
+    """Bucket ids of the part files in a bucketed partition dir, one per
+    file (part-<task>-<write job uuid>_<bucket id>.c<n>...)."""
+    import re
+
+    return sorted(
+        re.match(r"part-\d{5}-.+_(\d{5})\.c\d{3}", f).group(1)
+        for f in os.listdir(part_dir)
+        if f.startswith("part-")
+    )
+
+
+def test_compact_bucketed_silver_keeps_partitions(spark, tmp_path):
+    """Two bucketed-silver hours, compaction, a third hour: the table
+    stays partitioned by process_day (so the third append matches its
+    spec), each bucket holds one file per compacted partition, and the
+    bucketed gold equals the single-file path's gold."""
+    from collections import Counter
+
+    from duckdb_pipeline_spark.sinks import compact_bucketed
+
+    cfg = _land_hours(
+        tmp_path / "lake",
+        {12: _many_repos(0, 200), 13: _many_repos(1000, 200), 14: RAW_ROWS + _many_repos(2000, 50)},
+    )
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    tname = t._bucketed_silver_table()
+    day = tmp_path / "lake" / "silver" / "gharchive/events" / "clean_bucketed" / "process_day=2023-01-01"
+    try:
+        for hour in (12, 13):
+            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+        assert max(Counter(_bucket_files(day)).values()) == 2
+
+        n_files = compact_bucketed(spark, tname)
+
+        buckets = _bucket_files(day)
+        assert n_files == len(buckets) and max(Counter(buckets).values()) == 1
+        assert [c.name for c in spark.catalog.listColumns(tname) if c.isPartition] == ["process_day"]
+        assert spark.table(tname).count() == 400
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 14))
+        assert spark.table(tname).count() == 452
+
+        for hour in (12, 13, 14):
+            t.serialise_raw_data(datetime(2023, 1, 1, hour))
+        single = spark.read.parquet(t.aggregate_silver_data(datetime(2023, 1, 1)))
+        bucketed = t.aggregate_silver_data_bucketed(datetime(2023, 1, 1))
+        assert sorted(map(tuple, bucketed.collect())) == sorted(map(tuple, single.collect()))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+
+
+def test_failed_compaction_leaves_table_serving(spark, tmp_path, monkeypatch):
+    """A compaction whose rewrite raises leaves the table serving the
+    same rows, its sidecar files intact, and no staging or aside dir."""
+    from pyspark.sql import DataFrameWriter
+
+    from duckdb_pipeline_spark import sinks
+
+    cfg = _land_hours(tmp_path / "lake", {12: _many_repos(0, 50), 13: _many_repos(100, 50)})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    tname = t._bucketed_silver_table()
+    parent = tmp_path / "lake" / "silver" / "gharchive/events"
+    try:
+        for hour in (12, 13):
+            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+        rows = sorted(map(tuple, spark.table(tname).collect()))
+        listing = sorted(os.listdir(parent))
+        sidecars = sorted(os.listdir(parent / "clean_bucketed" / "_batch_manifest"))
+        assert sidecars == ["20230101_12", "20230101_13"]
+
+        real = DataFrameWriter.saveAsTable
+
+        def dies(self, name, *a, **k):
+            real(self, name, *a, **k)  # the rewrite lands in staging, then dies
+            raise RuntimeError("rewrite died")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "saveAsTable", dies)
+            with pytest.raises(RuntimeError, match="rewrite died"):
+                sinks.compact_bucketed(spark, tname)
+
+        assert sorted(os.listdir(parent)) == listing
+        assert sorted(os.listdir(parent / "clean_bucketed" / "_batch_manifest")) == sidecars
+        assert sorted(map(tuple, spark.table(tname).collect())) == rows
+        assert not [
+            x for x in spark.catalog.listTables() if x.name.startswith(sinks.STAGED_TABLE_PREFIX)
+        ]
+        # a replayed hour is still a no-op
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 13))
+        assert spark.table(tname).count() == len(rows)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+
+
 def test_ingester_local_landing(tmp_path):
     """Bronze byte-copy landing to a local-dir bucket (no network)."""
     import io
