@@ -78,6 +78,12 @@ def _data_files(sf_dir: str, sources) -> list[str]:
     return out
 
 
+def source_bytes(sf_dir: str, sources) -> int:
+    """Total size of the data files of ``sources`` (table names in
+    ``sf_dir``), the files :func:`ensure` stamps."""
+    return sum(os.path.getsize(f) for f in _data_files(sf_dir, sources))
+
+
 def _content_hash(sf_dir: str, files: list[str]) -> str:
     h = hashlib.sha256()
     for f in files:

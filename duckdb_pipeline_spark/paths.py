@@ -69,9 +69,14 @@ def hourly_sink_key(base_path: str, process_date: datetime, filename: str) -> st
     return f"{base_path}/{partition_path(process_date, hourly=True)}/{filename}"
 
 
-def raw_hourly_glob(bucket_url: str, base_path: str, process_date: datetime) -> str:
-    """Bronze source glob for one hour: ``{bucket}/{base}/{Y-m-d}/{HH}/*``."""
-    return f"{bucket_url}/{base_path}/{partition_path(process_date, hourly=True)}/*"
+def raw_hourly_dir(bucket_url: str, base_path: str, process_date: datetime) -> str:
+    """Bronze directory of one hour: ``{bucket}/{base}/{Y-m-d}/{HH}``.
+
+    The reference reads the glob ``<dir>/*``; Spark reads the directory
+    itself, which skips ``_``/``.`` files as the glob does. A glob makes
+    Spark's streaming-sink metadata probe look the pattern up as a
+    literal path, which fails once per read with a WARN stack trace."""
+    return f"{bucket_url}/{base_path}/{partition_path(process_date, hourly=True)}"
 
 
 def silver_daily_glob(bucket_url: str, base_path: str, process_date: datetime) -> str:

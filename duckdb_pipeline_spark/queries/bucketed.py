@@ -47,16 +47,22 @@ from .timeseries import (
     top_paths_from,
 )
 
-_N_BUCKETS = 32  # = the core count of the sf10 bench host. A bucketed scan
-# runs ONE task per bucket, so n_buckets is the parallelism ceiling for
-# every downstream stage that reuses the distribution: the first cut
-# used 8 and at sf10 the saved Exchange was exactly cancelled by 8-way
-# sorts on 32 cores (sessions twin measured 1.41 s == plain). The build
-# itself runs one task per slot, rounded down to a divisor of n_buckets
-# (`sinks.bucket_aligned`), so fewer cores do not pay for 32 write
-# tasks. Production picks ~(table bytes / target partition bytes),
-# core-count aligned; the plan shape (zero fact-side Exchange) is bucket-count-independent,
-# which is what the plan tests pin.
+# A bucketed scan runs ONE task per bucket, so n_buckets is the
+# parallelism ceiling of every downstream stage that reuses the
+# distribution: the first cut used 8, and at sf10 the saved Exchange was
+# exactly cancelled by 8-way sorts on 32 cores (sessions twin measured
+# 1.41 s == plain). 32 = the core count of the sf10 bench host. The
+# build runs one task per slot, rounded down to a divisor of n_buckets
+# (`sinks.bucket_aligned`), so fewer cores do not pay for 32 write tasks.
+#
+# The toktf layout sizes its count to its corpus (`sinks.sized_buckets`);
+# these fact layouts keep 32 at every scale on purpose: orders and
+# lineitem must share ONE count for q3's Exchange-free join (a join of
+# 4 buckets with 32 shuffles a side), and events keeps the count its
+# window plans were measured at. The plan shape (zero fact-side
+# Exchange) does not depend on the count, which is what the plan tests
+# pin.
+_N_BUCKETS = 32
 
 # (table, bucket key, sort cols) — sort cols make the window's
 # per-partition sort start from near-sorted runs and give parquet

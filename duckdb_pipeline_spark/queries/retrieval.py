@@ -93,15 +93,17 @@ def search_docs_bm25(spark, sf_dir):
     """Okapi BM25 (k1=1.2, b=0.75) top-20 documents for a 3-term
     disjunctive query.
 
-    Scale shape (the inverted-index probe, relationally): the token
-    explode is filtered to the query terms BEFORE any shuffle, so the
-    wide corpus never moves; document frequencies (<= |query| rows) and
-    the corpus stats row are broadcast; one groupBy per (doc, term)
-    carries tf, one per doc folds the score; TakeOrdered cuts to 20.
-    At 100 TB the corpus text is scanned twice, both passes map-side
-    and column-pruned: the term-filtered token pass (tf) and the
-    doc-length pass — dl itself (a doc_id:length pair) is persisted so
-    its two consumers (corpus stats, score join) don't rescan."""
+    Served from the corpus' (doc_id, token, tf) projection
+    (queries/tokcache.py), bucketed by doc_id and built once per corpus
+    version; the corpus text is not read at query time. The query's tf
+    rows are a predicate-pushed read of its <= 3 token groups; dl is the
+    per-doc sum(tf) fold of the same table, and the score join of the
+    two runs merge-joined on the bucket distribution with no Exchange.
+    Document frequencies (<= |query| rows) and the one-row corpus stats
+    are broadcast; one groupBy per doc folds the score, and TakeOrdered
+    cuts to 20. Every scan of the projection runs one task per bucket,
+    so the stages are as wide as the layout's bucket count, which the
+    build sizes to the corpus (one bucket at sf0.1)."""
     return (
         _bm25_doc_scores(spark, sf_dir)
         .orderBy(F.desc("bm25"), "doc_id")

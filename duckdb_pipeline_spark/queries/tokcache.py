@@ -37,11 +37,23 @@ import os
 from pyspark.sql import functions as F
 
 from .. import layouts
-from ..sinks import bucket_aligned, replace_file, write_bucketed_table
+from ..sinks import (
+    bucket_aligned,
+    bucket_spec,
+    replace_file,
+    sized_buckets,
+    write_bucketed_table,
+)
 from .common import load
 
-_N_BUCKETS = 32  # parallelism ceiling of the bucketed scan; see
-# queries/bucketed.py:_N_BUCKETS for the measured rationale
+# The bucket count is sized to the corpus when the layout is built
+# (`sinks.sized_buckets`: a power of two leaving each bucket >= 1 MiB of
+# source bytes), capped here. A bucketed scan runs one task per bucket,
+# so the count is every consumer's task count: the sf0.1 corpus (0.6 MB)
+# gets 1 bucket, sf1 4, and sf10 (58 MB) the cap, the core count of the
+# sf10 bench host (queries/bucketed.py:_N_BUCKETS). Appends keep the
+# table's count; only a rebuild from a changed source re-sizes it.
+_N_BUCKETS = 32
 
 # ------------------------------------------------------------ tokenizers
 #
@@ -92,7 +104,7 @@ def _kind(tokenizer: str) -> str:
     return "toktf" if tokenizer == "space" else f"toktf/{{label}}_{tokenizer}"
 
 
-def _tf(docs, tokenizer: str):
+def _tf(docs, tokenizer: str, n_buckets: int):
     """The (doc_id, token, tf, source) rows of ``docs`` (doc_id, source,
     text): the one tf pipeline of the full build and the append.
 
@@ -100,16 +112,17 @@ def _tf(docs, tokenizer: str):
     explode. `bucket_aligned`'s HashPartitioning(doc_id, k) satisfies
     the groupBy's clustering AND is the partitioning the bucketed
     writer asks for, so the aggregation and the write run Exchange-free
-    and each bucket is written as one file. Shuffling the tf rows
-    instead moves ~3x the bytes (each token row re-carries
-    doc_id/source). The cost is a fold stage capped at k <= _N_BUCKETS
+    and each bucket is written as one file (with one bucket, the docs
+    are coalesced instead and nothing is shuffled). Shuffling the tf
+    rows instead moves ~3x the bytes (each token row re-carries
+    doc_id/source). The cost is a fold stage capped at k <= n_buckets
     tasks (k = the session's slots rounded down to a divisor of
-    _N_BUCKETS); a same-session A/B (scripts/ab_toktf_r15.py, since
+    n_buckets); a same-session A/B (scripts/ab_toktf_r15.py, since
     deleted) still measured 0.41 vs 0.58 s at sf0.1 and 2.19 vs 8.25 s
     at sf10 on 32 cores for this shape. With cores >> _N_BUCKETS, raise
     _N_BUCKETS rather than shuffling twice."""
     return (
-        bucket_aligned(docs.select("doc_id", "source", "text"), _N_BUCKETS, "doc_id")
+        bucket_aligned(docs.select("doc_id", "source", "text"), n_buckets, "doc_id")
         .select("doc_id", "source", F.explode(_tokens_expr(tokenizer)).alias("token"))
         # source is functionally dependent on doc_id, so carrying it
         # through the groupBy adds no groups — it rides along (scheme
@@ -123,12 +136,16 @@ def _tf(docs, tokenizer: str):
 def _ensure_doc_tf(spark, sf_dir: str, tokenizer: str = "space") -> str:
     """Materialize (once per corpus version and tokenizer tier) the
     (doc_id, token, tf) projection of `documents` as a bucketed(doc_id)
-    catalog table; returns the table name."""
+    catalog table, in as many buckets as the corpus bytes fill
+    (`sinks.sized_buckets`); returns the table name."""
+    # n is in the layout's spec: a source that crosses a sizing step
+    # rebuilds with the new count
+    n = sized_buckets(layouts.source_bytes(sf_dir, ["documents"]), _N_BUCKETS)
     return layouts.ensure_bucketed(
         spark, cache_location(sf_dir, tokenizer)[0], _kind(tokenizer), sf_dir,
         ["documents"], {"scheme": _SCHEMES[tokenizer]},
-        lambda: _tf(load(spark, sf_dir, "documents"), tokenizer),
-        _N_BUCKETS, "doc_id", ["doc_id"],
+        lambda: _tf(load(spark, sf_dir, "documents"), tokenizer, n),
+        n, "doc_id", ["doc_id"],
     )
 
 
@@ -149,7 +166,8 @@ def append_doc_tf(
     run_serialise_raw_data.py): tokenize ONLY the arriving docs and
     append their (doc_id, token, tf, source) rows to the bucketed
     table; the corpus is never re-tokenized. The rows go through
-    `sinks.write_bucketed_table` with the table's own spec, so the
+    `sinks.write_bucketed_table` with the table's own spec (its bucket
+    count read from the catalog, never re-sized to the batch), so the
     Exchange-free per-doc folds keep working over the union. Each append adds one file per
     touched bucket (and only one-file-per-bucket tables get Spark's
     SORTED BY trust) — run `sinks.compact_bucketed(spark, tname)`
@@ -224,7 +242,9 @@ def append_doc_tf(
                 "check_duplicates=False"
             )
     _, path, marker = cache_location(sf_dir, tokenizer)
-    write_bucketed_table(_tf(new_docs, tokenizer), tname, path, "doc_id", _N_BUCKETS, ["doc_id"])
+    # the table's own count: the batch is no measure of the corpus
+    n = bucket_spec(spark, tname)["n_buckets"]
+    write_bucketed_table(_tf(new_docs, tokenizer, n), tname, path, "doc_id", n, ["doc_id"])
     # count the append in the marker: the table now leads its source
     try:
         with open(marker) as fh:

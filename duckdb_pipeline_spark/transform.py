@@ -118,12 +118,29 @@ class DataLakeTransformer:
 
     # -- batch entry points (ref :35-71) --------------------------------
 
-    def serialise_raw_data(self, process_date: datetime) -> str:
-        """Bronze hour → silver parquet (ref serialise_raw_data :35-52)."""
-        source = paths.raw_hourly_glob(
+    def _bronze_hour(self, process_date: datetime) -> str:
+        """The bronze directory of one hour, which both serialise paths
+        read. Raises FileNotFoundError unless it holds a visible (not
+        ``_``/``.``-prefixed) file: with the schema given, Spark reads
+        such a directory as zero rows, and an hour a failed landing
+        left empty must fail as loudly as the reference's unmatched
+        glob does, not commit an empty silver file or a batch marker
+        that makes the replay a no-op."""
+        source = paths.raw_hourly_dir(
             self.config.zone_url("bronze"), self.dataset_base_path, process_date
         )
-        raw = self.register_raw_gharchive(source)
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(source)
+        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        names = []
+        if fs.exists(hpath):
+            names = [st.getPath().getName() for st in fs.listStatus(hpath)]
+        if all(n.startswith(("_", ".")) for n in names):
+            raise FileNotFoundError(f"no bronze file for the hour: {source}")
+        return source
+
+    def serialise_raw_data(self, process_date: datetime) -> str:
+        """Bronze hour → silver parquet (ref serialise_raw_data :35-52)."""
+        raw = self.register_raw_gharchive(self._bronze_hour(process_date))
         clean = self.clean_raw_gharchive("gharchive_raw") if raw is not None else None
         sink = paths.sink_path(
             "clean",
@@ -159,10 +176,7 @@ class DataLakeTransformer:
         Appends one file per (day, bucket); returns the table name."""
         from .sinks import write_bucketed_table
 
-        source = paths.raw_hourly_glob(
-            self.config.zone_url("bronze"), self.dataset_base_path, process_date
-        )
-        self.register_raw_gharchive(source)
+        self.register_raw_gharchive(self._bronze_hour(process_date))
         # partition key = PROCESSING day (mirrors the reference's
         # directory semantics: aggregate_silver_data reads the
         # process-date directory, whatever event timestamps the hourly

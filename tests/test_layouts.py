@@ -8,6 +8,7 @@ previous layout serving with no staging or aside directory behind.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -115,6 +116,11 @@ def layout(request, spark, sf_dir, tmp_path, monkeypatch):
         spark.sql(f"DROP TABLE IF EXISTS {lay.tname}")
     if lay.call:
         shutil.rmtree(lay.call["path"], ignore_errors=True)
+        # the bucketed kinds' layouts sit in a per-corpus label dir
+        # (`bucketed/<label>/<table>`); drop it once it is empty
+        if "{label}/" in lay.call["kind"]:
+            with contextlib.suppress(OSError):
+                os.rmdir(os.path.dirname(lay.call["path"]))
 
 
 def _rewrite_same_size(path: str) -> None:

@@ -78,8 +78,8 @@ def test_sink_key_hour_padded():
 
 def test_globs_and_sink_path():
     assert (
-        paths.raw_hourly_glob("/lake/bronze", "gharchive/events", TS_H)
-        == "/lake/bronze/gharchive/events/2024-10-01/07/*"
+        paths.raw_hourly_dir("/lake/bronze", "gharchive/events", TS_H)
+        == "/lake/bronze/gharchive/events/2024-10-01/07"
     )
     assert (
         paths.silver_daily_glob("/lake/silver", "gharchive/events", TS_D)

@@ -427,20 +427,20 @@ def test_range_join_is_single_shuffle_window(spark, sf_dir):
     assert _shuffle_exchanges(plan) == 1, plan
 
 
-def test_toktf_build_plans_one_exchange_on_raw_documents(spark, sf_dir, tmp_path):
-    """The toktf build shuffles once, the raw documents by doc_id: the
-    bucketed writer's repartition on doc_id is the one `_tf` already
-    made, so Spark drops it, and the tf fold and the bucketed write run
-    on the documents' shuffle."""
-    import re
-
+@contextlib.contextmanager
+def _toktf_build(spark, sf_dir, tmp_path):
+    """Build the toktf layout of a private copy of ``sf_dir``'s
+    documents; yields (the physical plan of the build's one write, the
+    built table's bucket count)."""
+    from duckdb_pipeline_spark import sinks
     from duckdb_pipeline_spark.queries import tokcache
 
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     shutil.copy(os.path.join(sf_dir, "documents.parquet"), corpus)
     sc = spark.sparkContext
-    sc.setJobDescription("toktf_build_plan")
+    tag = f"toktf_build_plan_{tmp_path.name}"
+    sc.setJobDescription(tag)
     try:
         tname = tokcache._ensure_doc_tf(spark, corpus)
     finally:
@@ -451,17 +451,43 @@ def test_toktf_build_plans_one_exchange_on_raw_documents(spark, sf_dir, tmp_path
         writes = [
             execs.apply(i).physicalPlanDescription()
             for i in range(execs.size())
-            if execs.apply(i).description() == "toktf_build_plan"
+            if execs.apply(i).description() == tag
             and "InsertIntoHadoopFsRelationCommand" in execs.apply(i).physicalPlanDescription()
         ]
         assert len(writes) == 1, writes
-        plan = writes[0]
+        yield writes[0], sinks.bucket_spec(spark, tname)["n_buckets"]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        shutil.rmtree(tokcache.cache_location(corpus)[1], ignore_errors=True)
+
+
+def test_toktf_build_plans_one_exchange_on_raw_documents(spark, sf_dir, tmp_path, monkeypatch):
+    """The toktf build shuffles once, the raw documents by doc_id: the
+    bucketed writer's repartition on doc_id is the one `_tf` already
+    made, so Spark drops it, and the tf fold and the bucketed write run
+    on the documents' shuffle. (A multi-bucket build: the smoke corpus
+    is far below the 1 MiB-per-bucket floor, so the floor is lowered.)"""
+    import re
+
+    from duckdb_pipeline_spark import sinks
+
+    monkeypatch.setattr(sinks, "MIN_BUCKET_BYTES", 1024)
+    with _toktf_build(spark, sf_dir, tmp_path) as (plan, n_buckets):
+        assert n_buckets > 1
         tree = plan.split("\n\n")[0].split("== Initial Plan ==")[0]
         ids = re.findall(r"\bExchange \((\d+)\)", tree)
         assert len(ids) == 1, plan
         node = plan.split(f"({ids[0]}) Exchange\n")[1].split("\n\n")[0]
         assert re.search(r"Input \[3\]: \[doc_id#\d+L, source#\d+, text#\d+\]", node), node
         assert "hashpartitioning(doc_id#" in node, node
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tname}")
-        shutil.rmtree(tokcache.cache_location(corpus)[1], ignore_errors=True)
+
+
+def test_toktf_one_bucket_build_plans_no_shuffle(spark, sf_dir, tmp_path):
+    """A corpus below the 1 MiB-per-bucket floor builds ONE bucket, and
+    its build coalesces the documents instead of shuffling them: the
+    single partition satisfies the tf fold and the write, with no
+    Exchange at all."""
+    with _toktf_build(spark, sf_dir, tmp_path) as (plan, n_buckets):
+        assert n_buckets == 1
+        assert _shuffle_exchanges(plan) == 0, plan
+        assert "Coalesce" in plan, plan

@@ -247,7 +247,7 @@ def test_band_append_clusters_within_batch_singletons(spark, tmp_path):
     assert labs[22] == 22 and labs[1] == 1
 
 
-def test_compact_bucketed_tf_projection(spark, tmp_path):
+def test_compact_bucketed_tf_projection(spark, tmp_path, monkeypatch):
     """VERDICT r13 #6: hourly tf appends accumulate one file per
     bucket per batch; `sinks.compact_bucketed` rewrites the table back
     to one sorted file per bucket while preserving the bucket spec
@@ -262,8 +262,13 @@ def test_compact_bucketed_tf_projection(spark, tmp_path):
         append_doc_tf,
         cache_location,
     )
-    from duckdb_pipeline_spark.sinks import compact_bucketed
+    from duckdb_pipeline_spark import sinks
+    from duckdb_pipeline_spark.sinks import bucket_spec, compact_bucketed
 
+    # a floor of 64 source bytes per bucket: the 8-doc corpus still
+    # builds several buckets, so the per-bucket file counts below say
+    # something
+    monkeypatch.setattr(sinks, "MIN_BUCKET_BYTES", 64)
     corpus_dir = str(tmp_path / "corpus")
     os.makedirs(corpus_dir, exist_ok=True)
     spark.createDataFrame(
@@ -282,12 +287,14 @@ def test_compact_bucketed_tf_projection(spark, tmp_path):
 
     rows_before = sorted(map(tuple, spark.table(tname).collect()))
     files_before = len(glob.glob(os.path.join(path, "part-*.parquet")))
-    # non-empty buckets only get files (hash(doc_id) pmod 32 IS the
-    # bucket id — both Murmur3); build + appends leave >1 file in the
-    # buckets the batches touched
+    # non-empty buckets only get files (hash(doc_id) pmod n_buckets IS
+    # the bucket id — both Murmur3); build + appends leave >1 file in
+    # the buckets the batches touched
+    n_buckets = bucket_spec(spark, tname)["n_buckets"]
+    assert n_buckets > 1
     n_buckets_used = (
         spark.table(tname)
-        .select(F.expr("pmod(hash(doc_id), 32)"))
+        .select(F.pmod(F.hash("doc_id"), F.lit(n_buckets)))
         .distinct()
         .count()
     )

@@ -5,6 +5,7 @@ Golden values from /root/reference/tests/test_dl_transformer.py:46-74
 over generated .json.gz fixtures mirrors the cron lifecycle (SURVEY §3).
 """
 
+import contextlib
 import gzip
 import json
 import os
@@ -209,6 +210,113 @@ def test_bucket_tasks_is_largest_divisor_within_slots():
     from duckdb_pipeline_spark.sinks import bucket_tasks
 
     assert [bucket_tasks(32, s) for s in (1, 2, 4, 6, 32, 64)] == [1, 2, 4, 4, 32, 32]
+
+
+def test_sized_buckets_gives_each_bucket_a_mib_of_source():
+    from duckdb_pipeline_spark.sinks import MIN_BUCKET_BYTES, sized_buckets
+
+    mb = 1_000_000
+    assert MIN_BUCKET_BYTES == 1 << 20
+    # the sf0.1 / sf1 / sf10 corpora, a TB, and an empty source
+    assert [sized_buckets(b, 32) for b in (0.57 * mb, 5.8 * mb, 58 * mb, 10**12, 0)] == [
+        1, 4, 32, 32, 1,
+    ]
+    assert sized_buckets(2 * MIN_BUCKET_BYTES - 1, 32) == 1
+    assert sized_buckets(2 * MIN_BUCKET_BYTES, 32) == 2
+    assert sized_buckets(10**12, 8) == 8
+
+
+@contextlib.contextmanager
+def _jvm_log(spark):
+    """Collect what the JVM logs (every logger, every level) while the
+    block runs; yields a callable returning the text so far. The JVM's
+    stderr is the one the process started with, which `capfd` does not
+    see, so the records are taken from log4j itself."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    buf = jvm.java.io.StringWriter()
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%p %c{1}: %m%n").build()
+    app = core.appender.WriterAppender.createAppender(layout, None, buf, "test-jvm-log", False, True)
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    try:
+        yield buf.toString
+    finally:
+        root.removeAppender("test-jvm-log")
+        ctx.updateLoggers()
+        app.stop()
+
+
+def test_serialise_reads_the_hour_dir_without_metadata_probe_warning(spark, tmp_path):
+    """Both serialise paths read the bronze hour DIRECTORY: a glob made
+    Spark's streaming-sink metadata probe look the pattern up as a
+    literal path and log a WARN with a stack trace per hour. Hidden
+    `_`/`.` files in the hour dir stay unread, as with the glob."""
+    from duckdb_pipeline_spark.sources import GHARCHIVE_EVENT_SCHEMA
+
+    cfg = _land_hours(tmp_path / "lake", {12: RAW_ROWS})
+    hour_dir = tmp_path / "lake" / "bronze" / "gharchive/events" / "2023-01-01" / "12"
+    stray = json.dumps({**RAW_ROWS[0], "id": 99}).encode()
+    for name in ("_partial.json", ".inflight.json"):
+        (hour_dir / name).write_bytes(stray)
+    want = sorted(
+        map(tuple, clean_projection(
+            spark.createDataFrame(RAW_ROWS, schema=GHARCHIVE_EVENT_SCHEMA)
+        ).collect())
+    )
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    try:
+        with _jvm_log(spark) as log:
+            silver = t.serialise_raw_data(datetime(2023, 1, 1, 12))
+            tname = t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+            logged = log()
+        assert "Assume no metadata directory" not in logged, logged
+        assert sorted(map(tuple, spark.read.parquet(silver).collect())) == want
+        bucketed = spark.table(tname).drop("process_day").select(*spark.read.parquet(silver).columns)
+        assert sorted(map(tuple, bucketed.collect())) == want
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
+def test_serialise_of_an_hour_without_a_landed_file_raises(spark, tmp_path):
+    """An hour whose landing failed (the ingester made the hour dir, the
+    write raised) holds no visible file. Both serialise paths raise on
+    it, as on a missing hour, and write neither a silver file nor the
+    bucketed batch marker, so the replay after a good landing still
+    appends the hour."""
+    import io
+
+    from duckdb_pipeline_spark.ingest import DataLakeIngester
+
+    class Torn(io.BytesIO):
+        def getvalue(self):
+            return "not bytes"  # the binary write raises after open
+
+    lake = tmp_path / "lake"
+    cfg = _land_hours(lake, {})
+    ing = DataLakeIngester("gharchive/events", cfg)
+    key = "gharchive/events/2023-01-01/12/2023-1-1-12.json.gz"
+    with pytest.raises(TypeError):
+        ing.upload(Torn(), cfg.bronze_bucket, key)
+    hour_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / "12"
+    (hour_dir / ".inflight.json").write_bytes(json.dumps(RAW_ROWS[0]).encode())
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    try:
+        for hour in (12, 13):  # no visible file; no hour dir at all
+            for serialise in (t.serialise_raw_data, t.serialise_raw_data_bucketed):
+                with pytest.raises(FileNotFoundError, match="no bronze file"):
+                    serialise(datetime(2023, 1, 1, hour))
+        assert not os.path.exists(lake / "silver")
+
+        payload = gzip.compress(b"\n".join(json.dumps(r).encode() for r in RAW_ROWS))
+        ing.upload(io.BytesIO(payload), cfg.bronze_bucket, key)
+        tname = t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        assert sorted(r.event_id for r in spark.table(tname).collect()) == [1, 2]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
 
 def test_bucketed_silver_one_file_per_bucket_per_batch(spark, tmp_path):
