@@ -250,27 +250,6 @@ def _py_shingles(text, n: int) -> set:
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
 
-def _spread(df: DataFrame, id_col: str, text_col: str, parallelism) -> DataFrame:
-    """Fan the (id, text) projection out to `parallelism` partitions
-    before a Python map stage. A local corpus often arrives as ONE
-    parquet split — which would serialize the whole Python stage on a
-    single core. The shuffled payload is just the raw text. Pass
-    parallelism=None to keep source partitioning (the right call when
-    the input already has many splits, e.g. a real 100 TB scan)."""
-    out = df.select(id_col, text_col)
-    if parallelism == "auto":
-        # follow the session's shuffle-partition sizing, not the raw
-        # core count: shuffle.partitions is the data-proportional knob
-        # (bench sizes it to ~16 MB of input per partition), and a
-        # Python map stage fanned wider than that pays per-worker
-        # startup/Arrow overhead for sub-batch slices (measured, bands
-        # kernel at sf0.1: 32 ways 0.42 s, 8 ways 0.41 s, one split
-        # 0.63 s — flat past the data-sized width, worse under it)
-        spark = df.sparkSession
-        parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return out.repartition(parallelism) if parallelism else out
-
-
 def _py_lane_minhashes(sh: set, num_hashes: int) -> list[int]:
     """K Carter-Wegman min-hashes of one shingle set — the Python twin
     of `minhash_signatures` (round 8 scheme): per shingle ONE md5,
@@ -338,17 +317,20 @@ def minhash_signatures_mapped(
     text_col: str = "text",
     n: int = 3,
     num_hashes: int = 16,
-    parallelism="auto",
 ) -> DataFrame:
-    """Shuffle-free minhash: the signature is a pure per-document
+    """Minhash in one map pass: the signature is a pure per-document
     function (shingle → K/4 md5 → K lane mins), so compute it in one
-    mapInPandas pass — no explode, no groupBy, no shuffle. Identical
-    output to `minhash_signatures(word_shingles(df))`.
+    mapInPandas pass — no explode, no groupBy. Identical output to
+    `minhash_signatures(word_shingles(df))`.
 
-    This is the 100 TB shape: signature extraction scales with input
-    partitions only; the corpus is scanned once and nothing wider than
-    (id, K×8-char hex) ever moves."""
+    On well-split input this is shuffle-free, the 100 TB shape:
+    signature extraction scales with input partitions only, the corpus
+    is scanned once and nothing wider than (id, K×8-char hex) ever
+    moves. An under-split local scan is first round-robin re-split by
+    `queries.common.spread`."""
     import pandas as pd
+
+    from ..queries.common import spread
 
     def sign(batches):
         for pdf in batches:
@@ -366,7 +348,7 @@ def minhash_signatures_mapped(
             yield pd.DataFrame(out)
 
     schema = f"{id_col} long, " + ", ".join(f"h{k} long" for k in range(num_hashes))
-    return _spread(df, id_col, text_col, parallelism).mapInPandas(sign, schema)
+    return spread(df.select(id_col, text_col)).mapInPandas(sign, schema)
 
 
 def minhash_bands_mapped(
@@ -376,13 +358,14 @@ def minhash_bands_mapped(
     n: int = 3,
     num_hashes: int = 16,
     rows_per_band: int = 4,
-    parallelism="auto",
 ) -> DataFrame:
     """(id, band, sig) directly from one mapInPandas pass — the
     signature map and the band projection fused, so the LSH pipeline
     never materializes the K hash columns at all. Bitwise-identical to
     `lsh_bands(minhash_signatures_mapped(df))`."""
     import pandas as pd
+
+    from ..queries.common import spread
 
     n_bands = num_hashes // rows_per_band
 
@@ -416,7 +399,7 @@ def minhash_bands_mapped(
                 }
             )
 
-    return _spread(df, id_col, text_col, parallelism).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         sign, f"{id_col} long, band int, sig string"
     )
 
@@ -426,11 +409,12 @@ def shingle_sets_mapped(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    parallelism="auto",
 ) -> DataFrame:
     """(id, shingles array<string> sorted distinct) in one map pass —
     the per-doc set representation for exact Jaccard verification."""
     import pandas as pd
+
+    from ..queries.common import spread
 
     def to_sets(batches):
         for pdf in batches:
@@ -449,7 +433,7 @@ def shingle_sets_mapped(
                 }
             )
 
-    return _spread(df, id_col, text_col, parallelism).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         to_sets, f"{id_col} long, shingles array<string>"
     )
 
@@ -565,17 +549,20 @@ def simhash_fingerprints_mapped(
     text_col: str = "text",
     n: int = 3,
     bits: int = 32,
-    parallelism="auto",
 ) -> DataFrame:
-    """Shuffle-free SimHash: the fingerprint is a pure per-document
+    """SimHash in one map pass: the fingerprint is a pure per-document
     function — one mapInPandas pass, no explode, no groupBy. Identical
     bit extraction to `simhash_fingerprints` (hex nibble b//4, bit
-    b%4), so outputs match bitwise. The ideal 100 TB shape: a map-only
-    stage that scales with input splits."""
+    b%4), so outputs match bitwise. On well-split input this is
+    shuffle-free, the ideal 100 TB shape: a map-only stage that scales
+    with input splits. An under-split local scan is first round-robin
+    re-split by `queries.common.spread`."""
     import hashlib
 
     import numpy as np
     import pandas as pd
+
+    from ..queries.common import spread
 
     # bit b of a shingle = bit (b % 4) of the VALUE of hex char (b // 4)
     # of its md5 (hex char c = md5 bits [4c, 4c+4) big-endian) — the
@@ -622,7 +609,7 @@ def simhash_fingerprints_mapped(
                 }
             )
 
-    return _spread(df, id_col, text_col, parallelism).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         fingerprint, f"{id_col} long, simhash long"
     )
 

@@ -210,7 +210,6 @@ def rolling_fingerprint(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    parallelism: str | None = "auto",
 ) -> DataFrame:
     """Document fingerprint from Rabin-Karp rolling hashes of character
     ``RK_K``-grams: h(i) = sum_j code(c_{i+j}) * B^(K-1-j) mod M — the
@@ -224,18 +223,15 @@ def rolling_fingerprint(
     doc — no per-char Python. Docs shorter than K characters drop (no
     k-gram exists), matching the SQL range() semantics.
 
-    ``parallelism="auto"`` fans an under-split local scan out to the
-    default parallelism first (a single-row-group corpus file would
+    An under-split local scan is first re-split by
+    `queries.common.spread` (a single-row-group corpus file would
     otherwise serialize the whole kernel on one core — measured 2.7 s
-    -> 0.5 s at sf1); on a well-split real-scale table the repartition
-    is skipped and the op is a pure map stage."""
+    -> 0.5 s at sf1); on a well-split real-scale table the op is a pure
+    map stage."""
     import numpy as np
     import pandas as pd
 
     from ..queries.common import spread
-
-    if parallelism == "auto":
-        df = spread(df.select(id_col, text_col))
 
     pows = np.array(RK_POWS, dtype="int64")
 
@@ -265,7 +261,7 @@ def rolling_fingerprint(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         fp,
         f"{id_col} long, n_kgrams long, fp_min long, fp_max long, fp_modsum long",
     )

@@ -275,26 +275,28 @@ def DAVG(expr: str, prec: str = "DECIMAL(18,9)") -> str:
     return f"({DSUM(expr, prec)} / COUNT(*))"
 
 
-def spread(
-    df: DataFrame,
-    min_parts: int | None = None,
-    bytes_per_split: int | None = None,
-) -> DataFrame:
+def spread(df: DataFrame, bytes_per_split: int | None = None) -> DataFrame:
     """Re-split an under-parallel scan. A single-row-group parquet file
     yields ONE input split, serializing scan-side work (partial
-    aggregation, join probes, explodes) on one core. When the plan has
-    fewer partitions than the cluster's parallelism, round-robin
-    repartition; when the input is already well-split (any real-scale
-    table), this is a no-op — so it never introduces a shuffle at
-    100 TB.
+    aggregation, join probes, explodes, Python map stages) on one core.
+    When the plan has fewer splits than the session's
+    ``defaultParallelism``, round-robin repartition to it; when the
+    input is already well-split (any real-scale table), this is a
+    no-op — so it never introduces a shuffle at 100 TB.
+
+    This is the one re-split rule for every Python map kernel over a
+    corpus: ``operators.dedup`` (``minhash_signatures_mapped``,
+    ``minhash_bands_mapped``, ``shingle_sets_mapped``,
+    ``simhash_fingerprints_mapped``) and ``operators.text.
+    rolling_fingerprint`` call it on their (id, text) projection, so on
+    well-split input each is a pure map stage.
 
     Split-count introspection is driver-side plan metadata only
     (``inputFiles`` + local file sizes), never ``df.rdd`` — converting
     to RDD materializes the Python lineage per call (round-5 ADVICE).
-    For non-local filesystems (s3a/...), a file count >= the target
-    parallelism short-circuits; otherwise sizes are unknown and the
-    input is assumed real-scale (no-op) — a conservative choice that
-    can only skip an optimization, never add a 100 TB shuffle.
+    Off the local filesystem (s3a/...) sizes are unknown and the input
+    is assumed real-scale (no-op) — a conservative choice that can only
+    skip an optimization, never add a 100 TB shuffle.
 
     ``bytes_per_split`` scales the target to the input instead of
     always going full-width: a 0.6 MB scan split 32 ways pays 32 task
@@ -304,34 +306,17 @@ def spread(
     pre-expansion input one task should own (e.g. 256 KB for a ~100x
     explode)."""
     spark = df.sparkSession
-    target = min_parts or spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if len(files) >= target:
+    target = spark.sparkContext.defaultParallelism
+    sizes = _local_file_sizes(df)
+    if sizes is None:
         return df
     try:
         mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except (TypeError, ValueError):
         mpb = 128 * 1024 * 1024
-    est = 0
-    total = 0
-    local_sizes = True
-    for f in files:
-        if f.startswith("file:"):
-            try:
-                sz = os.path.getsize(f[len("file:"):])
-            except OSError:
-                sz = 0
-            total += sz
-            est += max(1, -(-sz // mpb))
-        else:
-            est = target  # unknown FS: assume well-split real input
-            local_sizes = False
-            break
-    if bytes_per_split and local_sizes:
-        target = min(target, max(1, -(-total // bytes_per_split)))
+    est = sum(max(1, -(-sz // mpb)) for sz in sizes)
+    if bytes_per_split:
+        target = min(target, max(1, -(-sum(sizes) // bytes_per_split)))
     if est < target:
         return df.repartition(target)
     return df
@@ -343,21 +328,27 @@ def input_bytes(df: DataFrame) -> int | None:
     same introspection contract as :func:`spread` (never ``df.rdd``).
     Callers use this for size-adaptive decisions (e.g. persist vs
     re-scan); ``None`` must be treated as "real scale"."""
+    sizes = _local_file_sizes(df)
+    return sum(sizes) if sizes else None
+
+
+def _local_file_sizes(df: DataFrame) -> list[int] | None:
+    """Byte sizes of the plan's input files (``[]`` when it has no file
+    source), or ``None`` when any of them is off the local filesystem
+    or cannot be stat'ed."""
     try:
         files = df.inputFiles()
     except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
+        return []
+    sizes = []
     for f in files:
         if not f.startswith("file:"):
             return None
         try:
-            total += os.path.getsize(f[len("file:") :])
+            sizes.append(os.path.getsize(f[len("file:") :]))
         except OSError:
             return None
-    return total
+    return sizes
 
 
 PERSIST_FLOOR_BYTES = 128 * 1024 * 1024  # see maybe_persist

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from . import paths
 from .catalog import register, resolve
 from .config import EngineConfig
-from .sinks import write_single_parquet
+from .sinks import write_bucketed_table, write_single_parquet
 from .sources import GHARCHIVE_EVENT_SCHEMA, read_json_auto
 
 logger = logging.getLogger(__name__)
@@ -140,8 +140,8 @@ class DataLakeTransformer:
 
     def serialise_raw_data(self, process_date: datetime) -> str:
         """Bronze hour → silver parquet (ref serialise_raw_data :35-52)."""
-        raw = self.register_raw_gharchive(self._bronze_hour(process_date))
-        clean = self.clean_raw_gharchive("gharchive_raw") if raw is not None else None
+        self.register_raw_gharchive(self._bronze_hour(process_date))
+        clean = self.clean_raw_gharchive("gharchive_raw")
         sink = paths.sink_path(
             "clean",
             self.config.zone_url("silver"),
@@ -174,8 +174,6 @@ class DataLakeTransformer:
     def serialise_raw_data_bucketed(self, process_date: datetime) -> str:
         """Bronze hour → day-partitioned, repo-bucketed silver table.
         Appends one file per (day, bucket); returns the table name."""
-        from .sinks import write_bucketed_table
-
         self.register_raw_gharchive(self._bronze_hour(process_date))
         # partition key = PROCESSING day (mirrors the reference's
         # directory semantics: aggregate_silver_data reads the

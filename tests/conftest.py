@@ -25,3 +25,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def split_docs_dir(spark, sf_dir, tmp_path_factory):
+    """The smoke `documents` table re-written as one parquet file per
+    default-parallelism slot: an input well enough split that
+    `queries.common.spread` leaves it as it is."""
+    out = str(tmp_path_factory.mktemp("split_docs") / "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs.repartition(spark.sparkContext.defaultParallelism).write.parquet(out)
+    return out

@@ -125,13 +125,16 @@ def test_exact_dedup_finds_planted_twin(spark, sf_dir):
     assert any(r.keeper_id == 0 for r in dup)
 
 
-def test_spread_is_noop_when_well_split(spark, sf_dir):
+def test_spread_is_noop_when_well_split(spark, sf_dir, split_docs_dir):
     from duckdb_pipeline_spark.queries.common import spread
 
+    n = spark.sparkContext.defaultParallelism
+    split = spark.read.parquet(split_docs_dir)
+    assert len(split.inputFiles()) == n
+    assert spread(split) is split
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    assert spread(docs, min_parts=1) is docs  # already >= 1 partition
-    wide = spread(docs, min_parts=16)
-    assert wide.rdd.getNumPartitions() == 16
+    wide = spread(docs)  # one file, one split
+    assert wide.rdd.getNumPartitions() == n
     assert wide.count() == docs.count()
 
 

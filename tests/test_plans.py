@@ -11,7 +11,13 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from duckdb_pipeline_spark.operators.dedup import simhash_fingerprints_mapped
+from duckdb_pipeline_spark.operators.dedup import (
+    minhash_bands_mapped,
+    minhash_signatures_mapped,
+    shingle_sets_mapped,
+    simhash_fingerprints_mapped,
+)
+from duckdb_pipeline_spark.operators.text import rolling_fingerprint
 from duckdb_pipeline_spark.queries import collect_all
 
 
@@ -63,11 +69,30 @@ def test_q5_broadcasts_small_dims(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_simhash_mapped_is_shuffle_free(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    df = simhash_fingerprints_mapped(docs, parallelism=None)
-    plan = plan_text(df, "simple")
-    assert "Exchange" not in plan  # pure map: scan -> Python -> out
+def test_python_map_kernels_resplit_only_an_under_split_scan(spark, sf_dir, split_docs_dir):
+    """Every Python map kernel over a corpus re-splits its input through
+    `queries.common.spread`: on well-split input it is a pure map
+    (scan -> Python -> out), and the one-file smoke table gets exactly
+    one round-robin Exchange, below the Python stage."""
+    kernels = [
+        minhash_signatures_mapped,
+        minhash_bands_mapped,
+        shingle_sets_mapped,
+        simhash_fingerprints_mapped,
+        rolling_fingerprint,
+    ]
+    split = spark.read.parquet(split_docs_dir)
+    one_file = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for kernel in kernels:
+        plan = plan_text(kernel(split), "simple")
+        assert "Exchange" not in plan, (kernel.__name__, plan)
+
+        lines = plan_text(kernel(one_file), "simple").splitlines()
+        exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+        python = [i for i, l in enumerate(lines) if "MapInPandas" in l]
+        assert len(exchanges) == 1, (kernel.__name__, lines)
+        assert "RoundRobinPartitioning" in lines[exchanges[0]]
+        assert python and python[0] < exchanges[0], (kernel.__name__, lines)
 
 
 def test_gold_agg_has_partial_aggregation(spark, sf_dir):

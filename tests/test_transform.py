@@ -95,24 +95,10 @@ def test_aggregate_raw_gharchive(spark):
 
 def test_end_to_end_medallion(spark, tmp_path):
     """bronze .json.gz → silver parquet → gold parquet, exact filenames."""
-    lake = tmp_path / "lake"
-    cfg = EngineConfig(
-        bronze_bucket=str(lake / "bronze"),
-        silver_bucket=str(lake / "silver"),
-        gold_bucket=str(lake / "gold"),
-        scheme="",
-    )
-    process_date = datetime(2023, 1, 1, 12)
-    bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / "12"
-    os.makedirs(bronze_dir)
-    payload = b"\n".join(json.dumps(r).encode() for r in RAW_ROWS)
-    # interleave a malformed line: DROPMALFORMED must skip it
-    payload += b'\n{"id": broken!!\n'
-    with gzip.open(bronze_dir / "2023-1-1-12.json.gz", "wb") as f:
-        f.write(payload)
-
+    # a malformed line among the events: DROPMALFORMED must skip it
+    cfg = _land_hours(tmp_path / "lake", {12: RAW_ROWS + ['{"id": broken!!']})
     t = DataLakeTransformer("gharchive/events", spark, cfg)
-    silver_file = t.serialise_raw_data(process_date)
+    silver_file = t.serialise_raw_data(datetime(2023, 1, 1, 12))
     assert silver_file.endswith("2023-01-01/12/clean_20230101_12.parquet")
     assert os.path.isfile(silver_file)
 
@@ -133,19 +119,7 @@ def test_end_to_end_bucketed_silver_gold_exchange_free(spark, tmp_path):
     ZERO shuffle Exchanges — the silver writer paid the one shuffle at
     ingest time."""
     lake = tmp_path / "lake"
-    cfg = EngineConfig(
-        bronze_bucket=str(lake / "bronze"),
-        silver_bucket=str(lake / "silver"),
-        gold_bucket=str(lake / "gold"),
-        scheme="",
-    )
-    for hour, rows in ((12, RAW_ROWS), (13, RAW_ROWS[:1])):
-        bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / str(hour)
-        os.makedirs(bronze_dir)
-        payload = b"\n".join(json.dumps(r).encode() for r in rows)
-        with gzip.open(bronze_dir / f"2023-1-1-{hour}.json.gz", "wb") as f:
-            f.write(payload)
-
+    cfg = _land_hours(lake, {12: RAW_ROWS, 13: RAW_ROWS[:1]})
     t = DataLakeTransformer("gharchive/events", spark, cfg)
     try:
         tname = t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
@@ -182,11 +156,14 @@ def test_end_to_end_bucketed_silver_gold_exchange_free(spark, tmp_path):
 
 def _land_hours(lake, hours) -> EngineConfig:
     """Bronze ``{hour: rows}`` as one .json.gz per hour of 2023-01-01
-    under ``lake``; returns the local-dir lake config."""
+    under ``lake``; returns the local-dir lake config. A row is an event
+    dict, or a str landed verbatim as one line."""
     for hour, rows in hours.items():
         bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / str(hour)
         os.makedirs(bronze_dir)
-        payload = b"\n".join(json.dumps(r).encode() for r in rows)
+        payload = b"\n".join(
+            (r if isinstance(r, str) else json.dumps(r)).encode() for r in rows
+        )
         with gzip.open(bronze_dir / f"2023-1-1-{hour}.json.gz", "wb") as f:
             f.write(payload)
     return EngineConfig(
@@ -195,6 +172,39 @@ def _land_hours(lake, hours) -> EngineConfig:
         gold_bucket=str(lake / "gold"),
         scheme="",
     )
+
+
+def test_flat_serialise_replay_is_a_no_op(spark, tmp_path):
+    """Replaying an hour through the reference-parity path replaces its
+    one silver file in place: the hour dir still holds exactly one
+    ``clean_*.parquet`` with the same rows, no ``_staging_*`` dir is
+    left anywhere in the lake, and the day's gold is unchanged."""
+    lake = tmp_path / "lake"
+    cfg = _land_hours(lake, {12: RAW_ROWS, 13: RAW_ROWS[:1]})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    silver = t.serialise_raw_data(datetime(2023, 1, 1, 12))
+    t.serialise_raw_data(datetime(2023, 1, 1, 13))
+    silver_rows = rows(silver)
+    gold_rows = rows(t.aggregate_silver_data(datetime(2023, 1, 1)))
+
+    assert t.serialise_raw_data(datetime(2023, 1, 1, 12)) == silver
+    hour_dir = os.path.dirname(silver)
+    assert [n for n in os.listdir(hour_dir) if n.startswith("clean_")] == [
+        os.path.basename(silver)
+    ]
+    assert rows(silver) == silver_rows
+    assert rows(t.aggregate_silver_data(datetime(2023, 1, 1))) == gold_rows
+    left = [
+        os.path.join(d, n)
+        for d, dirs, _ in os.walk(lake)
+        for n in dirs
+        if n.startswith("_staging_")
+    ]
+    assert left == []
 
 
 def _many_repos(first_id: int, n: int) -> list[dict]:
