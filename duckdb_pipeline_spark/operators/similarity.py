@@ -1,49 +1,183 @@
-"""Similarity search over embedding columns (north-star op).
+"""Similarity search over embedding columns: exact, LSH, IVF and PQ
+top-k, the k-NN join family, and the k-means / PQ / PCA kernels.
 
-Exact brute-force cosine as the baseline; label/bucket-blocked variants
-as the scale path (the same code shape used for IVF: restrict the pair
-space by a partition key before the distance computation).
+Fixed-point contract. It is what keeps every vector query here
+bitwise equal to its DuckDB oracle (double -> decimal casts are not
+portable across engines at this scale; see queries/common.py):
 
-Cross-engine determinism: element products are computed in float64 and
-fixed-point-truncated (``floor(x * 1e9)`` → BIGINT) before summation.
-Integer sums are exact and association-order-free, so Spark and the
-DuckDB oracle produce bitwise-identical cosines (double→decimal casts
-are NOT portable at high scale — measured; see queries/common.py).
+- **Terms.** Each term is computed in float64 and floored at a fixed
+  scale, with the same IEEE ops the SQL oracles evaluate:
+  ``floor(a * b * SCALE)`` for an inner product (a*b first, then
+  *SCALE, then floor), ``floor((a - b)**2 * SCALE)`` for a squared L2,
+  ``floor(x * SCALE)`` for one coordinate.
+- **Sums.** Sums of those integers are exact and association-free, so
+  partitioning, chunking and row order never change a result. They
+  are taken in one of two forms. As int64 (`_fp_sqdist`, `_fp_ints`,
+  the Gram and Lloyd partials), exact up to 2^63. As float64
+  (`_fp_dots_f64`, every inner product), which skips an int64 copy of
+  the dominant temp and is exact while every partial sum stays below
+  2^53: ``d * SCALE * max|a| * max|b| < 2^53``. `_fp_dots_f64` checks
+  that envelope on every call and raises ``ValueError`` outside it.
+- **Cosine.** ``dot / (sqrt(|a|^2) * sqrt(|b|^2))`` over those integer
+  sums: one IEEE divide on identical operands in both engines.
+- **Ties.** Cells rank by (inner product desc, cell id asc)
+  (`_rank_cells`), neighbours by (cosine desc, neighbour id asc)
+  (`_topk_rows` and the merge windows), nearest centroids and
+  codewords by (squared L2 asc, lower id) — argmin's first minimum.
 
-Scale notes: the posexplode formulation shuffles (n_vectors × dim)
-rows; for 100 TB-scale ANN the blocked variant prunes to
-per-bucket brute force (IVF-style), and the `zip_with` fold variant
-(`cosine_zip`) avoids the explode entirely when the pair list is
-already bounded — it stays in whole-stage codegen.
+Plan shapes: the posexplode formulation shuffles (n_vectors x dim)
+rows; the blocked and IVF variants prune to per-bucket brute force,
+and the `zip_with` fold (`cosine_zip`) avoids the explode when the pair
+list is already bounded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # fixed-point scale for exact integer sums
 
+# probe rows scored per pair-matrix chunk in `_topk_rows`: memory is
+# O(chunk x build rows x dim), never the full pair matrix
+_TOPK_CHUNK = 128
 
-def _fp_dots_f64(A, B):
-    """Sum over the last axis of floor(a * b * SCALE) — the fixed-point
-    dot kernel for the chunked numpy paths, computed with ONE in-place
-    temp chain instead of three fresh allocations (the naive
-    ``np.floor(A * B * SCALE)`` materializes mult, scale, and floor
-    temps — at a 256 x 2500 x 64 chunk that is 3 x 330 MB per step and
-    the kernel goes allocator-bound: measured 9.3 s -> 2.6 s per
-    SemDeDup cell). The sum runs in float64, which is bitwise the
-    integer sum as long as every partial stays below 2^53 — i.e.
-    d * SCALE * max|x|^2 < 2^53, asserted by callers that take
-    arbitrary input (cosine_pairs_blocked_vectorized); the operand
-    order (a*b, then *SCALE, then floor) is identical IEEE ops to the
-    previous formulation and to the SQL oracles."""
-    import numpy as np
 
+def _fp_ints(X):
+    """floor(x * SCALE) per coordinate, as int64."""
+    return np.floor(X * float(SCALE)).astype("int64")
+
+
+def _fp_terms(A, B):
+    """floor(a * b * SCALE) per broadcast element pair, in float64,
+    through ONE in-place temp chain: the naive ``np.floor(A * B *
+    SCALE)`` makes three temps, and at a 256 x 2500 x 64 chunk the
+    kernel went allocator-bound (9.3 s -> 2.6 s per SemDeDup cell)."""
     t = np.multiply(A, B)
     np.multiply(t, SCALE, out=t)
     np.floor(t, out=t)
-    return t.sum(axis=-1)
+    return t
+
+
+def _fp_dots_f64(A, B):
+    """The fixed-point inner product: terms summed over the last axis
+    in float64, guarded by the 2^53 envelope. Skipping the int64 copy
+    of the dominant temp cut the sf10 SemDeDup cells by 30%."""
+    amax = float(np.abs(A).max(initial=0.0))
+    bmax = float(np.abs(B).max(initial=0.0))
+    if np.shape(A)[-1] * SCALE * amax * bmax >= 2**53:
+        raise ValueError(
+            f"fixed-point float64-sum envelope exceeded: d={np.shape(A)[-1]} "
+            f"SCALE={SCALE} max|a|={amax} max|b|={bmax}"
+        )
+    return _fp_terms(A, B).sum(axis=-1)
+
+
+def _fp_sqdist(A, B):
+    """The fixed-point squared L2 over the last axis, summed as int64."""
+    return np.floor((A - B) ** 2 * float(SCALE)).astype("int64").sum(axis=-1)
+
+
+def _vectors(pdf, vec_col):
+    """The float64 (rows, d) matrix of a pandas column of arrays."""
+    return np.stack(pdf[vec_col].to_numpy()).astype("float64")
+
+
+def _vector_batches(batches, vec_col):
+    """(pdf, V) per Arrow batch: NULL vectors dropped, empty batches
+    skipped, V the batch's float64 vector matrix."""
+    for pdf in batches:
+        pdf = pdf.dropna(subset=[vec_col])
+        if len(pdf):
+            yield pdf, _vectors(pdf, vec_col)
+
+
+def _rank_cells(V, C, n):
+    """Each row's top ``n`` cells (row positions of the centroid matrix
+    C) by fixed-point inner product, ties to the lowest cell id:
+    an int array of shape (rows, n)."""
+    scores = _fp_dots_f64(V[:, None, :], C[None, :, :])
+    return np.argsort(-scores, axis=1, kind="stable")[:, :n]
+
+
+def _query_cosines(V, q):
+    """Fixed-point cosine of every row of V against one vector q."""
+    return _fp_dots_f64(V, q[None, :]) / (
+        np.sqrt(_fp_dots_f64(V, V)) * np.sqrt(_fp_dots_f64(q, q))
+    )
+
+
+def _topk_rows(pids, P, bids, B, keep):
+    """The local top-k kernel of the k-NN family: each probe row's
+    ``keep`` best build rows by (cosine desc, nbr id asc), as
+    (vec_id, nbr_id, cosine) rows, rank-ordered within each probe.
+    Dropping self pairs and the final cut are the caller's."""
+    o = np.argsort(bids, kind="stable")  # ties in cosine -> lower nbr id
+    bids, B = bids[o], B[o]
+    keep = min(keep, len(bids))
+    rp = np.sqrt(_fp_dots_f64(P, P))
+    rb = np.sqrt(_fp_dots_f64(B, B))
+    frames = []
+    for lo in range(0, len(pids), _TOPK_CHUNK):
+        hi = min(lo + _TOPK_CHUNK, len(pids))
+        cos = _fp_dots_f64(P[lo:hi, None, :], B[None, :, :]) / (
+            rp[lo:hi, None] * rb[None, :]
+        )
+        idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep]
+        frames.append(
+            pd.DataFrame(
+                {
+                    "vec_id": np.repeat(pids[lo:hi], keep),
+                    "nbr_id": bids[idx].reshape(-1),
+                    "cosine": np.take_along_axis(cos, idx, axis=1).reshape(-1),
+                }
+            )
+        )
+    return pd.concat(frames, ignore_index=True)
+
+
+def _ivf_centroids_and_queries(
+    embeddings: DataFrame, query_ids, n_cells: int, id_col: str, vec_col: str
+):
+    """The IVF centroid matrix and ``{id: vector}`` for the
+    ``query_ids`` present, in ONE bounded driver job (n_cells + queries
+    rows). The centroids are the vectors of ids 0..n_cells-1 (the
+    deterministic stand-in for k-means centroids); a row's position in
+    C is the cell id the SQL oracles compute with, so a sparse id space
+    raises instead of silently renumbering the cells."""
+    cond = F.col(id_col) < n_cells
+    if query_ids:
+        cond = cond | F.col(id_col).isin([int(q) for q in query_ids])
+    rows = embeddings.where(cond).select(id_col, vec_col).collect()
+    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
+    cell_ids = sorted(i for i in by_id if i < n_cells)
+    if cell_ids != list(range(n_cells)):
+        raise ValueError(
+            f"IVF centroid ids must be dense 0..{n_cells - 1}; got {cell_ids}"
+        )
+    C = np.stack([by_id[i] for i in cell_ids])
+    return C, {q: by_id[q] for q in query_ids if q in by_id}
+
+
+def _lowest_id_vectors(df: DataFrame, n: int, id_col: str, vec_col: str):
+    """The vectors of the ``n`` lowest ids of ``df``, in id order: the
+    centroids of an index over a slice whose ids are not dense from 0."""
+    rows = df.select(id_col, vec_col).orderBy(id_col).limit(n).collect()
+    return np.stack([np.asarray(r[vec_col], dtype="float64") for r in rows])
+
+
+def _assign_cells(embeddings: DataFrame, C, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vector, cell) with each non-NULL vector's top cell of C: a
+    pure Arrow-batch map."""
+
+    def assign(batches):
+        for pdf, V in _vector_batches(batches, vec_col):
+            yield pdf.assign(cell=_rank_cells(V, C, 1)[:, 0].astype("int32"))
+
+    emb = embeddings.select(id_col, vec_col)
+    return emb.mapInPandas(assign, f"{emb.schema.simpleString()[7:-1]}, cell int")
 
 
 def int_dot(a, b):
@@ -155,12 +289,8 @@ def cosine_pairs_blocked_vectorized(
 
     Memory is bounded O(chunk x n x dim) per task by chunking the
     row axis of the pair matrix — block size does not need to fit as
-    n² x dim temporaries. Exactness: terms are floor(x*y*SCALE) in
-    float64 — identical IEEE ops to the JVM/DuckDB formulations, and
-    integer sums are association-free.
+    n² x dim temporaries.
     """
-    import numpy as np
-    import pandas as pd
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         # NULL embeddings drop out (the join formulation's NULL cosine
@@ -170,22 +300,7 @@ def cosine_pairs_blocked_vectorized(
         n = len(ids)
         if n < 2:
             return pd.DataFrame()
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        # float64 sums of floor() terms are EXACTLY the integer sums as
-        # long as every partial stays below 2^53: each |term| <
-        # SCALE * max|x|^2, so d * SCALE * max|x|^2 < 2^53 guarantees
-        # it (here: 64 * 1e9 * 0.34 ~ 2.2e10, margin ~4e5x). Skipping
-        # the astype('int64') pass removes a full copy of the dominant
-        # chunk temp (measured -30% on the sf10 SemDeDup cells); the
-        # envelope asserts fast-fail if a future embedding family
-        # violates it (the CUSUM-envelope precedent).
-        amax = float(np.abs(V).max())
-        if V.shape[1] * SCALE * amax * amax >= 2**53:
-            raise ValueError(
-                f"fixed-point float64-sum envelope exceeded: d={V.shape[1]} "
-                f"SCALE={SCALE} max|x|={amax}"
-            )
-        # exact per-vector norms: sum of floor(x*x*SCALE)
+        V = _vectors(pdf, vec_col)
         rs = np.sqrt(_fp_dots_f64(V, V))
         out_a, out_b, out_c = [], [], []
         for lo in range(0, n, chunk):
@@ -230,27 +345,14 @@ def cosine_topk_vectorized(
     3 folds x dim ops per row dominate at scale. Here each Arrow batch
     does two matrix ops in C. The query vector is fetched once (one
     1-row job) and closure-captured — it never rides along per row."""
-    import numpy as np
-    import pandas as pd
-
     qrow = embeddings.where(F.col(id_col) == query_id).select(vec_col).first()
     if qrow is None:
         return _empty_topk(embeddings, id_col)
     qv = np.asarray(qrow[0], dtype="float64")
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
 
     def score(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
-            yield pd.DataFrame({id_col: pdf[id_col], "cosine": cos})
+        for pdf, V in _vector_batches(batches, vec_col):
+            yield pd.DataFrame({id_col: pdf[id_col], "cosine": _query_cosines(V, qv)})
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(
         score, f"{id_col} long, cosine double"
@@ -374,52 +476,38 @@ def lsh_topk_vectorized(
     bucket codes AND candidate cosines are computed per Arrow batch in
     numpy (int64 matmul for the fixed-point projections — the
     `zip_with`/`aggregate` HOF formulation evaluates interpreted per
-    element, n_bits × dim ops per row; round-1 verdict's top
-    similarity cost). The query's vector and bucket are derived once
-    driver-side (one 1-row job) and closure-captured.
+    element, n_bits × dim ops per row). The query's vector and bucket
+    are derived once driver-side (one 1-row job) and closure-captured.
 
     Scale shape: a pure map over the embedding table + global top-k —
     no shuffle besides the final k-row TakeOrdered. With a
     bucket-partitioned layout the scan itself would prune instead of
     the in-map filter."""
-    import numpy as np
-    import pandas as pd
-
     W = np.asarray(lsh_hyperplanes(n_bits, dim), dtype="int64")  # (bits, dim)
     bitpow = np.int64(1) << np.arange(n_bits, dtype=np.int64)
+
+    def codes(V):
+        return (((_fp_ints(V) @ W.T) >= 0).astype(np.int64) * bitpow).sum(axis=1)
 
     qrow = embeddings.where(F.col(id_col) == query_id).select(vec_col).first()
     if qrow is None:
         return _empty_topk(embeddings, id_col)
     qv = np.asarray(qrow[0], dtype="float64")
-    qi = np.floor(qv * SCALE).astype("int64")
-    qb = int((( (qi @ W.T) >= 0).astype(np.int64) * bitpow).sum())
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
+    qb = int(codes(qv[None, :])[0])
 
     def score(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Vi = np.floor(V * SCALE).astype("int64")
-            codes = (((Vi @ W.T) >= 0).astype(np.int64) * bitpow).sum(axis=1)
+        for pdf, V in _vector_batches(batches, vec_col):
+            c = codes(V)
             if multiprobe:
-                x = codes ^ qb
-                hamming = ((x[:, None] >> np.arange(n_bits)) & 1).sum(axis=1)
+                hamming = (((c ^ qb)[:, None] >> np.arange(n_bits)) & 1).sum(axis=1)
                 ok = hamming <= 1
             else:
-                ok = codes == qb
+                ok = c == qb
             ok &= pdf[id_col].to_numpy() != query_id
-            if not ok.any():
-                continue
-            Vs = V[ok]
-            dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(Vs * Vs * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy()[ok], "cosine": cos})
+            if ok.any():
+                yield pd.DataFrame(
+                    {id_col: pdf[id_col].to_numpy()[ok], "cosine": _query_cosines(V[ok], qv)}
+                )
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(
         score, f"{id_col} long, cosine double"
@@ -463,76 +551,37 @@ def ivf_topk_vectorized(
     """IVF (inverted-file) approximate top-k — the third ANN strategy
     next to brute-force (`cosine_topk*`) and LSH (`lsh_topk*`):
 
-    1. coarse quantizer: ``n_cells`` centroids. Deterministic stand-in
-       here: the embeddings of the ``n_cells`` smallest ids (at real
-       scale the centroids come from a k-means sample; everything
-       downstream — assignment, probing, re-ranking — is identical).
-    2. cell assignment: argmax integer inner product (fixed-point
-       ``floor(v_i * c_i * SCALE)`` term sums — exact, engine-portable;
-       ties break to the smallest cell id). Inner-product cells = the
-       Faiss IVFFlat/METRIC_INNER_PRODUCT variant.
-    3. probe: score the query against the centroids the same way, take
-       the top ``n_probe`` cells.
+    1. coarse quantizer: ``n_cells`` centroids, the embeddings of ids
+       0..n_cells-1 (at real scale they come from a k-means sample;
+       everything downstream is identical);
+    2. cell assignment: each vector's top cell by inner product (the
+       Faiss IVFFlat/METRIC_INNER_PRODUCT variant);
+    3. probe: the query's top ``n_probe`` cells;
     4. exact fixed-point cosine re-rank inside the probed cells only.
 
     Scale shape: assignment is a pure map (numpy matmul per Arrow
     batch); at corpus scale the cell id becomes the table's partition
-    key, so probing prunes the SCAN (partition pruning) instead of
-    filtering in-map — same plan shape as `lsh_topk_vectorized`.
-    The centroid matrix and query vector are fetched once (two bounded
-    sub-linear jobs) and closure-captured."""
-    import numpy as np
-    import pandas as pd
-
-    # centroids + query vector in ONE bounded driver job (was two; each
-    # sub-second job at small sf is mostly scheduling floor)
-    rows = (
-        embeddings.where((F.col(id_col) < n_cells) | (F.col(id_col) == query_id))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
-    if query_id not in by_id:
+    key, so probing prunes the SCAN instead of filtering in-map
+    (`ivf_write_index` + `ivf_topk_pruned`). Centroids and the query
+    vector are fetched in one bounded driver job and closure-captured."""
+    C, Q = _ivf_centroids_and_queries(embeddings, [query_id], n_cells, id_col, vec_col)
+    if query_id not in Q:
         return _empty_topk(embeddings, id_col)
-    C = np.stack([by_id[i] for i in sorted(i for i in by_id if i < n_cells)])
-    qv = by_id[query_id]
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
-
-    def cell_scores(V: np.ndarray) -> np.ndarray:
-        # (rows, cells) exact integer IP scores: floor per TERM, then sum
-        return (
-            np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-            .astype("int64")
-            .sum(axis=2)
-        )
-
-    qs = cell_scores(qv[None, :])[0]
-    # top n_probe cells by (score desc, cell id asc)
-    probe = set(np.lexsort((np.arange(len(qs)), -qs))[:n_probe].tolist())
+    qv = Q[query_id]
+    probe = _rank_cells(qv[None, :], C, n_probe)[0]
 
     def score(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            cells = cell_scores(V).argmax(axis=1)  # first max == smallest id
-            ok = np.isin(cells, list(probe)) & (pdf[id_col].to_numpy() != query_id)
-            if not ok.any():
-                continue
-            Vs = V[ok]
-            dot_i = np.floor(Vs * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(Vs * Vs * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[ok],
-                    "cell": cells[ok].astype("int32"),
-                    "cosine": cos,
-                }
-            )
+        for pdf, V in _vector_batches(batches, vec_col):
+            cells = _rank_cells(V, C, 1)[:, 0]
+            ok = np.isin(cells, probe) & (pdf[id_col].to_numpy() != query_id)
+            if ok.any():
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col].to_numpy()[ok],
+                        "cell": cells[ok].astype("int32"),
+                        "cosine": _query_cosines(V[ok], qv),
+                    }
+                )
 
     scored = embeddings.select(id_col, vec_col).mapInPandas(
         score, f"{id_col} long, cell int, cosine double"
@@ -545,45 +594,13 @@ def ivf_topk_vectorized(
 
 
 # ---------------------------------------------------------------------------
-# IVF with a REALIZED partitioned layout: the docstring above promises
-# that "at corpus scale the cell id becomes the table's partition key,
-# so probing prunes the SCAN" — these helpers make that true. The index
-# is the embedding table written parquet-partitioned by cell id;
-# probing reads it with `cell IN (probed)`, which Spark turns into
-# partition pruning: only the probed cell directories are listed and
-# scanned (PartitionFilters in the plan, asserted by
-# tests/test_plans.py). At 100 TB with n_cells=4096 / n_probe=64 this
-# reads 64/4096 of the table instead of all of it.
+# IVF with a REALIZED partitioned layout: the index is the embedding
+# table written parquet-partitioned by cell id; probing reads it with
+# `cell IN (probed)`, which Spark turns into partition pruning: only the
+# probed cell directories are listed and scanned (PartitionFilters in
+# the plan, asserted by tests/test_plans.py). At 100 TB with
+# n_cells=4096 / n_probe=64 this reads 64/4096 of the table.
 # ---------------------------------------------------------------------------
-
-
-def _ivf_centroids_and_query(
-    embeddings: DataFrame,
-    query_id: int | None,
-    n_cells: int,
-    id_col: str,
-    vec_col: str,
-):
-    """Fetch the deterministic centroid matrix (and optionally the
-    query vector) in ONE bounded driver job — n_cells+1 rows."""
-    import numpy as np
-
-    cond = F.col(id_col) < n_cells
-    if query_id is not None:
-        cond = cond | (F.col(id_col) == query_id)
-    rows = embeddings.where(cond).select(id_col, vec_col).collect()
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
-    cell_ids = sorted(i for i in by_id if i < n_cells)
-    # row position in C must equal the cell id the SQL oracle computes
-    # with; a sparse id space would silently skew assignment (ADVICE
-    # r7) — fail loudly instead.
-    if cell_ids != list(range(n_cells)):
-        raise ValueError(
-            f"IVF centroid ids must be dense 0..{n_cells - 1}; got {cell_ids}"
-        )
-    C = np.stack([by_id[i] for i in cell_ids])
-    qv = by_id.get(query_id) if query_id is not None else None
-    return C, qv
 
 
 def ivf_write_index(
@@ -594,42 +611,22 @@ def ivf_write_index(
     vec_col: str = "embedding",
     centroids=None,
 ) -> None:
-    """Build the IVF index: assign every vector its cell (same exact
-    integer-IP argmax as `ivf_topk_vectorized`) and write the table
-    parquet-partitioned by cell id. One pass over the data; the
-    assignment is a pure Arrow-batch map. Run once per corpus version —
+    """Build the IVF index: assign every vector its cell (as
+    `ivf_topk_vectorized` does) and write the table parquet-partitioned
+    by cell id. One pass over the data; run once per corpus version —
     the ANN query path (`ivf_topk_pruned`) then partition-prunes.
 
     ``centroids``: explicit (n_cells, dim) float64 matrix for corpora
     whose ids are not dense from 0 (e.g. a SUBSET slice being indexed
     for incremental probing — `knn_probe_index` re-reads the same
     matrix as the index's lowest-id rows, so pass those)."""
-    import numpy as np
-    import pandas as pd
-
     if centroids is not None:
         C = np.asarray(centroids, dtype="float64")
     else:
-        C, _ = _ivf_centroids_and_query(embeddings, None, n_cells, id_col, vec_col)
-
-    def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            # exact-integer argmax is unchanged under the float64 sum
-            # (every score is an exact integer < 2^53; _fp_dots_f64 doc)
-            scores = _fp_dots_f64(V[:, None, :], C[None, :, :])
-            out = pdf.copy()
-            out["cell"] = scores.argmax(axis=1).astype("int32")
-            yield out
-
-    schema = embeddings.select(id_col, vec_col).schema.simpleString()[7:-1]
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, f"{schema}, cell int"
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
+        C, _ = _ivf_centroids_and_queries(embeddings, (), n_cells, id_col, vec_col)
+    _assign_cells(embeddings, C, id_col, vec_col).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(path)
 
 
 def ivf_topk_pruned(
@@ -650,45 +647,29 @@ def ivf_topk_pruned(
     `ivf_topk_vectorized` — same centroids, same assignment, same
     re-rank — the physical plan just reads n_probe/n_cells of the data.
     """
-    import numpy as np
-    import pandas as pd
-
-    C, qv = _ivf_centroids_and_query(embeddings, query_id, n_cells, id_col, vec_col)
-    if qv is None:
+    C, Q = _ivf_centroids_and_queries(embeddings, [query_id], n_cells, id_col, vec_col)
+    if query_id not in Q:
         return _empty_topk(embeddings, id_col)
-    nq_i = int(np.floor(qv * qv * SCALE).astype("int64").sum())
-    qs = np.floor(qv[None, :] * C * SCALE).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
-
-    idx = spark.read.parquet(index_path)
+    qv = Q[query_id]
+    probe = [int(c) for c in _rank_cells(qv[None, :], C, n_probe)[0]]
 
     def rerank(batches):
-        for pdf in batches:
-            pdf = pdf[pdf[id_col] != query_id].dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            dot_i = np.floor(V * qv[None, :] * SCALE).astype("int64").sum(axis=1)
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            cos = dot_i.astype("float64") / (
-                np.sqrt(na_i.astype("float64")) * np.sqrt(float(nq_i))
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cell": pdf["cell"].to_numpy().astype("int32"),
-                    "cosine": cos,
-                }
-            )
+        for pdf, V in _vector_batches(batches, vec_col):
+            ok = pdf[id_col].to_numpy() != query_id
+            if ok.any():
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col].to_numpy()[ok],
+                        "cell": pdf["cell"].to_numpy()[ok].astype("int32"),
+                        "cosine": _query_cosines(V[ok], qv),
+                    }
+                )
 
-    probed = idx.where(F.col("cell").isin(probe))  # partition-pruned scan
+    probed = spark.read.parquet(index_path).where(F.col("cell").isin(probe))
     scored = probed.select(id_col, vec_col, "cell").mapInPandas(
         rerank, f"{id_col} long, cell int, cosine double"
     )
-    return (
-        scored.orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
 
 
 def ann_recall_audit(
@@ -717,77 +698,33 @@ def ann_recall_audit(
     over <= |queries| * 2 * k * n_partitions rows — the classic
     distributed top-k: corpus never shuffles, partials do. Everything
     downstream of the window is counting on <= |queries| * 2 * k rows.
-
-    All scoring uses the exact fixed-point integer sums of the other
-    similarity operators (floor per term, int64 sums; the only float op
-    is the final cosine division on identical integers) with total
-    order (cosine DESC, id) — bitwise-reproducible and oracle-portable.
     Recall is n_hit / n_true where n_true = |bf top-k| (== k except in
     degenerate tiny corpora)."""
-    import numpy as np
-    import pandas as pd
-
-    qset = sorted(set(query_ids))
-    rows = (
-        embeddings.where(
-            (F.col(id_col) < n_cells) | F.col(id_col).isin([int(q) for q in qset])
-        )
-        .select(id_col, vec_col)
-        .collect()
+    C, Q = _ivf_centroids_and_queries(
+        embeddings, sorted(set(query_ids)), n_cells, id_col, vec_col
     )
-    by_id = {r[0]: np.asarray(r[1], dtype="float64") for r in rows}
-    cell_ids = sorted(i for i in by_id if i < n_cells)
-    # C's row positions must equal cell ids (the oracle's argmax index
-    # IS the vec_id); a sparse centroid id space must fail loudly
-    # rather than silently skew cell assignment (ADVICE r7).
-    if cell_ids != list(range(n_cells)):
-        raise ValueError(
-            f"IVF centroid ids must be dense 0..{n_cells - 1}; got {cell_ids}"
-        )
-    C = np.stack([by_id[i] for i in cell_ids])
-    live_q = [q for q in qset if q in by_id]
-    if not live_q:
+    if not Q:
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, n_true long, n_hit long, recall_pct double"
         )
-    Qm = np.stack([by_id[q] for q in live_q])  # (Q, dim)
-    nq_i = np.floor(Qm * Qm * SCALE).astype("int64").sum(axis=1)  # (Q,)
-    # per-query probe cells: integer IP score vs centroids, top n_probe
-    # by (score DESC, cell_id ASC)
-    qcs = np.floor(Qm[:, None, :] * C[None, :, :] * SCALE).astype("int64").sum(axis=2)
-    probes = []
-    for j in range(len(live_q)):
-        order = np.lexsort((np.arange(qcs.shape[1]), -qcs[j]))
-        probes.append(set(order[:n_probe].tolist()))
-    qids = np.asarray(live_q, dtype="int64")
+    qids = np.asarray(sorted(Q), dtype="int64")
+    Qm = np.stack([Q[q] for q in qids.tolist()])  # (Q, dim)
+    nq = _fp_dots_f64(Qm, Qm)  # (Q,)
+    probes = _rank_cells(Qm, C, n_probe)  # (Q, n_probe)
 
     def partials(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+        for pdf, V in _vector_batches(batches, vec_col):
             ids = pdf[id_col].to_numpy().astype("int64")
-            cells = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-                .argmax(axis=1)  # first max == smallest cell id
-            )
-            na_i = np.floor(V * V * SCALE).astype("int64").sum(axis=1)
-            D = np.floor(V[:, None, :] * Qm[None, :, :] * SCALE).astype("int64").sum(
-                axis=2
+            cells = _rank_cells(V, C, 1)[:, 0]
+            cos = _fp_dots_f64(V[:, None, :], Qm[None, :, :]) / (
+                np.sqrt(_fp_dots_f64(V, V))[:, None] * np.sqrt(nq)[None, :]
             )  # (rows, Q)
-            cos = D.astype("float64") / (
-                np.sqrt(na_i.astype("float64"))[:, None]
-                * np.sqrt(nq_i.astype("float64"))[None, :]
-            )
             out_q, out_i, out_s, out_c = [], [], [], []
             for j, q in enumerate(qids):
                 keep = ids != q
                 for side, mask in (
                     ("bf", keep),
-                    ("ivf", keep & np.isin(cells, list(probes[j]))),
+                    ("ivf", keep & np.isin(cells, probes[j])),
                 ):
                     if not mask.any():
                         continue
@@ -809,8 +746,6 @@ def ann_recall_audit(
                     "cosine": pd.Series(out_c, dtype="float64"),
                 }
             )
-
-    from pyspark.sql import Window
 
     part = embeddings.select(id_col, vec_col).mapInPandas(
         partials, f"query_id long, {id_col} long, side string, cosine double"
@@ -842,7 +777,6 @@ def ann_recall_audit(
 def gram_matrix_partials(
     embeddings: DataFrame,
     vec_col: str = "embedding",
-    chunk: int = 512,
 ) -> DataFrame:
     """Per-partition partial second-moment (Gram) matrix of an
     embedding column: each task folds its rows into ONE d x d int64
@@ -850,42 +784,27 @@ def gram_matrix_partials(
     X^T X partials are what a 1000-executor covariance computation
     ships to the reducer, d^2 numbers per task no matter how many
     vectors the task scanned). Emits the upper triangle as
-    (i, j, s, n) rows, 1-based indices, i <= j; terms follow the
-    module's fixed-point contract — floor(x_i * x_j * SCALE) in
-    float64, summed as int64, so partials re-aggregate exactly and the
-    result is bitwise-identical to the oracle's unnest-and-SUM
-    formulation regardless of row order or partitioning.
+    (i, j, s, n) rows, 1-based indices, i <= j; terms floor(x_i * x_j *
+    SCALE) summed as int64, so partials re-aggregate exactly whatever
+    the row order or partitioning.
 
-    Memory is bounded O(chunk * d^2) per task by chunking the row axis
-    of the outer-product tensor; NULL embeddings drop out (matching
-    the SQL formulation's NULL-element behavior under WHERE e IS NOT
-    NULL)."""
-    import numpy as np
-    import pandas as pd
+    Memory is bounded O(512 * d^2) per task by chunking the row axis of
+    the outer-product tensor; NULL embeddings drop out (matching the SQL
+    formulation's WHERE e IS NOT NULL)."""
 
     def fold(batches):
         acc = None
         n = 0
-        for pdf in batches:
-            col = pdf[vec_col].dropna()
-            if not len(col):
-                continue
-            V = np.stack(col.to_numpy()).astype("float64")
+        for _, V in _vector_batches(batches, vec_col):
             if acc is None:
-                d = V.shape[1]
-                acc = np.zeros((d, d), dtype="int64")
+                acc = np.zeros((V.shape[1], V.shape[1]), dtype="int64")
             n += len(V)
-            for lo in range(0, len(V), chunk):
-                W = V[lo : lo + chunk]
-                acc += (
-                    np.floor(W[:, :, None] * W[:, None, :] * float(SCALE))
-                    .astype("int64")
-                    .sum(axis=0)
-                )
+            for lo in range(0, len(V), 512):
+                W = V[lo : lo + 512]
+                acc += _fp_terms(W[:, :, None], W[:, None, :]).astype("int64").sum(axis=0)
         if acc is None:
             return
-        d = acc.shape[0]
-        iu, ju = np.triu_indices(d)
+        iu, ju = np.triu_indices(acc.shape[0])
         yield pd.DataFrame(
             {
                 "i": (iu + 1).astype("int32"),
@@ -900,81 +819,72 @@ def gram_matrix_partials(
     )
 
 
+def _nearest_fold(W, C, sums, counts) -> int:
+    """Assign each row of W to its nearest row of C (fixed-point squared
+    L2, ties to the lower row) and fold the rows' fixed-point
+    coordinates into ``sums``/``counts`` in place. Returns the exact sum
+    of the assigned distances."""
+    D = _fp_sqdist(W[:, None, :], C[None, :, :])
+    a = D.argmin(axis=1)
+    np.add.at(sums, a, _fp_ints(W))
+    counts += np.bincount(a, minlength=len(C))
+    return int(D.min(axis=1).sum())
+
+
+def _member_frame(label_col, labels, sums, counts) -> pd.DataFrame:
+    """(label, i, s, n) rows for every label with members: i is the
+    1-based component index, s the fixed-point component sum."""
+    hit = counts > 0
+    d = sums.shape[1]
+    return pd.DataFrame(
+        {
+            label_col: np.repeat(labels[hit], d),
+            "i": np.tile(np.arange(1, d + 1, dtype="int32"), int(hit.sum())),
+            "s": sums[hit].reshape(-1),
+            "n": np.repeat(counts[hit], d),
+        }
+    )
+
+
 def lloyd_step_partials(
     embeddings: DataFrame,
     centroids,
     cell_ids,
     vec_col: str = "embedding",
-    chunk: int = 1024,
     emit_inertia: bool = False,
 ) -> DataFrame:
     """Fused assign-and-partially-update kernel for one Lloyd k-means
     iteration: each task assigns its rows to the nearest of K
-    broadcast centroids (exact fixed-point squared L2 — floor((x-c)^2
-    * SCALE) int64 sums, ties to the LOWER cell id) and folds member
-    components into per-cell fixed-point sums, emitting K * d partial
-    rows per task. This is the real distributed Lloyd shape: the only
-    shuffle moves K * d numbers per task, and the reducer adds exact
-    ints — identical semantics (and bitwise-identical distances) to
-    the relational crossJoin + struct-min formulation, which evaluates
-    its zip_with/aggregate lambdas interpreted per element (the ADC
-    HOF lesson; measured 2.3 -> 0.66 s at sf1).
+    broadcast centroids (fixed-point squared L2, ties to the LOWER cell
+    id) and folds member components into per-cell fixed-point sums,
+    emitting K * d partial rows per task. This is the real distributed
+    Lloyd shape: the only shuffle moves K * d numbers per task, and the
+    reducer adds exact ints. The relational crossJoin + struct-min
+    formulation gives the same distances but evaluates its
+    zip_with/aggregate lambdas interpreted per element (measured 2.3 ->
+    0.66 s at sf1).
 
     `centroids` is a K x d float64 array and `cell_ids` the matching
-    ascending cell labels — K rows collected at plan build (the
-    bounded IVF-centroid precedent). NULL embeddings drop out.
+    cell labels — K rows collected at plan build. NULL embeddings drop
+    out.
 
     ``emit_inertia=True`` additionally emits ONE (cell=-1, i=0) row
     per task carrying the task's exact int64 sum of assigned (minimum)
     distances — the per-task inertia partial the k-means trainer's
     stopping rule aggregates, riding the same K*d-row shuffle."""
-    import numpy as np
-    import pandas as pd
-
     C = np.asarray(centroids, dtype="float64")
     ids = np.asarray(cell_ids, dtype="int64")
     order = np.argsort(ids)
-    C, ids = C[order], ids[order]  # argmin's first-minimum = lowest id
-    k, d = C.shape
+    C, ids = C[order], ids[order]  # argmin's first minimum = lowest id
 
     def fold(batches):
-        sums = np.zeros((k, d), dtype="int64")
-        counts = np.zeros(k, dtype="int64")
+        sums = np.zeros(C.shape, dtype="int64")
+        counts = np.zeros(len(C), dtype="int64")
         inertia = 0
-        for pdf in batches:
-            col = pdf[vec_col].dropna()
-            if not len(col):
-                continue
-            V = np.stack(col.to_numpy()).astype("float64")
-            for lo in range(0, len(V), chunk):
-                W = V[lo : lo + chunk]
-                D = (
-                    np.floor(
-                        (W[:, None, :] - C[None, :, :]) ** 2 * float(SCALE)
-                    )
-                    .astype("int64")
-                    .sum(axis=2)
-                )
-                a = D.argmin(axis=1)
-                if emit_inertia:
-                    inertia += int(D.min(axis=1).sum())
-                Wf = np.floor(W * float(SCALE)).astype("int64")
-                for c in range(k):
-                    m = a == c
-                    if m.any():
-                        sums[c] += Wf[m].sum(axis=0)
-                        counts[c] += int(m.sum())
-        hit = counts > 0
-        cells = np.repeat(ids[hit], d)
-        comp = np.tile(np.arange(1, d + 1, dtype="int32"), int(hit.sum()))
-        out = pd.DataFrame(
-            {
-                "cell": cells,
-                "i": comp,
-                "s": sums[hit].reshape(-1),
-                "n": np.repeat(counts[hit], d),
-            }
-        )
+        for _, V in _vector_batches(batches, vec_col):
+            for lo in range(0, len(V), 1024):  # bound the rows x K x d temp
+                inertia += _nearest_fold(V[lo : lo + 1024], C, sums, counts)
+        out = _member_frame("cell", ids, sums, counts)
         if emit_inertia and counts.sum() > 0:
             out = pd.concat(
                 [
@@ -1003,7 +913,6 @@ def knn_join_partials(
     n_blocks: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
 ) -> DataFrame:
     """Distributed EXACT k-NN JOIN partials: every vector meets every
     other through a block-nested-loop, with per-block top-k pruning so
@@ -1014,8 +923,7 @@ def knn_join_partials(
     probe side is replicated across the build side's block axis (and
     vice versa), so ONE shuffle of 2 * n * n_blocks vector rows lands
     every (a-block, b-block) cell in its own task. Each task scores
-    n/B x n/B pairs in a chunked numpy kernel (memory bounded
-    O(chunk * n/B * dim), never the full pair matrix) and emits only
+    n/B x n/B pairs in the chunked `_topk_rows` kernel and emits only
     its local top-(k+1) per probe row. The global top-k per vector is
     contained in the union of per-block top-ks, so the downstream
     merge (one per-id window over n * B * (k+1) skinny rows) is exact
@@ -1023,19 +931,12 @@ def knn_join_partials(
     the corpus. Growing the corpus grows B; per-task work stays
     n/B x n/B.
 
-    Per-block candidates are top-(k+1) by (cosine desc, nbr id asc)
-    INCLUDING a possible self-pair, which is then dropped — taking one
-    extra guarantees >= k non-self survivors per block without
-    perturbing any kept cosine value (no -inf masking touches the
-    floats, preserving the bitwise fixed-point contract:
-    floor(x*y*SCALE) int sums, dot/(sqrt(na)*sqrt(nb)) — identical to
-    the oracle's unnest-and-SUM formulation).
+    Per-block candidates are top-(k+1) INCLUDING a possible self-pair,
+    which is then dropped: taking one extra guarantees >= k non-self
+    survivors per block without masking any cosine value.
 
     Returns partial rows (vec_id, nbr_id, cosine); callers apply the
     exact merge (see queries.similarity.knn_join_topk)."""
-    import numpy as np
-    import pandas as pd
-
     B = int(n_blocks)
     emb = embeddings.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
@@ -1061,42 +962,14 @@ def knn_join_partials(
 
     def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
         A = pdf[pdf["side"] == 0]
-        Bp = pdf[pdf["side"] == 1].sort_values("id")
+        Bp = pdf[pdf["side"] == 1]
         if A.empty or Bp.empty:
             return pd.DataFrame()
-        ids_a = A["id"].to_numpy()
-        ids_b = Bp["id"].to_numpy()
-        Va = np.stack(A["vec"].to_numpy()).astype("float64")
-        Vb = np.stack(Bp["vec"].to_numpy()).astype("float64")
-        # _fp_dots_f64: float64 sums of the floor() terms are bitwise
-        # the integer sums under the 2^53 envelope (helper doc); the
-        # in-place temp chain removes the allocator-bound 3-temp cost
-        ra = np.sqrt(_fp_dots_f64(Va, Va))
-        rb = np.sqrt(_fp_dots_f64(Vb, Vb))
-        keep_n = min(k + 1, len(ids_b))
-        out = []
-        for lo in range(0, len(ids_a), chunk):
-            hi = min(lo + chunk, len(ids_a))
-            dots = _fp_dots_f64(Va[lo:hi, None, :], Vb[None, :, :])
-            cos = dots / (ra[lo:hi, None] * rb[None, :])
-            # stable argsort on -cos: ties fall back to Vb's id order
-            # (pre-sorted ascending), matching the merge's tiebreak
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            cand_id = np.repeat(ids_a[lo:hi], keep_n)
-            cand_nbr = ids_b[idx].reshape(-1)
-            cand_cos = cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)]
-            non_self = cand_id != cand_nbr
-            out.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": cand_id[non_self],
-                        "nbr_id": cand_nbr[non_self],
-                        "cosine": cand_cos[non_self],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+        out = _topk_rows(
+            A["id"].to_numpy(), _vectors(A, "vec"),
+            Bp["id"].to_numpy(), _vectors(Bp, "vec"), k + 1,
+        )
+        return out[out["vec_id"] != out["nbr_id"]]
 
     return both.groupBy("ablk", "bblk").applyInPandas(
         block_topk, "vec_id long, nbr_id long, cosine double"
@@ -1109,63 +982,33 @@ def knn_join_within_cells(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate k-NN JOIN, IVF production path: assign every vector
-    to its IVF cell (same deterministic centroids + exact integer-IP
-    argmax as `ivf_write_index`; argmax ties resolve to the lowest
-    cell, matching the oracle's (score DESC, cell_id) rank), then
-    compute the EXACT top-k within each cell in one applyInPandas pass
-    per cell — no cross-cell pairs, no merge step (each vector lives
-    in exactly one group, so in-kernel ranks are final).
+    to its IVF cell (the `ivf_write_index` assignment), then compute
+    the EXACT top-k within each cell in one applyInPandas pass per
+    cell — no cross-cell pairs, no merge step (each vector lives in
+    exactly one group, so in-kernel ranks are final).
 
     This is the scale form of `knn_join_partials`: the candidate set
     shrinks from every block pair (exact, O(n²/B) per task) to one
     semantic cell (approximate, O((n/C)²) per task with C growing with
     the corpus). Recall against the exact join is auditable with
-    `ann_recall_audit`-style queries; tie-breaks and fixed-point
-    arithmetic are identical to the exact kernel, so within-cell
-    results are bitwise-equal to the exact join restricted to the
-    cell.
+    `ann_recall_audit`-style queries; within-cell results are
+    bitwise-equal to the exact join restricted to the cell.
 
-    ``assigned`` (optimization r15, VERDICT r14 #7): a pre-assigned
-    (id, vec, cell) relation — the at-rest IVF index
-    (`ivf_write_index` partitions the corpus by the IDENTICAL argmax:
-    same centroids, same fixed-point scores, np.argmax ties -> lowest
-    cell). Passing it removes the assignment mapInPandas, leaving ONE
-    Python boundary (the per-cell kernel) and no centroid collect at
-    plan build — the serving posture every IVF deployment uses (the
+    ``assigned``: a pre-assigned (id, vec, cell) relation — the at-rest
+    IVF index, which `ivf_write_index` partitions by the identical
+    assignment. Passing it removes the assignment mapInPandas, leaving
+    ONE Python boundary (the per-cell kernel) and no centroid collect
+    at plan build — the serving posture every IVF deployment uses (the
     index is built once per corpus version at ingest). Default None
     keeps the self-contained two-pass shape. When ``assigned`` is
     given, ``n_cells`` is unused: the cells are whatever the caller
     assigned, and nothing checks that their count equals ``n_cells``."""
-    import numpy as np
-    import pandas as pd
-
     if assigned is None:
-        C, _ = _ivf_centroids_and_query(
-            embeddings, None, n_cells, id_col, vec_col
-        )
-
-        def assign(batches):
-            for pdf in batches:
-                pdf = pdf.dropna(subset=[vec_col])
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-                # exact-integer argmax is unchanged under the float64
-                # sum (every score is an exact integer < 2^53;
-                # _fp_dots_f64 doc)
-                scores = _fp_dots_f64(V[:, None, :], C[None, :, :])
-                out = pdf.copy()
-                out["cell"] = scores.argmax(axis=1).astype("int32")
-                yield out
-
-        assigned = embeddings.select(id_col, vec_col).mapInPandas(
-            assign,
-            f"{id_col} long, {vec_col} array<float>, cell int",
-        )
+        C, _ = _ivf_centroids_and_queries(embeddings, (), n_cells, id_col, vec_col)
+        assigned = _assign_cells(embeddings, C, id_col, vec_col)
     else:
         # the index build dropped null vectors before assigning; the
         # cast pins the partition-discovered cell column to int32 (the
@@ -1175,37 +1018,16 @@ def knn_join_within_cells(
         ).where(F.col(vec_col).isNotNull())
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        n = len(pdf)
-        if n < 2:
+        if len(pdf) < 2:
             return pd.DataFrame()
-        cell = int(pdf["cell"].iloc[0])
         ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        r = np.sqrt(_fp_dots_f64(V, V))
-        keep_n = min(k + 1, n)
-        frames = []
-        for lo in range(0, n, chunk):
-            hi = min(lo + chunk, n)
-            dots = _fp_dots_f64(V[lo:hi, None, :], V[None, :, :])
-            cos = dots / (r[lo:hi, None] * r[None, :])
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            cand_id = np.repeat(ids[lo:hi], keep_n)
-            cand_nbr = ids[idx].reshape(-1)
-            cand_cos = cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)]
-            f = pd.DataFrame(
-                {"vec_id": cand_id, "nbr_id": cand_nbr, "cosine": cand_cos}
-            )
-            f = f[f["vec_id"] != f["nbr_id"]]
-            # candidates arrive rank-ordered per row; number the
-            # survivors and keep the first k
-            f["rk"] = f.groupby("vec_id").cumcount().astype("int32") + 1
-            frames.append(f[f["rk"] <= k])
-        if not frames:
-            return pd.DataFrame()
-        out = pd.concat(frames, ignore_index=True)
-        out["cell"] = np.int32(cell)
+        V = _vectors(pdf, vec_col)
+        out = _topk_rows(ids, V, ids, V, k + 1)
+        out = out[out["vec_id"] != out["nbr_id"]]
+        # candidates arrive rank-ordered per row; number the survivors
+        # and keep the first k
+        out = out.assign(rk=out.groupby("vec_id").cumcount().astype("int32") + 1)
+        out = out[out["rk"] <= k].assign(cell=np.int32(pdf["cell"].iloc[0]))
         return out[["vec_id", "nbr_id", "rk", "cosine", "cell"]]
 
     return assigned.groupBy("cell").applyInPandas(
@@ -1234,35 +1056,15 @@ def knn_probe_index(
     never corpus-sized). Candidates meet the batch in one per-cell
     Arrow kernel; ONE per-id window merges the ≤ n_probe partial
     top-ks. The index text/vectors outside probed cells are never
-    read.
-
-    Exactness contract: same fixed-point arithmetic and (cosine desc,
-    id asc) tiebreak as the whole kNN family; probe-cell selection
-    ties resolve to the lowest cell id (stable argsort on -score),
-    mirroring the oracle's (score DESC, cell_id) rank."""
-    import numpy as np
-    import pandas as pd
-
+    read."""
     idx = spark.read.parquet(index_path)
-    crows = (
-        idx.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
-    )
-    C = np.stack([np.asarray(r[vec_col], dtype="float64") for r in crows])
+    C = _lowest_id_vectors(idx, n_cells, id_col, vec_col)
 
     def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            scores = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-            out = pdf.loc[pdf.index.repeat(order.shape[1])].copy()
-            out["cell"] = order.reshape(-1).astype("int32")
+        for pdf, V in _vector_batches(batches, vec_col):
+            cells = _rank_cells(V, C, n_probe)
+            out = pdf.loc[pdf.index.repeat(cells.shape[1])].copy()
+            out["cell"] = cells.reshape(-1).astype("int32")
             yield out
 
     bat = (
@@ -1288,46 +1090,13 @@ def knn_probe_index(
 
     def cell_probe(pdf: pd.DataFrame) -> pd.DataFrame:
         A = pdf[pdf["side"] == 0]
-        Bp = pdf[pdf["side"] == 1].sort_values("id")
+        Bp = pdf[pdf["side"] == 1]
         if A.empty or Bp.empty:
             return pd.DataFrame()
-        ids_a = A["id"].to_numpy()
-        ids_b = Bp["id"].to_numpy()
-        Va = np.stack(A["vec"].to_numpy()).astype("float64")
-        Vb = np.stack(Bp["vec"].to_numpy()).astype("float64")
-        ra = np.sqrt(
-            np.floor(Va * Va * SCALE).astype("int64").sum(axis=1).astype("float64")
+        return _topk_rows(
+            A["id"].to_numpy(), _vectors(A, "vec"),
+            Bp["id"].to_numpy(), _vectors(Bp, "vec"), k,
         )
-        rb = np.sqrt(
-            np.floor(Vb * Vb * SCALE).astype("int64").sum(axis=1).astype("float64")
-        )
-        keep_n = min(k, len(ids_b))
-        frames = []
-        chunk = 256  # bound the pair matrix: O(chunk x |cell| x dim)
-        for lo in range(0, len(ids_a), chunk):
-            hi = min(lo + chunk, len(ids_a))
-            dots = (
-                np.floor(Va[lo:hi, None, :] * Vb[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            cos = dots.astype("float64") / (ra[lo:hi, None] * rb[None, :])
-            sel = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids_a[lo:hi], keep_n),
-                        "nbr_id": ids_b[sel].reshape(-1),
-                        "cosine": cos[
-                            np.repeat(np.arange(m), keep_n), sel.reshape(-1)
-                        ],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
-
-    from pyspark.sql import Window
 
     part = both.groupBy("cell").applyInPandas(
         cell_probe, "vec_id long, nbr_id long, cosine double"
@@ -1351,12 +1120,11 @@ def pq_train_partials(
     quantization) training iteration — `lloyd_step_partials` run over
     ALL M subspaces in ONE corpus pass: each task splits its rows into
     M contiguous subvectors, assigns each subvector to the nearest of
-    K broadcast codewords of its subspace (exact fixed-point squared
-    L2 — floor((x-c)^2 * SCALE) int64 sums over the subspace dims,
-    ties to the LOWER code), and folds member components into
-    per-(subspace, code) fixed-point sums. The only shuffle moves
-    M * K * (d/M) = K * d numbers per task — training M codebooks
-    costs the same shuffle volume as training one k-means.
+    K broadcast codewords of its subspace (ties to the LOWER code), and
+    folds member components into per-(subspace, code) fixed-point sums.
+    The only shuffle moves M * K * (d/M) = K * d numbers per task —
+    training M codebooks costs the same shuffle volume as training one
+    k-means.
 
     `codebooks` is an (M, K, d/M) float64 array, codes 0..K-1 per
     subspace. Output rows (m, code, i, s, n): i is the 1-based
@@ -1365,9 +1133,6 @@ def pq_train_partials(
     task's exact int64 sum of assigned distances (the per-subspace
     quantization-error partial the trainer's audit aggregates).
     NULL embeddings drop out."""
-    import numpy as np
-    import pandas as pd
-
     CB = np.asarray(codebooks, dtype="float64")
     m_sub, k, ds = CB.shape
 
@@ -1375,50 +1140,17 @@ def pq_train_partials(
         sums = np.zeros((m_sub, k, ds), dtype="int64")
         counts = np.zeros((m_sub, k), dtype="int64")
         inertia = np.zeros(m_sub, dtype="int64")
-        for pdf in batches:
-            col = pdf[vec_col].dropna()
-            if not len(col):
-                continue
-            V = np.stack(col.to_numpy()).astype("float64")
+        for _, V in _vector_batches(batches, vec_col):
             for lo in range(0, len(V), chunk):
                 W = V[lo : lo + chunk]
-                Wf = np.floor(W * float(SCALE)).astype("int64")
                 for m in range(m_sub):
-                    Wm = W[:, m * ds : (m + 1) * ds]
-                    D = (
-                        np.floor(
-                            (Wm[:, None, :] - CB[m][None, :, :]) ** 2
-                            * float(SCALE)
-                        )
-                        .astype("int64")
-                        .sum(axis=2)
+                    inertia[m] += _nearest_fold(
+                        W[:, m * ds : (m + 1) * ds], CB[m], sums[m], counts[m]
                     )
-                    a = D.argmin(axis=1)
-                    if emit_inertia:
-                        inertia[m] += int(D.min(axis=1).sum())
-                    Wmf = Wf[:, m * ds : (m + 1) * ds]
-                    for c in range(k):
-                        sel = a == c
-                        if sel.any():
-                            sums[m, c] += Wmf[sel].sum(axis=0)
-                            counts[m, c] += int(sel.sum())
         frames = []
         for m in range(m_sub):
-            hit = counts[m] > 0
-            if hit.any():
-                codes = np.repeat(np.arange(k, dtype="int64")[hit], ds)
-                comp = np.tile(np.arange(1, ds + 1, dtype="int32"), int(hit.sum()))
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "m": np.full(len(codes), m, dtype="int32"),
-                            "code": codes,
-                            "i": comp,
-                            "s": sums[m][hit].reshape(-1),
-                            "n": np.repeat(counts[m][hit], ds),
-                        }
-                    )
-                )
+            f = _member_frame("code", np.arange(k, dtype="int64"), sums[m], counts[m])
+            frames.append(f.assign(m=np.int32(m)))
             if emit_inertia and counts[m].sum() > 0:
                 frames.append(
                     pd.DataFrame(
@@ -1431,11 +1163,35 @@ def pq_train_partials(
                         }
                     )
                 )
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        out = pd.concat(frames, ignore_index=True)
+        if len(out):
+            yield out[["m", "code", "i", "s", "n"]]
 
     return embeddings.select(vec_col).mapInPandas(
         fold, "m int, code long, i int, s long, n long"
+    )
+
+
+def _pq_encode(W, CB):
+    """(rows, M) PQ codes of the rows of W: per subspace, the nearest
+    codeword of CB (M, K, d/M) by fixed-point squared L2, ties to the
+    lower code."""
+    m_sub, _, ds = CB.shape
+    return np.stack(
+        [
+            _fp_sqdist(W[:, None, m * ds : (m + 1) * ds], CB[m][None, :, :]).argmin(axis=1)
+            for m in range(m_sub)
+        ],
+        axis=1,
+    )
+
+
+def _pq_lut(q, CB):
+    """(M, K) int64 ADC lookup table: the fixed-point squared L2 from
+    each query subvector to every codeword of its subspace."""
+    m_sub, _, ds = CB.shape
+    return np.stack(
+        [_fp_sqdist(q[None, m * ds : (m + 1) * ds], CB[m]) for m in range(m_sub)]
     )
 
 
@@ -1445,61 +1201,30 @@ def pq_adc_distances(
     query,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 1024,
 ) -> DataFrame:
     """PQ encode + asymmetric-distance scoring fused in one map-only
     pass (the FAISS ADC serving shape with a TRAINED codebook): each
-    row's M subvectors are assigned to their nearest codewords (exact
-    fixed-point squared L2, ties to the lower code) and the distance
-    to the broadcast query is the integer sum of M lookup-table
-    entries LUT[m][code] = floor-exact d2(query subvector, codeword) —
-    computed once driver-side from K*d bounded numbers, never per row.
-    Emits (id, adc_dist); no shuffle, TakeOrdered finishes the top-k
-    at any scale."""
-    import numpy as np
-    import pandas as pd
-
+    row's M subvectors are assigned to their nearest codewords and the
+    distance to the broadcast query is the integer sum of M lookup-table
+    entries LUT[m][code] — computed once driver-side from K*d bounded
+    numbers, never per row. Emits (id, adc_dist); no shuffle,
+    TakeOrdered finishes the top-k at any scale."""
     CB = np.asarray(codebooks, dtype="float64")
-    m_sub, k, ds = CB.shape
-    q = np.asarray(query, dtype="float64")
-    lut = np.zeros((m_sub, k), dtype="int64")
-    for m in range(m_sub):
-        qm = q[m * ds : (m + 1) * ds]
-        lut[m] = (
-            np.floor((qm[None, :] - CB[m]) ** 2 * float(SCALE))
-            .astype("int64")
-            .sum(axis=1)
-        )
+    lut = _pq_lut(np.asarray(query, dtype="float64"), CB)
+    subspaces = np.arange(len(CB))
 
     def score(batches):
-        for pdf in batches:
-            keep = pdf[vec_col].notna()
-            pdf = pdf[keep]
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+        for pdf, V in _vector_batches(batches, vec_col):
             ids = pdf[id_col].to_numpy()
-            for lo in range(0, len(V), chunk):
-                W = V[lo : lo + chunk]
-                dist = np.zeros(len(W), dtype="int64")
-                for m in range(m_sub):
-                    Wm = W[:, m * ds : (m + 1) * ds]
-                    D = (
-                        np.floor(
-                            (Wm[:, None, :] - CB[m][None, :, :]) ** 2
-                            * float(SCALE)
-                        )
-                        .astype("int64")
-                        .sum(axis=2)
-                    )
-                    dist += lut[m][D.argmin(axis=1)]
+            for lo in range(0, len(V), 1024):  # bound the rows x K x d/M temp
+                codes = _pq_encode(V[lo : lo + 1024], CB)
                 yield pd.DataFrame(
-                    {"vec_id": ids[lo : lo + chunk], "adc_dist": dist}
+                    {id_col: ids[lo : lo + 1024], "adc_dist": lut[subspaces, codes].sum(axis=1)}
                 )
 
-    return embeddings.select(
-        F.col(id_col).alias(id_col), vec_col
-    ).mapInPandas(score, f"{id_col} long, adc_dist long")
+    return embeddings.select(id_col, vec_col).mapInPandas(
+        score, f"{id_col} long, adc_dist long"
+    )
 
 
 def farthest_point_partials(
@@ -1517,28 +1242,15 @@ def farthest_point_partials(
     size. The global argmax under the same (md desc, id asc) rule is
     the next seed; exact integer distances make the whole seeding
     trajectory bit-reproducible and SQL-replayable."""
-    import numpy as np
-    import pandas as pd
-
     S0 = np.asarray(seeds, dtype="float64")
 
     def fold(batches):
         best_md = -1
         best_id = -1
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+        for pdf, V in _vector_batches(batches, vec_col):
             ids = pdf[id_col].to_numpy()
             for lo in range(0, len(V), chunk):
-                W = V[lo : lo + chunk]
-                D = (
-                    np.floor((W[:, None, :] - S0[None, :, :]) ** 2 * float(SCALE))
-                    .astype("int64")
-                    .sum(axis=2)
-                    .min(axis=1)
-                )
+                D = _fp_sqdist(V[lo : lo + chunk, None, :], S0[None, :, :]).min(axis=1)
                 sub_ids = ids[lo : lo + chunk]
                 order = np.lexsort((sub_ids, -D))
                 cand_md, cand_id = int(D[order[0]]), int(sub_ids[order[0]])
@@ -1564,54 +1276,37 @@ def knn_join_multiprobe(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    chunk: int = 128,
 ) -> DataFrame:
     """Multi-probe IVF k-NN join — the standard recall knob between
     `knn_join_within_cells` (n_probe=1) and the exact join: every
-    vector still lives in exactly ONE build cell (its integer-IP
-    argmax), but as a PROBE it visits its top ``n_probe`` cells, so a
-    true neighbor just across a cell boundary is recovered at the cost
-    of replicating only the probe side n_probe-fold. Shuffle volume is
-    n * (n_probe) vector rows + n build rows; per-task work is
-    O(n_probe * (n/C)^2) — the corpus is never all-paired.
+    vector still lives in exactly ONE build cell (its top cell), but as
+    a PROBE it visits its top ``n_probe`` cells, so a true neighbor just
+    across a cell boundary is recovered at the cost of replicating only
+    the probe side n_probe-fold. Shuffle volume is n * n_probe vector
+    rows + n build rows; per-task work is O(n_probe * (n/C)^2) — the
+    corpus is never all-paired.
 
-    Determinism contract matches the whole family: probe-cell ranking
-    by (score DESC, cell id ASC), candidate ranking by (cosine DESC,
-    nbr id ASC), fixed-point integer dots — the per-cell candidate
-    lists are bitwise-equal to the exact join restricted to the cell,
-    and the cross-cell merge is one per-id window downstream (the
-    caller applies it; this returns per-cell candidates, k+1 per probe
-    per cell so the post-self-drop top-k is always contained).
+    The per-cell candidate lists are bitwise-equal to the exact join
+    restricted to the cell; the cross-cell merge is one per-id window
+    downstream (the caller applies it; this returns per-cell
+    candidates, k per probe per cell after the self-drop, so the global
+    top-k is always contained).
     """
-    import numpy as np
-    import pandas as pd
-
     if not 1 <= n_probe <= n_cells:
         raise ValueError("n_probe must be in [1, n_cells]")
-    C, _ = _ivf_centroids_and_query(embeddings, None, n_cells, id_col, vec_col)
+    C, _ = _ivf_centroids_and_queries(embeddings, (), n_cells, id_col, vec_col)
 
     def assign(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=[vec_col])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            scores = (
-                np.floor(V[:, None, :] * C[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
+        for pdf, V in _vector_batches(batches, vec_col):
+            cells = _rank_cells(V, C, n_probe)
+            # the rank-0 cell is ALSO the vector's build home
+            yield pd.concat(
+                [
+                    pdf.assign(cell=cells[:, r].astype("int32"), is_build=r == 0)
+                    for r in range(n_probe)
+                ],
+                ignore_index=True,
             )
-            order = np.lexsort(
-                (np.tile(np.arange(len(C)), (len(V), 1)), -scores), axis=1
-            )[:, :n_probe]
-            frames = []
-            for r in range(n_probe):
-                f = pdf.copy()
-                f["cell"] = order[:, r].astype("int32")
-                # rank-0 cell is ALSO the vector's build home
-                f["is_build"] = r == 0
-                frames.append(f)
-            yield pd.concat(frames, ignore_index=True)
 
     assigned = embeddings.select(id_col, vec_col).mapInPandas(
         assign,
@@ -1619,50 +1314,18 @@ def knn_join_multiprobe(
     )
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        cell = int(pdf["cell"].iloc[0])
         build = pdf[pdf["is_build"]]
-        nb = len(build)
-        if nb == 0 or len(pdf) < 2:
+        if build.empty or len(pdf) < 2:
             return pd.DataFrame()
-        bids = build[id_col].to_numpy()
-        BV = np.stack(build[vec_col].to_numpy()).astype("float64")
-        rb = np.sqrt(
-            np.floor(BV * BV * SCALE).astype("int64").sum(axis=1).astype("float64")
-        )
         # probes = every row in the group (the build copy doubles as
         # its own rank-0 probe; replicas are probe-only)
-        pids = pdf[id_col].to_numpy()
-        PV = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-        rp = np.sqrt(
-            np.floor(PV * PV * SCALE).astype("int64").sum(axis=1).astype("float64")
+        out = _topk_rows(
+            pdf[id_col].to_numpy(), _vectors(pdf, vec_col),
+            build[id_col].to_numpy(), _vectors(build, vec_col), k + 1,
         )
-        keep_n = min(k + 1, nb)
-        frames = []
-        for lo in range(0, len(pdf), chunk):
-            hi = min(lo + chunk, len(pdf))
-            dots = (
-                np.floor(PV[lo:hi, None, :] * BV[None, :, :] * SCALE)
-                .astype("int64")
-                .sum(axis=2)
-            )
-            cos = dots.astype("float64") / (rp[lo:hi, None] * rb[None, :])
-            idx = np.argsort(-cos, axis=1, kind="stable")[:, :keep_n]
-            m = hi - lo
-            f = pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pids[lo:hi], keep_n),
-                    "nbr_id": bids[idx].reshape(-1),
-                    "cosine": cos[np.repeat(np.arange(m), keep_n), idx.reshape(-1)],
-                }
-            )
-            f = f[f["vec_id"] != f["nbr_id"]]
-            f["rk_local"] = f.groupby("vec_id").cumcount() + 1
-            frames.append(f[f["rk_local"] <= k].drop(columns=["rk_local"]))
-        if not frames:
-            return pd.DataFrame()
-        out = pd.concat(frames, ignore_index=True)
-        out["cell"] = np.int32(cell)
+        out = out[out["vec_id"] != out["nbr_id"]]
+        out = out[out.groupby("vec_id").cumcount() < k]
+        out = out.assign(cell=np.int32(pdf["cell"].iloc[0]))
         return out[["vec_id", "nbr_id", "cosine", "cell"]]
 
     return assigned.groupBy("cell").applyInPandas(

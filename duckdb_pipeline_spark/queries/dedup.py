@@ -1475,10 +1475,6 @@ def dedup_semantic_cells(spark, sf_dir):
             if not len(pdf):
                 continue
             V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            # float64 sums of floor() terms are exact under the
-            # d * SCALE * max|x|^2 < 2^53 envelope (_fp_dots_f64 doc;
-            # cosine_pairs_blocked_vectorized asserts it for this
-            # embedding family downstream of the same rows)
             vn = _fp_dots_f64(V, V)
             cells = np.empty(len(pdf), dtype="int32")
             for lo in range(0, len(pdf), 1024):  # bound the B x K x d temp

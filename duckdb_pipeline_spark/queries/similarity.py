@@ -8,23 +8,41 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pandas as pd
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.similarity import SCALE as S
 from ..operators.similarity import (
+    _fp_sqdist,
+    _ivf_centroids_and_queries,
+    _lowest_id_vectors,
+    _pq_encode,
+    _pq_lut,
+    _rank_cells,
+    _vector_batches,
     ann_recall_audit,
     cosine_pairs_blocked_vectorized,
     cosine_topk_vectorized,
+    farthest_point_partials,
+    gram_matrix_partials,
     ivf_topk_pruned,
     ivf_write_index,
+    knn_join_multiprobe,
+    knn_join_partials,
+    knn_join_within_cells,
+    knn_probe_index,
+    lloyd_step_partials,
     lsh_hyperplanes,
     lsh_topk_vectorized,
+    pq_adc_distances,
+    pq_train_partials,
 )
 from .. import layouts
 from ..sinks import replace_file
 from . import QuerySpec
 from .common import load
-
-S = 1_000_000_000
 
 
 def similarity_topk(spark, sf_dir):
@@ -235,7 +253,7 @@ LIMIT {k}
 
 IVF_TOPK_SQL = _ivf_sql()
 
-# Bench-twin amortized IVF (round-6, ADVICE r5): the Spark side of
+# Bench-twin amortized IVF: the Spark side of
 # `similarity_topk_ivf` times a partition-pruned probe of a PREBUILT
 # index (the build runs once, outside the timed region — the amortized
 # deployment shape). The correctness ORACLE must recompute everything
@@ -325,6 +343,44 @@ LIMIT 10
 _ADC_K = 10
 
 
+def _probe_cells(emb, n_cells=8, n_probe=2):
+    """Vector 0 and its top ``n_probe`` IVF cells, the probe the at-rest
+    IVF indexes are scanned with; (None, None) when vector 0 is absent."""
+    C, Q = _ivf_centroids_and_queries(emb, [0], n_cells, "vec_id", "embedding")
+    if 0 not in Q:
+        return None, None
+    return Q[0], [int(c) for c in _rank_cells(Q[0][None, :], C, n_probe)[0]]
+
+
+def _sq_coder(emb, dim, *extra):
+    """The corpus-wide per-dim 8-bit scalar-quantizer grid (the ADC
+    codebook): c = clamp(floor((x - mn_d) * 255 / (mx_d - mn_d)), 0,
+    255) in the SQL's op order; degenerate dims (mx = mn) code to 0.
+    The per-dim stats come from one bounded 1-row job, which also
+    evaluates the ``extra`` aggregates. Returns (code, that row)."""
+    srow = emb.agg(
+        F.array(
+            *[F.min(F.col("embedding")[i].cast("double")) for i in range(dim)]
+        ).alias("mns"),
+        F.array(
+            *[F.max(F.col("embedding")[i].cast("double")) for i in range(dim)]
+        ).alias("mxs"),
+        *extra,
+    ).first()
+    mns = np.asarray(srow["mns"], dtype="float64")
+    span = np.asarray(srow["mxs"], dtype="float64") - mns
+    deg = span == 0.0
+
+    def code(V):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            C = np.floor((V - mns[None, :]) * 255.0 / span[None, :])
+        C = np.clip(C, 0.0, 255.0)
+        C[:, deg] = 0.0
+        return C.astype("int64")
+
+    return code, srow
+
+
 def similarity_ivf_adc_topk(spark, sf_dir):
     """The COMPOSED production ANN path: IVF cell pruning feeding ADC
     compressed-domain ranking — what a real vector index runs at
@@ -342,63 +398,28 @@ def similarity_ivf_adc_topk(spark, sf_dir):
     Plan shape: one bounded driver fetch (centroids + query + per-dim
     stats), then a single partition-pruned scan -> Arrow-batch coding
     kernel -> TakeOrdered. No shuffle of corpus data at any scale."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import _ivf_centroids_and_query
-
-    n_cells, n_probe = 8, 2
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=n_cells)
-    C, qv = _ivf_centroids_and_query(emb, 0, n_cells, "vec_id", "embedding")
-    empty = emb.select(
-        "vec_id",
-        F.lit(0).alias("cell"),
-        F.lit(0).cast("long").alias("adc_dist"),
-    ).where(F.lit(False))
+    idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=8)
+    qv, probe = _probe_cells(emb)
     if qv is None:
-        return empty
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
-
-    dim = len(qv)
-    srow = emb.agg(
-        F.array(
-            *[F.min(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mns"),
-        F.array(
-            *[F.max(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mxs"),
-    ).first()
-    mns = np.asarray(srow["mns"], dtype="float64")
-    mxs = np.asarray(srow["mxs"], dtype="float64")
-    span = mxs - mns
-    deg = span == 0.0
-
-    def code(V: "np.ndarray") -> "np.ndarray":
-        with np.errstate(divide="ignore", invalid="ignore"):
-            Cc = np.floor((V - mns[None, :]) * 255.0 / span[None, :])
-        Cc = np.clip(Cc, 0.0, 255.0)
-        Cc[:, deg] = 0.0
-        return Cc.astype("int64")
-
+        return emb.select(
+            "vec_id", F.lit(0).alias("cell"), F.lit(0).cast("long").alias("adc_dist")
+        ).where(F.lit(False))
+    code, _ = _sq_coder(emb, len(qv))
     qcode = code(qv[None, :])[0]
 
     def score(batches):
-        for pdf in batches:
-            pdf = pdf[pdf["vec_id"] != 0].dropna(subset=["embedding"])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            d = code(V) - qcode[None, :]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": pdf["cell"].to_numpy().astype("int32"),
-                    "adc_dist": (d * d).sum(axis=1),
-                }
-            )
+        for pdf, V in _vector_batches(batches, "embedding"):
+            ok = pdf["vec_id"].to_numpy() != 0
+            if ok.any():
+                d = code(V[ok]) - qcode[None, :]
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"].to_numpy()[ok],
+                        "cell": pdf["cell"].to_numpy()[ok].astype("int32"),
+                        "adc_dist": (d * d).sum(axis=1),
+                    }
+                )
 
     probed = spark.read.parquet(idx_path).where(F.col("cell").isin(probe))
     scored = probed.select("vec_id", "cell", "embedding").mapInPandas(
@@ -458,10 +479,9 @@ ORDER BY adc_dist, d.vec_id LIMIT {_ADC_K}
 
 def similarity_adc_topk_np(spark, sf_dir):
     """Top-10 nearest neighbors of vector 0 by asymmetric-distance
-    computation over per-dimension 8-bit codes. Code grid: c =
-    clamp(floor((x - mn_d) * 255 / (mx_d - mn_d)), 0, 255); degenerate
-    dims (mx = mn) code to 0; distance is the integer sum of squared
-    code differences.
+    computation over per-dimension 8-bit codes: distance is the integer
+    sum of squared
+    code differences over the `_sq_coder` grid.
 
     Each Arrow batch codes and scores as three C matrix ops — the
     ``cosine_topk_vectorized`` precedent: an in-plan per-row
@@ -470,48 +490,23 @@ def similarity_adc_topk_np(spark, sf_dir):
     stats row (per-dim min/max + query vector) is fetched once at plan
     build (one bounded 1-row job, closure-captured); the bench's
     DuckDB twin amortizes the same stats (ADC_BENCH_SETUP_SQL)."""
-    import numpy as np
-    import pandas as pd
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dim = emb.select(F.size("embedding").alias("d")).first()["d"]
-    srow = emb.agg(
-        F.array(
-            *[F.min(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mns"),
-        F.array(
-            *[F.max(F.col("embedding")[i].cast("double")) for i in range(dim)]
-        ).alias("mxs"),
+    code, srow = _sq_coder(
+        emb,
+        dim,
         F.first(
             F.when(F.col("vec_id") == 0, F.col("embedding")), ignorenulls=True
         ).alias("qe"),
-    ).first()
+    )
     if srow["qe"] is None:  # no query vector -> empty, like the oracle
         return (
             emb.select("vec_id", F.lit(0).cast("long").alias("adc_dist")).where(F.lit(False))
         )
-    mns = np.asarray(srow["mns"], dtype="float64")
-    mxs = np.asarray(srow["mxs"], dtype="float64")
-    span = mxs - mns
-    deg = span == 0.0
-
-    def code(V: "np.ndarray") -> "np.ndarray":
-        # identical op order to the SQL: (x - mn) * 255.0 / (mx - mn),
-        # floor, clamp [0, 255]; degenerate dims code to 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            C = np.floor((V - mns[None, :]) * 255.0 / span[None, :])
-        C = np.clip(C, 0.0, 255.0)
-        C[:, deg] = 0.0
-        return C.astype("int64")
-
     qcode = code(np.asarray(srow["qe"], dtype="float64")[None, :])[0]
 
     def score(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["embedding"])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+        for pdf, V in _vector_batches(batches, "embedding"):
             d = code(V) - qcode[None, :]
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"], "adc_dist": (d * d).sum(axis=1)}
@@ -525,7 +520,7 @@ def similarity_adc_topk_np(spark, sf_dir):
     )
 
 
-# Bench-twin amortized ADC (round 7, VERDICT r6): the per-dim min/max
+# Bench-twin amortized ADC: the per-dim min/max
 # + query-vector stats row of `similarity_adc_topk_np` is fetched ONCE
 # at plan build (a bounded 1-row job, closure-captured) — outside the
 # timed region. The correctness oracle must recompute everything from
@@ -594,7 +589,7 @@ FROM d ORDER BY adc_dist, vec_id LIMIT {_ADC_K}
 
 
 # ---------------------------------------------------------------------------
-# ANN recall audit (round 7, VERDICT r6 #8): the vector-side mirror of
+# ANN recall audit: the vector-side mirror of
 # dedup_recall_report — recall@k of the IVF probe vs brute-force ground
 # truth over a deterministic query sample, as a driver-verifiable
 # declared query. Queries = vec_id 8..17 (skipping the n_cells centroid
@@ -704,8 +699,6 @@ def embedding_gram_matrix(spark, sf_dir):
     combine of distributed covariance; the reducer sums exactly
     (fixed-point terms, association-free). Output: upper triangle
     (i, j, n_vecs, gram) with gram = s_fp / SCALE."""
-    from ..operators.similarity import gram_matrix_partials
-
     emb = load(spark, sf_dir, "embeddings")
     res = (
         gram_matrix_partials(emb)
@@ -721,6 +714,15 @@ def embedding_gram_matrix(spark, sf_dir):
 
 
 _LLOYD_K = 8
+
+
+def _seed_vectors(emb, k):
+    """The vectors of ids below ``k`` in id order, and their ids: the
+    deterministic first-K seeding of the k-means and PQ trainers (the
+    centroids are K rows collected at plan build)."""
+    rows = emb.where(F.col("vec_id") < k).orderBy("vec_id").collect()
+    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
+    return C, np.asarray([r["vec_id"] for r in rows], dtype="int64")
 
 
 def kmeans_lloyd_step(spark, sf_dir):
@@ -746,18 +748,8 @@ def kmeans_lloyd_step(spark, sf_dir):
     interpreted per element (the ADC HOF lesson). Distances and sums
     are bitwise-identical between the two. Empty cells drop out (both
     engines)."""
-    import numpy as np
-
-    from ..operators.similarity import lloyd_step_partials
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    crows = (
-        emb.where(F.col("vec_id") < _LLOYD_K)
-        .orderBy("vec_id")
-        .collect()
-    )
-    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
-    ids = [r["vec_id"] for r in crows]
+    C, ids = _seed_vectors(emb, _LLOYD_K)
     upd = (
         lloyd_step_partials(emb, C, ids)
         .groupBy("cell", "i")
@@ -808,8 +800,7 @@ _KMEANS_R_MAX = 4
 
 def kmeans_train_audit(spark, sf_dir):
     """FULL k-means training loop on top of the fused Lloyd kernel
-    (VERDICT r8 #5 — the iterative-trainer story the BPE trainer
-    started, on a second algorithm): iterate `lloyd_step_partials`
+    (the second iterative trainer beside BPE): iterate `lloyd_step_partials`
     from the deterministic first-K seeding to a deterministic
     stopping rule — up to ``_KMEANS_R_MAX`` iterations, stopping
     early when the exact int64 fixed-point inertia stops STRICTLY
@@ -836,15 +827,8 @@ def kmeans_train_audit(spark, sf_dir):
     iteration count is engine-private (the oracle cannot know it
     without simulating the trainer) and is deliberately not a column;
     at sf0.01 the rule runs the full R_MAX schedule."""
-    import numpy as np
-
-    from ..operators.similarity import lloyd_step_partials
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    crows = emb.where(F.col("vec_id") < _LLOYD_K).orderBy("vec_id").collect()
-    C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
-    ids = np.asarray([r["vec_id"] for r in crows], dtype="int64")
-    k, d = C.shape
+    C, ids = _seed_vectors(emb, _LLOYD_K)
     pos = {int(c): i for i, c in enumerate(ids)}
 
     n_vectors = None
@@ -929,11 +913,6 @@ def pca_variance_audit(spark, sf_dir):
     themselves are LAPACK-specific and only their bound verdicts are
     emitted. This is the audit a whitening/PCA projection stage runs
     before trusting its components at 100 TB."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import gram_matrix_partials
-
     emb = load(spark, sf_dir, "embeddings")
     tri = (
         gram_matrix_partials(emb)
@@ -1017,9 +996,7 @@ def _knn_topk(spark, sf_dir, k=3, n_blocks=8):
     The window's order (cosine desc, nbr_id asc) is the same tiebreak
     the per-block kernel used, so the global top-k is exact and
     deterministic cross-engine."""
-    from pyspark.sql import Window
 
-    from ..operators.similarity import knn_join_partials
 
     part = knn_join_partials(
         load(spark, sf_dir, "embeddings"), k=k, n_blocks=n_blocks
@@ -1155,23 +1132,21 @@ GROUP BY e.label
 
 def knn_join_topk_ivf(spark, sf_dir):
     """Approximate k-NN join, IVF production path: top-3 within each
-    vector's IVF cell (deterministic centroids, exact integer-IP
-    argmax assignment — the `similarity_topk_ivf` family). The
+    vector's IVF cell (deterministic centroids, top-cell assignment by
+    fixed-point inner product — the `similarity_topk_ivf` family). The
     documented scale swap for `knn_join_topk`: per-task work drops
     from O(n²/B²) exact block pairs to O((n/C)²) within-cell pairs,
     with C growing with the corpus; recall is auditable against the
     exact join, and within-cell ranks are bitwise-equal to it.
 
-    Optimization r15 (VERDICT r14 #7): assignments come from the
-    at-rest IVF index (`_ensure_ivf_index` — the same stamped
-    cell-partitioned layout `similarity_topk_ivf` probes, built once
-    per corpus version with the IDENTICAL deterministic argmax), so
+    Assignments come from the at-rest IVF index (`_ensure_ivf_index` —
+    the same stamped cell-partitioned layout `similarity_topk_ivf`
+    probes, built once per corpus version with the identical
+    assignment), so
     the query pays ONE Python boundary (the per-cell kernel) instead
     of two (assign mapInPandas + kernel) and no centroid collect at
     plan build. The oracle still recomputes assignment from raw
     embeddings, so the driver hash gate proves index == inline."""
-    from ..operators.similarity import knn_join_within_cells
-
     idx = _ensure_ivf_index(spark, sf_dir, n_cells=8)
     return knn_join_within_cells(
         load(spark, sf_dir, "embeddings"),
@@ -1248,7 +1223,6 @@ def knn_recall_ivf_audit(spark, sf_dir):
     lists; the audit join keys on (vec_id, nbr_id) — edge-sized, never
     corpus-sized."""
     exact = _knn_topk(spark, sf_dir).select("vec_id", "nbr_id")
-    from ..operators.similarity import knn_join_within_cells
 
     approx = knn_join_within_cells(
         load(spark, sf_dir, "embeddings"), n_cells=8, k=3
@@ -1318,14 +1292,11 @@ def _ensure_probe_index(spark, sf_dir: str, n_cells: int = 8) -> str:
     (vec_id % 20 != 0) for the incremental probe."""
 
     def build(out: str) -> None:
-        import numpy as np
-
         emb = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 != 0)
         # subset ids are not dense from 0: centroids = the slice's own
-        # lowest-id vectors (bounded n_cells-row collect; knn_probe_index
-        # re-reads the same rows from the index at probe time)
-        crows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(n_cells).collect()
-        C = np.stack([np.asarray(r["embedding"], dtype="float64") for r in crows])
+        # lowest-id vectors (knn_probe_index re-reads the same rows from
+        # the index at probe time)
+        C = _lowest_id_vectors(emb, n_cells, "vec_id", "embedding")
         ivf_write_index(emb, out, n_cells=n_cells, centroids=C)
 
     return layouts.ensure(
@@ -1343,8 +1314,6 @@ def knn_incremental_probe(spark, sf_dir):
     exact in-cell rerank, one edge-sized merge window. Output:
     (vec_id, nbr_id, rk, cosine) — each new vector's top-3 ANN among
     the already-indexed corpus, without rescanning it."""
-    from ..operators.similarity import knn_probe_index
-
     idx = _ensure_probe_index(spark, sf_dir, n_cells=8)
     batch = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 20 == 0)
     return knn_probe_index(spark, idx, batch, k=3, n_cells=8, n_probe=2)
@@ -1569,12 +1538,7 @@ def _pq_seed_codebooks(emb):
     codeword j of every subspace is vector j's subvector, j < K.
     Returns an (M, K, d/M) float64 array plus the non-null corpus
     size bound check left to the caller."""
-    import numpy as np
-
-    rows = (
-        emb.where(F.col("vec_id") < _PQ_K).orderBy("vec_id").collect()
-    )
-    S0 = np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
+    S0, _ = _seed_vectors(emb, _PQ_K)
     return np.stack(
         [S0[:, m * _PQ_DS : (m + 1) * _PQ_DS] for m in range(_PQ_M)]
     )
@@ -1596,6 +1560,20 @@ def _pq_apply_update(CB, rows):
     return CBn
 
 
+def _pq_trained_codebooks(emb):
+    """The seed codebooks after ONE exact Lloyd update (R=1), so the
+    oracle can replay the training in SQL: one `pq_train_partials`
+    pass and a K*d-row collect."""
+    CB = _pq_seed_codebooks(emb)
+    rows = (
+        pq_train_partials(emb, CB)
+        .groupBy("m", "code", "i")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+        .collect()
+    )
+    return _pq_apply_update(CB, rows)
+
+
 def pq_train_codebooks(spark, sf_dir):
     """Product-quantization codebook TRAINING (the third iterative
     trainer beside BPE and k-means): M independent k-means problems —
@@ -1614,10 +1592,6 @@ def pq_train_codebooks(spark, sf_dir):
     trajectory (error strictly decreased after the first update;
     every iteration conserved members). Codebook floats themselves
     are engine-private trainer state, like the k-means centroids."""
-    import numpy as np
-
-    from ..operators.similarity import pq_train_partials
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     CB = _pq_seed_codebooks(emb)
     inert = []
@@ -1703,10 +1677,6 @@ def similarity_pq_adc_topk(spark, sf_dir):
     numbers (`pq_adc_distances`). Map-only scan + TakeOrdered: no
     shuffle of corpus data at any scale, and the serving arithmetic
     touches M*K lookup cells per row instead of d floats."""
-    import numpy as np
-
-    from ..operators.similarity import pq_adc_distances, pq_train_partials
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
     empty = emb.select(
@@ -1714,17 +1684,9 @@ def similarity_pq_adc_topk(spark, sf_dir):
     ).where(F.lit(False))
     if qrow is None or qrow["embedding"] is None:
         return empty
-    CB = _pq_seed_codebooks(emb)
-    rows = (
-        pq_train_partials(emb, CB)
-        .groupBy("m", "code", "i")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    CB1 = _pq_apply_update(CB, rows)
     q = np.asarray(qrow["embedding"], dtype="float64")
     return (
-        pq_adc_distances(emb, CB1, q)
+        pq_adc_distances(emb, _pq_trained_codebooks(emb), q)
         .where(F.col("vec_id") != 0)
         .orderBy("adc_dist", "vec_id")
         .limit(10)
@@ -1815,38 +1777,16 @@ def similarity_ivf_pq_topk(spark, sf_dir):
     trade FAISS calls IVFADC. Plan: two bounded driver collects
     (centroids + K*d codebook partials), then ONE partition-pruned
     map-only scan and TakeOrdered — no corpus shuffle at any scale."""
-    import numpy as np
-
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import (
-        _ivf_centroids_and_query,
-        pq_adc_distances,
-        pq_train_partials,
-    )
-
-    n_cells, n_probe = 8, 2
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=n_cells)
-    C, qv = _ivf_centroids_and_query(emb, 0, n_cells, "vec_id", "embedding")
-    empty = emb.select(
-        "vec_id", F.lit(0).cast("long").alias("adc_dist")
-    ).where(F.lit(False))
+    idx_path = _ensure_ivf_index(spark, sf_dir, n_cells=8)
+    qv, probe = _probe_cells(emb)
     if qv is None:
-        return empty
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:n_probe]]
-
-    CB = _pq_seed_codebooks(emb)
-    rows = (
-        pq_train_partials(emb, CB)
-        .groupBy("m", "code", "i")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .collect()
-    )
-    CB1 = _pq_apply_update(CB, rows)
+        return emb.select(
+            "vec_id", F.lit(0).cast("long").alias("adc_dist")
+        ).where(F.lit(False))
     probed = spark.read.parquet(idx_path).where(F.col("cell").isin(probe))
     return (
-        pq_adc_distances(probed, CB1, qv)
+        pq_adc_distances(probed, _pq_trained_codebooks(emb), qv)
         .where(F.col("vec_id") != 0)
         .orderBy("adc_dist", "vec_id")
         .limit(10)
@@ -1957,10 +1897,6 @@ def kmeans_seed_farthest(spark, sf_dir):
     SEEDING in SQL (unrolled rounds) and every output row is
     hash-checked: (round, seed_id, d2_fp = the seed's min distance to
     its predecessors)."""
-    import numpy as np
-
-    from ..operators.similarity import farthest_point_partials
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q0 = emb.where(F.col("vec_id") == 0).select("embedding").first()
     empty = spark.createDataFrame([], "round int, seed_id long, d2_fp long")
@@ -2049,9 +1985,6 @@ def similarity_pq_recall_audit(spark, sf_dir):
     exact d2 to the broadcast query, TakeOrdered), the PQ side is the
     similarity_pq_adc_topk pipeline; the intersection joins two 10-row
     sets."""
-    import numpy as np
-    import pandas as pd
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
     empty = spark.createDataFrame([], "k int, n_hits long, recall double")
@@ -2060,18 +1993,9 @@ def similarity_pq_recall_audit(spark, sf_dir):
     q = np.asarray(qrow["embedding"], dtype="float64")
 
     def exact(batches):
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["embedding"])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            d2 = (
-                np.floor((V - q[None, :]) ** 2 * float(S))
-                .astype("int64")
-                .sum(axis=1)
-            )
+        for pdf, V in _vector_batches(batches, "embedding"):
             yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "d2": d2}
+                {"vec_id": pdf["vec_id"].to_numpy(), "d2": _fp_sqdist(V, q[None, :])}
             )
 
     exact_top = (
@@ -2207,21 +2131,11 @@ def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
     appended batches no longer equals the pure-corpus encode this
     query's shared oracle computes, so the applied batch ids are part
     of the spec: any append makes the next call rebuild."""
-    import numpy as np
-
-    from ..operators.similarity import _ivf_centroids_and_query, pq_train_partials
 
     def build(out: str) -> None:
         emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        CB = _pq_seed_codebooks(emb)
-        rows = (
-            pq_train_partials(emb, CB)
-            .groupBy("m", "code", "i")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        CB1 = _pq_apply_update(CB, rows)
-        C, _ = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
+        CB1 = _pq_trained_codebooks(emb)
+        C, _ = _ivf_centroids_and_queries(emb, (), 8, "vec_id", "embedding")
         _ivfpq_encode(emb, CB1, C).write.mode("overwrite").partitionBy("cell").parquet(out)
         with open(os.path.join(out, "_CODEBOOKS.json"), "w") as fh:
             json.dump(CB1.tolist(), fh)
@@ -2235,51 +2149,20 @@ def _ensure_ivfpq_index(spark, sf_dir: str) -> str:
 
 
 def _ivfpq_encode(emb, CB1, C):
-    """Shared IVF-PQ encoding kernel: cell = argmax fixed-point dot
-    score (ties to the lower cell id), codes = per-subspace exact-int
-    argmin — the same arithmetic at build time and append time, so an
+    """Shared IVF-PQ encoding kernel: each vector's top IVF cell and its
+    PQ codes — the same arithmetic at build time and append time, so an
     appended vector gets byte-identical rows to a full rebuild under
     the same frozen codebooks/centroids."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.similarity import SCALE as _SC
-
     CB1 = np.asarray(CB1, dtype="float64")
     C = np.asarray(C, dtype="float64")
 
     def encode(batches):
-        m_sub, k, ds = CB1.shape
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["embedding"])
-            if not len(pdf):
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            cells = (
-                np.floor(V[:, None, :] * C[None, :, :] * float(_SC))
-                .astype("int64")
-                .sum(axis=2)
-            )
-            # argmax score, ties to the lower cell id (lexsort idiom)
-            order_cells = np.lexsort(
-                (np.tile(np.arange(len(C)), (len(V), 1)), -cells), axis=1
-            )[:, 0]
-            codes = np.zeros((len(V), m_sub), dtype="int32")
-            for m in range(m_sub):
-                Wm = V[:, m * ds : (m + 1) * ds]
-                D = (
-                    np.floor(
-                        (Wm[:, None, :] - CB1[m][None, :, :]) ** 2 * float(_SC)
-                    )
-                    .astype("int64")
-                    .sum(axis=2)
-                )
-                codes[:, m] = D.argmin(axis=1)
+        for pdf, V in _vector_batches(batches, "embedding"):
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": order_cells.astype("int32"),
-                    "codes": list(codes),
+                    "cell": _rank_cells(V, C, 1)[:, 0].astype("int32"),
+                    "codes": list(_pq_encode(V, CB1).astype("int32")),
                 }
             )
 
@@ -2324,8 +2207,6 @@ def ivfpq_append_batch(spark, emb_batch, idx_path: str, batch_id: str) -> int:
     `similarity_ivf_pq_topk_indexed` never serves an appended index
     against its full-corpus oracle."""
     import shutil
-
-    import numpy as np
 
     manifest = os.path.join(idx_path, "_BATCHES.json")
     entries = []
@@ -2387,37 +2268,20 @@ def similarity_ivf_pq_topk_indexed(spark, sf_dir):
     re-encoding, no Python stage, no shuffle. Identical result set to
     `similarity_ivf_pq_topk` (shared oracle): the at-rest index is an
     equivalence-preserving layout change, like the bucketed twins."""
-    import numpy as np
-
-    from ..operators.similarity import SCALE as _SC
-    from ..operators.similarity import _ivf_centroids_and_query
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     idx_path = _ensure_ivfpq_index(spark, sf_dir)
-    C, qv = _ivf_centroids_and_query(emb, 0, 8, "vec_id", "embedding")
-    empty = emb.select(
-        "vec_id", F.lit(0).cast("long").alias("adc_dist")
-    ).where(F.lit(False))
+    qv, probe = _probe_cells(emb)
     if qv is None:
-        return empty
+        return emb.select(
+            "vec_id", F.lit(0).cast("long").alias("adc_dist")
+        ).where(F.lit(False))
     with open(os.path.join(idx_path, "_CODEBOOKS.json")) as fh:
-        CB1 = np.asarray(json.load(fh), dtype="float64")
-    m_sub, k, ds = CB1.shape
-    qs = np.floor(qv[None, :] * C * _SC).astype("int64").sum(axis=1)
-    probe = [int(c) for c in np.lexsort((np.arange(len(qs)), -qs))[:2]]
-    lut = np.zeros((m_sub, k), dtype="int64")
-    for m in range(m_sub):
-        qm = qv[m * ds : (m + 1) * ds]
-        lut[m] = (
-            np.floor((qm[None, :] - CB1[m]) ** 2 * float(_SC))
-            .astype("int64")
-            .sum(axis=1)
-        )
+        lut = _pq_lut(qv, np.asarray(json.load(fh), dtype="float64"))
     lut_sql = (
         "array("
         + ", ".join(
-            "array(" + ", ".join(f"{int(v)}L" for v in lut[m]) + ")"
-            for m in range(m_sub)
+            "array(" + ", ".join(f"{int(v)}L" for v in row) + ")"
+            for row in lut
         )
         + ")"
     )
@@ -2468,8 +2332,6 @@ def _ensure_clustered_fixture(sf_dir: str) -> int:
     engines read the same parquet bytes, so the fixed-point scoring
     stays bitwise cross-engine. Returns the corpus_key tag (count +
     sum(vec_id) over the sf dir's embeddings — SQL-replayable)."""
-    import numpy as np
-    import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2532,9 +2394,7 @@ def ann_recall_clustered(spark, sf_dir):
     on the skinny (vec_id, nbr_id) edge lists, never the vectors. The
     oracle replays exact kNN, cell assignment AND the recall fold in
     SQL over the same fixture parquet."""
-    from pyspark.sql import Window
 
-    from ..operators.similarity import knn_join_partials, knn_join_within_cells
 
     key = _ensure_clustered_fixture(sf_dir)
     from ..fixtures_mm import FIXTURE_DIR
@@ -2686,9 +2546,7 @@ def knn_join_topk_ivf_mp(spark, sf_dir):
     top-2 cells, so the shuffle grows only 2x while candidates roughly
     double. One per-id window merges the per-cell candidate lists
     (each bitwise-equal to the exact join restricted to the cell)."""
-    from pyspark.sql import Window
 
-    from ..operators.similarity import knn_join_multiprobe
 
     cand = knn_join_multiprobe(
         load(spark, sf_dir, "embeddings"), n_cells=8, k=3, n_probe=2
@@ -2767,13 +2625,10 @@ def knn_recall_multiprobe_audit(spark, sf_dir):
     stack's two operating knobs — probe count and corpus structure —
     are both demonstrated with oracle-checked numbers. The exact edge
     list is computed once and persisted; audit joins are edge-sized."""
-    from ..operators.similarity import knn_join_multiprobe
-
     exact = _knn_topk(spark, sf_dir).select("vec_id", "nbr_id").persist()
     emb = load(spark, sf_dir, "embeddings")
     outs = []
     for p in (1, 2, 4):
-        from pyspark.sql import Window
 
         cand = knn_join_multiprobe(emb, n_cells=8, k=3, n_probe=p)
         w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))

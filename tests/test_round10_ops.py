@@ -228,54 +228,6 @@ def test_zipf_no_global_window_over_vocab(spark, sf_dir):
     assert "TakeOrdered" in plan, plan
 
 
-def test_multiprobe_recall_monotonic(spark, sf_dir):
-    """More probes can only add candidates, so recall@3 must be
-    monotonically non-decreasing in n_probe, and the n_probe=1 result
-    must equal the single-probe join's recall."""
-    from duckdb_pipeline_spark.queries.similarity import (
-        knn_recall_multiprobe_audit,
-    )
-
-    rows = {
-        r["n_probe"]: r for r in knn_recall_multiprobe_audit(spark, sf_dir).collect()
-    }
-    assert rows[1]["recall"] <= rows[2]["recall"] <= rows[4]["recall"]
-    assert rows[4]["recall"] > rows[1]["recall"]  # the knob actually moves
-    # every variant retrieves a full top-3 per vector on this corpus
-    assert rows[1]["n_retrieved"] == rows[1]["n_true"]
-
-
-def test_multiprobe_p1_equals_single_probe_join(spark, sf_dir):
-    """n_probe=1 must be bitwise-identical to knn_join_within_cells
-    after the same global merge (the multiprobe kernel generalizes,
-    never changes, the single-probe path)."""
-    from pyspark.sql import Window
-
-    from duckdb_pipeline_spark.operators.similarity import (
-        knn_join_multiprobe,
-        knn_join_within_cells,
-    )
-    from duckdb_pipeline_spark.queries.common import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    a = {
-        tuple(r)
-        for r in knn_join_multiprobe(emb, n_cells=8, k=3, n_probe=1)
-        .withColumn("rk", F.row_number().over(w))
-        .where("rk <= 3")
-        .select("vec_id", "nbr_id", "rk", "cosine")
-        .collect()
-    }
-    b = {
-        tuple(r)
-        for r in knn_join_within_cells(emb, n_cells=8, k=3)
-        .select("vec_id", "nbr_id", "rk", "cosine")
-        .collect()
-    }
-    assert a == b
-
-
 def test_read_version_diff_randomized_roundtrip(spark, tmp_path):
     """Property check: for random keyed edits (insert/delete/update/
     unchanged, incl. NULL values in a value column), the CDC diff must

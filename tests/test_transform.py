@@ -360,6 +360,30 @@ def test_bucketed_silver_one_file_per_bucket_per_batch(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
 
+def test_bucketed_serialise_calls_the_sinks_module_writer(spark, tmp_path, monkeypatch):
+    """The bucketed silver append goes through `sinks.write_bucketed_table`
+    looked up on the module, so a wrapper installed there (the
+    benchmark's `sinks.bucketed_append_s` span) sees the call."""
+    from duckdb_pipeline_spark import sinks
+
+    calls = []
+    real = sinks.write_bucketed_table
+
+    def recording(*args, **kwargs):
+        calls.append(kwargs.get("batch_id"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_bucketed_table", recording)
+    cfg = _land_hours(tmp_path / "lake", {12: RAW_ROWS})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    try:
+        tname = t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        assert calls == ["20230101_12"]
+        assert spark.table(tname).count() == 2
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
 def test_bucketed_silver_append_runs_one_task_per_slot(spark, tmp_path):
     """The hourly append shuffles into defaultParallelism (4) tasks,
     not into the table's 32 buckets."""
