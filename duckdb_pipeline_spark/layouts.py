@@ -15,13 +15,14 @@ itself with ``{label}`` (``bucketed/{label}/orders``,
 
 Stamp contract, checked on every call: the marker (``_SRC.json``,
 written last inside the layout directory) records the spec, the
-(size, mtime_ns, ctime_ns) of every source data file, and a sha256 over
-the files' names and bytes.
+engine's code fingerprint (a sha256 over the package's ``.py`` files,
+taken once per process), the (size, mtime_ns, ctime_ns) of every
+source data file, and a sha256 over the files' names and bytes.
 
-- spec and file signatures equal: fresh, no hashing (the warm path is
-  one ``stat`` per source file and one marker read);
-- spec equal, signatures moved: hash the sources; an equal hash only
-  restamps (a touched, byte-identical file);
+- spec, code and file signatures equal: fresh, no hashing of sources
+  (the warm path is one ``stat`` per source file and one marker read);
+- spec and code equal, signatures moved: hash the sources; an equal
+  hash only restamps (a touched, byte-identical file);
 - anything else: the session's caches of the sources are invalidated
   (``queries.common.invalidate_source``) and the layout is rebuilt.
 
@@ -37,6 +38,7 @@ and its marker serving.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -45,7 +47,7 @@ from . import sinks
 
 MARKER = "_SRC.json"
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
 def label(sf_dir: str) -> str:
@@ -57,7 +59,7 @@ def location(kind: str, sf_dir: str) -> str:
     """The layout directory of ``kind`` for the corpus at ``sf_dir``."""
     lb = label(sf_dir)
     rel = kind.format(label=lb) if "{label}" in kind else os.path.join(kind, lb)
-    return os.path.join(_SCRATCH, rel)
+    return os.path.join(SCRATCH, rel)
 
 
 def _data_files(sf_dir: str, sources) -> list[str]:
@@ -94,6 +96,15 @@ def _content_hash(sf_dir: str, files: list[str]) -> str:
     return h.hexdigest()
 
 
+@functools.cache
+def code_fingerprint() -> str:
+    """sha256 over the names and bytes of the package's ``.py`` files:
+    an edit to any builder makes every layout stale."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(pkg) for f in fs if f.endswith(".py"))
+    return _content_hash(pkg, files)
+
+
 def _write_marker(path: str, stamp: dict) -> None:
     sinks.replace_file(os.path.join(path, MARKER), json.dumps(stamp).encode())
 
@@ -114,7 +125,8 @@ def ensure(spark, kind: str, sf_dir: str, sources, spec: dict, build) -> str:
             old = json.load(fh)
     except (OSError, ValueError):
         old = None
-    same_spec = old is not None and old.get("spec") == spec
+    code = code_fingerprint()
+    same_spec = old is not None and old.get("spec") == spec and old.get("code") == code
     if same_spec and old.get("files") == sig:
         return path
     digest = _content_hash(sf_dir, files)
@@ -129,7 +141,7 @@ def ensure(spark, kind: str, sf_dir: str, sources, spec: dict, build) -> str:
 
     def publish(staging: str) -> None:
         build(staging)
-        _write_marker(staging, {"spec": spec, "files": sig, "sha256": digest})
+        _write_marker(staging, {"spec": spec, "code": code, "files": sig, "sha256": digest})
 
     # no leading "_" or ".": bucketed builds point a catalog table at the
     # staging dir, and Spark's file index ignores such names as hidden

@@ -15,6 +15,19 @@ Bucketed layouts have one writer, ``_bucketed_writer``: the silver
 append (`write_bucketed_table`), the at-rest layout builds
 (`write_bucketed_dir`, registered by `register_bucketed_table`) and
 their compaction (`compact_bucketed`) all write through it.
+
+What a file costs on a local lake: Hadoop's checksummed local
+FileSystem writes each Parquet part with a ``.crc`` beside it, and the
+commit protocol adds its ``_temporary`` task and attempt directories,
+a ``_SUCCESS`` marker and that marker's ``.crc``. Hadoop sets a
+permission on every file and directory it creates. The stock raw local
+FileSystem forks a ``chmod`` process for each when the native libhadoop
+is missing, as in a pip-installed PySpark: about 75 for one 32-bucket
+hourly append, and 10 for one single-file export. In a local-master session
+``session.build_spark`` serves ``file:`` through a FileSystem that sets
+the permission in-process, so a file costs its bytes, its checksum and
+a few system calls. The file count per write stays what it is (one
+file per bucket per write, one per single-file export).
 """
 
 from __future__ import annotations

@@ -204,3 +204,35 @@ def test_failed_build_leaves_previous_layout_serving(layout):
     # and it still serves warm
     layout.ensure()
     assert layout.data_files() == before
+
+
+def test_code_change_rebuilds(spark, tmp_path, monkeypatch):
+    """A layout built by other engine code, or stamped before the
+    marker carried the code fingerprint, is rebuilt once."""
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(pa.table({"x": [1]}), corpus / "t.parquet")
+    monkeypatch.setattr(layouts, "SCRATCH", str(tmp_path / "scratch"))
+    builds = []
+
+    def build(staging: str) -> None:
+        builds.append(staging)
+        with open(os.path.join(staging, "data"), "w") as fh:
+            fh.write(str(len(builds)))
+
+    def ensure() -> str:
+        return layouts.ensure(spark, "codefp", str(corpus), ["t"], {"v": 1}, build)
+
+    path = ensure()
+    assert ensure() == path and len(builds) == 1
+    monkeypatch.setattr(layouts, "code_fingerprint", lambda: "edited")
+    ensure()
+    assert len(builds) == 2 and ensure() == path and len(builds) == 2
+    with open(os.path.join(path, "data")) as fh:
+        assert fh.read() == "2"
+    with open(os.path.join(path, layouts.MARKER)) as fh:
+        stamp = json.load(fh)
+    assert stamp.pop("code") == "edited"
+    sinks.replace_file(os.path.join(path, layouts.MARKER), json.dumps(stamp).encode())
+    ensure()
+    assert len(builds) == 3 and ensure() == path and len(builds) == 3
