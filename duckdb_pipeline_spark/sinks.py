@@ -22,12 +22,15 @@ commit protocol adds its ``_temporary`` task and attempt directories,
 a ``_SUCCESS`` marker and that marker's ``.crc``. Hadoop sets a
 permission on every file and directory it creates. The stock raw local
 FileSystem forks a ``chmod`` process for each when the native libhadoop
-is missing, as in a pip-installed PySpark: about 75 for one 32-bucket
-hourly append, and 10 for one single-file export. In a local-master session
-``session.build_spark`` serves ``file:`` through a FileSystem that sets
-the permission in-process, so a file costs its bytes, its checksum and
-a few system calls. The file count per write stays what it is (one
-file per bucket per write, one per single-file export).
+is missing, as in a pip-installed PySpark: about 75 for one append to a
+32-bucket table, and 10 for one single-file export. In a local-master
+session ``session.build_spark`` serves ``file:`` through a FileSystem
+that sets the permission in-process, so a file costs its bytes, its
+checksum and a few system calls. What is left is the file count: one
+file per bucket per write, one per single-file export. So a bucketed
+table gets only the buckets its source fills (`sized_buckets`): the
+lake's hourly silver append, under 1 MiB of bronze an hour, writes one
+bucket file, not 32.
 """
 
 from __future__ import annotations
@@ -39,9 +42,11 @@ import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def replace_file(target: str, data: bytes) -> None:
@@ -458,17 +463,33 @@ def write_bucketed_dir(
 
 
 def register_bucketed_table(
-    spark, table_name: str, path: str, schema, n_buckets: int, keys: list[str], sort_cols: list[str]
+    spark, table_name: str, path: str, schema, n_buckets: int, keys: list[str],
+    sort_cols: list[str], partition_cols=None,
 ) -> None:
-    """(Re)register catalog table ``table_name`` over the unpartitioned
-    bucketed files of ``schema`` at ``path`` (as `write_bucketed_dir`
-    writes them): ``CREATE TABLE ... CLUSTERED BY ... LOCATION``."""
+    """(Re)register catalog table ``table_name`` over the bucketed files
+    of ``schema`` at ``path`` (as `write_bucketed_dir` or
+    `write_bucketed_table` write them): ``CREATE TABLE ... PARTITIONED
+    BY ... CLUSTERED BY ... LOCATION``. A partitioned table then adds
+    the partition directories already at ``path``, found by name:
+    ``RECOVER PARTITIONS`` would log a WARN for each ``_`` sidecar."""
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    parts = f"PARTITIONED BY ({', '.join(partition_cols)}) " if partition_cols else ""
+    sort = f"SORTED BY ({', '.join(sort_cols)}) " if sort_cols else ""
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     spark.sql(
-        f"CREATE TABLE {table_name} ({cols}) USING PARQUET CLUSTERED BY ({', '.join(keys)}) "
-        f"SORTED BY ({', '.join(sort_cols)}) INTO {n_buckets} BUCKETS LOCATION '{path}'"
+        f"CREATE TABLE {table_name} ({cols}) USING PARQUET {parts}"
+        f"CLUSTERED BY ({', '.join(keys)}) {sort}INTO {n_buckets} BUCKETS LOCATION '{path}'"
     )
+    found = _glob.glob(os.path.join(path, *[f"{c}=*" for c in partition_cols])) if parts else []
+    if found:
+        specs = (
+            ", ".join(f"`{c}` = '{unquote(v)}'" for c, v in (kv.split("=", 1) for kv in d.split(os.sep)))
+            for d in (os.path.relpath(f, path) for f in found)
+        )
+        spark.sql(
+            f"ALTER TABLE {table_name} ADD IF NOT EXISTS "
+            + " ".join(f"PARTITION ({s})" for s in specs)
+        )
 
 
 def write_bucketed_table(
@@ -487,8 +508,24 @@ def write_bucketed_table(
     Exchanges — the one big shuffle is paid here, once, at ingest
     time, instead of per query (cf. the reference's silver layer
     owning its layout, /root/reference/data_lake_transformer.py:35-52,
-    where COPY decides the at-rest form). The first write creates the
-    table at ``path``; later writes append to it.
+    where COPY decides the at-rest form).
+
+    CREATE OR APPEND, across sessions: the catalog is in-memory, so
+    each cron process starts without the table. The first write to an
+    empty ``path`` records the spec (``n_buckets``, keys, sort and
+    partition columns, schema) in the sidecar ``<path>/_bucket_spec.json``
+    (`replace_file`), before any data lands, and registers the table
+    over ``path``. A later call in a session whose catalog lacks the
+    table re-registers it from that sidecar (`register_bucketed_table`)
+    and appends. Every write is an append: none deletes data. The
+    recorded spec wins over the arguments, so ``n_buckets`` only sizes
+    a new table; a larger batch later keeps the recorded count. A
+    catalog table with no sidecar (the layouts' tables, registered by
+    their builders) is appended to with the arguments as given, and a
+    ``path`` that holds data but no sidecar raises instead of being
+    written over. The sidecar is read with Python file I/O, so ``path``
+    is a local directory; object-store lakes and concurrent writers to
+    one table are out of scope.
 
     ``partition_cols`` compose with bucketing (the production lake
     layout: partition by day for pruning, bucket by the join/agg key
@@ -515,11 +552,37 @@ def write_bucketed_table(
     marker = os.path.join(path, "_batch_manifest", batch_id) if batch_id else None
     if marker and os.path.exists(marker):
         return table_name
-    writer = _bucketed_writer(df, n_buckets, [bucket_key], sort_cols, partition_cols)
-    if df.sparkSession.catalog.tableExists(table_name):
-        writer.mode("append").saveAsTable(table_name)
-    else:
-        writer.option("path", path).mode("overwrite").saveAsTable(table_name)
+    spark = df.sparkSession
+    spec_file = os.path.join(path, "_bucket_spec.json")
+    spec = None
+    if os.path.exists(spec_file):
+        with open(spec_file) as fh:
+            spec = json.load(fh)
+    in_catalog = spark.catalog.tableExists(table_name)
+    if spec is None and not in_catalog:
+        if os.path.isdir(path) and any(not n.startswith(("_", ".")) for n in os.listdir(path)):
+            raise FileExistsError(
+                f"{path} holds data but no _bucket_spec.json: register its table "
+                "before appending to it"
+            )
+        spec = {
+            "n_buckets": n_buckets, "keys": [bucket_key], "sort_cols": sort_cols or [],
+            "partition_cols": partition_cols or [], "schema": df.schema.jsonValue(),
+        }
+        os.makedirs(path, exist_ok=True)
+        replace_file(spec_file, json.dumps(spec).encode())
+    if spec is not None:
+        n_buckets, sort_cols, partition_cols = (
+            spec["n_buckets"], spec["sort_cols"], spec["partition_cols"]
+        )
+        if not in_catalog:
+            register_bucketed_table(
+                spark, table_name, path, StructType.fromJson(spec["schema"]),
+                n_buckets, spec["keys"], sort_cols, partition_cols,
+            )
+    _bucketed_writer(df, n_buckets, [bucket_key], sort_cols, partition_cols).mode(
+        "append"
+    ).saveAsTable(table_name)
     if marker:
         os.makedirs(os.path.dirname(marker), exist_ok=True)
         with open(marker, "w") as fh:

@@ -20,9 +20,15 @@ Scale notes: each hourly/daily batch is embarrassingly partition-
 parallel (one task per input file). The reference-parity path has one
 shuffle, the gold aggregation's partial→final hash aggregate, keyed on
 (event_type, repo_id, repo_name, repo_url, day) — high-cardinality
-enough not to skew. The bucketed path moves its one shuffle to the
-hourly silver append (hash of repo_id into one task per slot,
-``sinks.bucket_aligned``), so its gold aggregate runs with none.
+enough not to skew. The bucketed path pays its distribution at the
+hourly silver append, so its gold aggregate runs with no shuffle. The
+bucket count is sized once, when the table is created, from the
+bronze bytes of the first hour (``sinks.sized_buckets``, at least 1 MiB
+of bronze per bucket, at most 32) and recorded with the table. At
+cron volume (under 1 MiB of bronze an hour) that is 1 bucket: each
+append is one coalesced task writing one file, with no Exchange. From
+32 MiB an hour the table gets 32 buckets, and each append hashes
+repo_id into one task per slot (``sinks.bucket_aligned``).
 """
 
 from __future__ import annotations
@@ -66,6 +72,9 @@ def clean_projection(raw: DataFrame) -> DataFrame:
     )
 
 
+_GOLD_KEYS = ("event_type", "repo_id", "repo_name", "repo_url", "event_date")
+
+
 def daily_aggregate(silver: DataFrame) -> DataFrame:
     """The gold daily roll-up (data_lake_transformer.py:116-126).
 
@@ -79,9 +88,7 @@ def daily_aggregate(silver: DataFrame) -> DataFrame:
         "repo_url",
         F.to_date(F.col("event_date").cast("timestamp")).alias("event_date"),
     )
-    return keyed.groupBy(
-        "event_type", "repo_id", "repo_name", "repo_url", "event_date"
-    ).agg(F.count(F.lit(1)).alias("event_count"))
+    return keyed.groupBy(*_GOLD_KEYS).agg(F.count(F.lit(1)).alias("event_count"))
 
 
 class DataLakeTransformer:
@@ -121,9 +128,10 @@ class DataLakeTransformer:
 
     # -- batch entry points (ref :35-71) --------------------------------
 
-    def _bronze_hour(self, process_date: datetime) -> str:
+    def _bronze_hour(self, process_date: datetime) -> tuple[str, int]:
         """The bronze directory of one hour, which both serialise paths
-        read. Raises FileNotFoundError unless it holds a visible (not
+        read, and the bytes of its visible files. Raises
+        FileNotFoundError unless it holds a visible (not
         ``_``/``.``-prefixed) file: with the schema given, Spark reads
         such a directory as zero rows, and an hour a failed landing
         left empty must fail as loudly as the reference's unmatched
@@ -134,16 +142,20 @@ class DataLakeTransformer:
         )
         hpath = self.spark._jvm.org.apache.hadoop.fs.Path(source)
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        names = []
+        sizes = []
         if fs.exists(hpath):
-            names = [st.getPath().getName() for st in fs.listStatus(hpath)]
-        if all(n.startswith(("_", ".")) for n in names):
+            sizes = [
+                st.getLen()
+                for st in fs.listStatus(hpath)
+                if not st.getPath().getName().startswith(("_", "."))
+            ]
+        if not sizes:
             raise FileNotFoundError(f"no bronze file for the hour: {source}")
-        return source
+        return source, sum(sizes)
 
     def serialise_raw_data(self, process_date: datetime) -> str:
         """Bronze hour → silver parquet (ref serialise_raw_data :35-52)."""
-        self.register_raw_gharchive(self._bronze_hour(process_date))
+        self.register_raw_gharchive(self._bronze_hour(process_date)[0])
         clean = self.clean_raw_gharchive("gharchive_raw")
         sink = paths.sink_path(
             "clean",
@@ -166,6 +178,9 @@ class DataLakeTransformer:
     # queries/bucketed.py exist only because the driver's testdata is
     # a read-only external corpus this writer never produced.
 
+    # the ceiling of the bucketed silver's bucket count; the count itself
+    # is sized from the first hour's bronze bytes and recorded with the
+    # table by sinks.write_bucketed_table, so later hours keep it
     _SILVER_BUCKETS = 32
 
     def _bucketed_silver_table(self) -> str:
@@ -176,8 +191,11 @@ class DataLakeTransformer:
 
     def serialise_raw_data_bucketed(self, process_date: datetime) -> str:
         """Bronze hour → day-partitioned, repo-bucketed silver table.
-        Appends one file per (day, bucket); returns the table name."""
-        self.register_raw_gharchive(self._bronze_hour(process_date))
+        Appends one file per (day, bucket); returns the table name. The
+        hour's bronze bytes size a new table; an existing one keeps its
+        recorded bucket count."""
+        source, source_bytes = self._bronze_hour(process_date)
+        self.register_raw_gharchive(source)
         # partition key = PROCESSING day (mirrors the reference's
         # directory semantics: aggregate_silver_data reads the
         # process-date directory, whatever event timestamps the hourly
@@ -194,7 +212,7 @@ class DataLakeTransformer:
             self._bucketed_silver_table(),
             path,
             bucket_key="repo_id",
-            n_buckets=self._SILVER_BUCKETS,
+            n_buckets=sinks.sized_buckets(source_bytes, self._SILVER_BUCKETS),
             sort_cols=["repo_id"],
             partition_cols=["process_day"],
             # retry-safe: replaying the same hour is a no-op (the
@@ -207,12 +225,15 @@ class DataLakeTransformer:
         the process-day filter prunes to that day's partition, and the GROUP BY
         (which includes repo_id, the bucket key) reuses the bucket
         distribution — the whole gold aggregation plans with ZERO
-        shuffle Exchanges (pinned in tests/test_transform.py). Returns
-        the lazy gold relation; callers pick the sink."""
+        shuffle Exchanges (pinned in tests/test_transform.py). Each
+        bucket's groups are sorted on the group keys, without an
+        Exchange, so the row order, and a single-file export's bytes, do
+        not follow the listing order of the bucket files. Returns the
+        lazy gold relation; callers pick the sink."""
         silver = self.spark.table(self._bucketed_silver_table()).where(
             F.col("process_day") == F.lit(process_date.date())
         )
-        return daily_aggregate(silver.drop("process_day"))
+        return daily_aggregate(silver.drop("process_day")).sortWithinPartitions(*_GOLD_KEYS)
 
     def aggregate_silver_data(self, process_date: datetime) -> str:
         """Silver day → gold parquet (ref aggregate_silver_data :54-71)."""

@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 from duckdb_pipeline_spark import session
 from duckdb_pipeline_spark.session import LOCAL_FS_CLASS, local_fs_conf
 from duckdb_pipeline_spark.transform import DataLakeTransformer
-from tests.test_transform import _land_hours
+from tests.test_transform import _land_hours, append_hour
 
 JAR = "/x/nofork-fs.jar"
 CP = "spark.driver.extraClassPath"
@@ -98,10 +98,10 @@ def test_lake_writes_reap_no_child_process(spark, tmp_path):
     t = DataLakeTransformer("gharchive/events", spark, cfg)
     try:
         t.serialise_raw_data(datetime(2023, 1, 1, 11))  # warm the write paths
-        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 11))
+        append_hour(t, 11, n_buckets=32)
         before = _reaped_ticks(spark)
         t.serialise_raw_data(datetime(2023, 1, 1, 12))
-        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        append_hour(t, 12, n_buckets=32)
         assert _reaped_ticks(spark) == before
         assert spark.table(t._bucketed_silver_table()).count() == 128
     finally:

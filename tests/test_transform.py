@@ -150,6 +150,7 @@ def test_end_to_end_bucketed_silver_gold_exchange_free(spark, tmp_path):
         plan = plan_text(gold, "simple")
         assert _shuffle_exchanges(plan) == 0, plan
         assert "Bucketed: true" in plan
+        assert _recorded_buckets(t) == 1  # a few hundred bytes of bronze
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
@@ -159,7 +160,7 @@ def _land_hours(lake, hours) -> EngineConfig:
     under ``lake``; returns the local-dir lake config. A row is an event
     dict, or a str landed verbatim as one line."""
     for hour, rows in hours.items():
-        bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / str(hour)
+        bronze_dir = lake / "bronze" / "gharchive/events" / "2023-01-01" / f"{hour:02d}"
         os.makedirs(bronze_dir)
         payload = b"\n".join(
             (r if isinstance(r, str) else json.dumps(r)).encode() for r in rows
@@ -214,6 +215,39 @@ def _many_repos(first_id: int, n: int) -> list[dict]:
         {**base, "id": first_id + i, "repo": {**base["repo"], "id": first_id + i}}
         for i in range(n)
     ]
+
+
+def append_hour(t, hour: int, n_buckets: int) -> str:
+    """Hour ``hour`` of 2023-01-01 appended to ``t``'s bucketed silver
+    table and path by `sinks.write_bucketed_table` at ``n_buckets``
+    buckets, as `serialise_raw_data_bucketed` writes it but not sized
+    to the hour: for tests of a many-bucket table over a small hour."""
+    from pyspark.sql import functions as F
+
+    from duckdb_pipeline_spark import sinks
+    from duckdb_pipeline_spark.sources import GHARCHIVE_EVENT_SCHEMA, read_json_auto
+
+    dt = datetime(2023, 1, 1, hour)
+    raw = read_json_auto(t.spark, t._bronze_hour(dt)[0], schema=GHARCHIVE_EVENT_SCHEMA)
+    return sinks.write_bucketed_table(
+        clean_projection(raw).withColumn("process_day", F.lit(dt.date())),
+        t._bucketed_silver_table(),
+        _silver_table_dir(t),
+        bucket_key="repo_id",
+        n_buckets=n_buckets,
+        sort_cols=["repo_id"],
+        partition_cols=["process_day"],
+        batch_id=dt.strftime("%Y%m%d_%H"),
+    )
+
+
+def _silver_table_dir(t) -> str:
+    return os.path.join(t.config.zone_url("silver"), t.dataset_base_path, "clean_bucketed")
+
+
+def _recorded_buckets(t) -> int:
+    with open(os.path.join(_silver_table_dir(t), "_bucket_spec.json")) as fh:
+        return json.load(fh)["n_buckets"]
 
 
 def test_bucket_tasks_is_largest_divisor_within_slots():
@@ -342,7 +376,7 @@ def test_bucketed_silver_one_file_per_bucket_per_batch(spark, tmp_path):
     t = DataLakeTransformer("gharchive/events", spark, cfg)
     try:
         for hour in (12, 13):
-            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+            append_hour(t, hour, n_buckets=32)
         day = tmp_path / "lake" / "silver" / "gharchive/events" / "clean_bucketed" / "process_day=2023-01-01"
         files = sorted(f for f in os.listdir(day) if f.startswith("part-"))
         # part-<task>-<write job uuid>_<bucket id>.c<n>...
@@ -384,8 +418,31 @@ def test_bucketed_serialise_calls_the_sinks_module_writer(spark, tmp_path, monke
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
 
+def _append_plans(spark, append) -> list[str]:
+    """The physical plans of the SQL executions ``append()`` runs."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = store.executionsList()  # the last spark.sql.ui.retainedExecutions
+        return [execs.apply(i) for i in range(execs.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    sc.setJobDescription("bucketed_append_plan")
+    try:
+        append()
+    finally:
+        sc.setJobDescription(None)
+    return [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > seen and e.description() == "bucketed_append_plan"
+    ]
+
+
 def test_bucketed_silver_append_runs_one_task_per_slot(spark, tmp_path):
-    """The hourly append shuffles into defaultParallelism (4) tasks,
+    """A 32-bucket append shuffles into defaultParallelism (4) tasks,
     not into the table's 32 buckets."""
     import re
 
@@ -394,23 +451,30 @@ def test_bucketed_silver_append_runs_one_task_per_slot(spark, tmp_path):
     sc = spark.sparkContext
     assert sc.defaultParallelism == 4
     try:
-        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
-        sc.setJobDescription("bucketed_append_plan")
-        try:
-            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 13))
-        finally:
-            sc.setJobDescription(None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        store = spark._jsparkSession.sharedState().statusStore()
-        execs = store.executionsList()
-        plans = [
-            execs.apply(i).physicalPlanDescription()
-            for i in range(execs.size())
-            if execs.apply(i).description() == "bucketed_append_plan"
-        ]
+        append_hour(t, 12, n_buckets=32)
+        plans = _append_plans(spark, lambda: append_hour(t, 13, n_buckets=32))
         assert plans
         assert any(re.search(r"hashpartitioning\(repo_id#\d+L?, 4\)", p) for p in plans), plans
         assert not any(re.search(r"hashpartitioning\(repo_id#\d+L?, 32\)", p) for p in plans)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
+def test_lake_sized_hour_appends_one_file_without_exchange(spark, tmp_path):
+    """An hour of a few KB of bronze sizes the silver table to one
+    bucket: each append is one coalesced task with no Exchange, and
+    writes one file into the day partition."""
+    cfg = _land_hours(tmp_path / "lake", {12: RAW_ROWS, 13: _many_repos(1000, 50)})
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    try:
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        plans = _append_plans(
+            spark, lambda: t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 13))
+        )
+        assert plans and not any("Exchange" in p for p in plans), plans
+        assert _recorded_buckets(t) == 1
+        day = os.path.join(_silver_table_dir(t), "process_day=2023-01-01")
+        assert _bucket_files(day) == ["00000", "00000"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
 
@@ -428,13 +492,14 @@ def _bucket_files(part_dir) -> list[str]:
 
 
 def test_compact_bucketed_silver_keeps_partitions(spark, tmp_path):
-    """Two bucketed-silver hours, compaction, a third hour: the table
+    """Two 32-bucket silver hours, compaction, a third hour: the table
     stays partitioned by process_day (so the third append matches its
-    spec), each bucket holds one file per compacted partition, and the
-    bucketed gold equals the single-file path's gold."""
+    spec), each bucket holds one file per compacted partition, the
+    third hour keeps the recorded 32 buckets, and the bucketed gold
+    equals the single-file path's gold."""
     from collections import Counter
 
-    from duckdb_pipeline_spark.sinks import compact_bucketed
+    from duckdb_pipeline_spark.sinks import bucket_spec, compact_bucketed
 
     cfg = _land_hours(
         tmp_path / "lake",
@@ -445,7 +510,7 @@ def test_compact_bucketed_silver_keeps_partitions(spark, tmp_path):
     day = tmp_path / "lake" / "silver" / "gharchive/events" / "clean_bucketed" / "process_day=2023-01-01"
     try:
         for hour in (12, 13):
-            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+            append_hour(t, hour, n_buckets=32)
         assert max(Counter(_bucket_files(day)).values()) == 2
 
         n_files = compact_bucketed(spark, tname)
@@ -456,6 +521,7 @@ def test_compact_bucketed_silver_keeps_partitions(spark, tmp_path):
         assert spark.table(tname).count() == 400
         t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 14))
         assert spark.table(tname).count() == 452
+        assert _recorded_buckets(t) == bucket_spec(spark, tname)["n_buckets"] == 32
 
         for hour in (12, 13, 14):
             t.serialise_raw_data(datetime(2023, 1, 1, hour))
@@ -507,6 +573,138 @@ def test_failed_compaction_leaves_table_serving(spark, tmp_path, monkeypatch):
         assert spark.table(tname).count() == len(rows)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
+
+
+def test_bucketed_append_after_a_catalog_drop_keeps_earlier_hours(spark, tmp_path):
+    """Each cron run is a new process with an empty catalog. An append
+    to a silver table its catalog does not hold re-registers the table
+    from the recorded spec and appends: the earlier hour's rows and
+    batch marker stay, the catalog's bucket count is the recorded one,
+    and a replay of the earlier hour is still a no-op."""
+    from duckdb_pipeline_spark.sinks import bucket_spec
+
+    cfg = _land_hours(
+        tmp_path / "lake", {3: _many_repos(0, 220), 9: _many_repos(1000, 130), 15: RAW_ROWS}
+    )
+    t = DataLakeTransformer("gharchive/events", spark, cfg)
+    tname = t._bucketed_silver_table()
+    try:
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 3))
+        spark.sql(f"DROP TABLE {tname}")  # the catalog only: the files stay
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 9))
+
+        ids = sorted(r.event_id for r in spark.table(tname).collect())
+        assert ids == list(range(220)) + list(range(1000, 1130))
+        assert bucket_spec(spark, tname)["n_buckets"] == _recorded_buckets(t)
+        assert sorted(os.listdir(os.path.join(_silver_table_dir(t), "_batch_manifest"))) == [
+            "20230101_03", "20230101_09",
+        ]
+        t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 3))
+        assert spark.table(tname).count() == 350
+
+        # a table directory with no recorded spec is not written over
+        os.remove(os.path.join(_silver_table_dir(t), "_bucket_spec.json"))
+        spark.sql(f"DROP TABLE {tname}")
+        with pytest.raises(FileExistsError, match="no _bucket_spec.json"):
+            t.serialise_raw_data_bucketed(datetime(2023, 1, 1, 15))
+        assert spark.read.parquet(_silver_table_dir(t)).count() == 350
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+
+
+def test_bucketed_silver_is_sized_by_its_first_hour(spark, tmp_path, monkeypatch):
+    """The first hour's bronze bytes size the table (1 MiB of bronze a
+    bucket, at most 32); later hours keep the recorded count, a larger
+    hour and a new catalog alike, and the bucketed gold plans with no
+    shuffle Exchange at 32 buckets as at 1."""
+    from duckdb_pipeline_spark import sinks
+    from tests.test_plans import _shuffle_exchanges, plan_text
+
+    assert sinks.sized_buckets(40 << 20, 32) == 32
+    hours = {12: _many_repos(0, 300), 13: _many_repos(1000, 300), 14: RAW_ROWS}
+    cfg = _land_hours(tmp_path / "lake", hours)
+    hour_bytes = os.path.getsize(
+        tmp_path / "lake" / "bronze" / "gharchive/events" / "2023-01-01" / "12" / "2023-1-1-12.json.gz"
+    )
+    small = DataLakeTransformer("gharchive/small", spark, cfg)
+    large = DataLakeTransformer("gharchive/large", spark, cfg)
+    for t in (small, large):
+        os.symlink(tmp_path / "lake" / "bronze" / "gharchive/events",
+                   tmp_path / "lake" / "bronze" / t.dataset_base_path)
+    try:
+        # a lake-sized hour: one bucket, kept for a later hour read as 40 MiB
+        small.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        with monkeypatch.context() as m:
+            m.setattr(sinks, "MIN_BUCKET_BYTES", hour_bytes // 40)
+            small.serialise_raw_data_bucketed(datetime(2023, 1, 1, 13))
+        assert _recorded_buckets(small) == 1
+        assert sinks.bucket_spec(spark, small._bucketed_silver_table())["n_buckets"] == 1
+
+        # an hour read as 40 MiB: 32 buckets, kept across a catalog drop
+        # and for the small hour appended after it
+        with monkeypatch.context() as m:
+            m.setattr(sinks, "MIN_BUCKET_BYTES", hour_bytes // 40)
+            large.serialise_raw_data_bucketed(datetime(2023, 1, 1, 12))
+        assert _recorded_buckets(large) == 32
+        spark.sql(f"DROP TABLE {large._bucketed_silver_table()}")
+        large.serialise_raw_data_bucketed(datetime(2023, 1, 1, 14))
+        assert sinks.bucket_spec(spark, large._bucketed_silver_table())["n_buckets"] == 32
+        day = os.path.join(_silver_table_dir(large), "process_day=2023-01-01")
+        assert len(set(_bucket_files(day))) > 16
+
+        for t, rows in ((small, 600), (large, 302)):
+            gold = t.aggregate_silver_data_bucketed(datetime(2023, 1, 1))
+            plan = plan_text(gold, "simple")
+            assert _shuffle_exchanges(plan) == 0, plan
+            assert "Bucketed: true" in plan
+            assert sum(r.event_count for r in gold.collect()) == rows
+    finally:
+        for t in (small, large):
+            spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+
+
+def test_lake_day_is_byte_reproducible(spark, tmp_path):
+    """One 4-hour day run three times into fresh lakes gives the same
+    bytes: both gold files, and every silver file once the write-job
+    uuid in a bucket file's name is masked. The bucketed gold's rows
+    would otherwise come in the listing order of the bucket files."""
+    import re
+
+    from duckdb_pipeline_spark import paths, sinks
+
+    hours = {h: _many_repos(1000 * h, 150 + 40 * h) + RAW_ROWS for h in (9, 10, 11, 12)}
+    day = datetime(2023, 1, 1)
+    uuid = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+    trees = []
+    for run in range(3):
+        lake = tmp_path / f"lake{run}"
+        cfg = _land_hours(lake, hours)
+        t = DataLakeTransformer("gharchive/events", spark, cfg)
+        try:
+            for hour in hours:
+                t.serialise_raw_data(datetime(2023, 1, 1, hour))
+                t.serialise_raw_data_bucketed(datetime(2023, 1, 1, hour))
+            t.aggregate_silver_data(day)
+            sinks.write_single_parquet(
+                t.aggregate_silver_data_bucketed(day),
+                paths.sink_path("agg_bucketed", cfg.zone_url("gold"), t.dataset_base_path, day),
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t._bucketed_silver_table()}")
+        tree = {}  # masked path -> the bytes of the files it names, sorted
+        for zone in ("silver", "gold"):
+            for d, _, files in os.walk(lake / zone):
+                for f in files:
+                    rel = uuid.sub("<uuid>", os.path.relpath(os.path.join(d, f), lake))
+                    with open(os.path.join(d, f), "rb") as fh:
+                        tree.setdefault(rel, []).append(fh.read())
+        trees.append({k: sorted(v) for k, v in tree.items()})
+    assert any(k.endswith("agg_bucketed_20230101.parquet") for k in trees[0])
+    # 4 hourly files, 4 one-bucket appends, 2 golds
+    assert sum(len(v) for k, v in trees[0].items() if k.endswith(".parquet")) == 4 + 4 + 2
+    for tree in trees[1:]:
+        assert tree.keys() == trees[0].keys()
+        assert [k for k in tree if tree[k] != trees[0][k]] == []
 
 
 def test_ingester_local_landing(tmp_path):
